@@ -22,7 +22,7 @@ import graft.query.Series
 object AdjustPipeline {
   def main(args: Array[String]): Unit = {
     val Array(lakeRoot, refdataDir, outRoot) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-adjust")

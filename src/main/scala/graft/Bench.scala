@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -154,7 +154,7 @@ object Bench {
     // checkout must not fail the bench.
     if (only.isEmpty && sfDir.endsWith("sf0.1")) {
       val record = line.replaceFirst("\\{", s"""{"cpus":$cpus,""")
-      val file = if (cpus == "32") "BENCH_FULL.json"
+      val file = if (cpus == 32) "BENCH_FULL.json"
                  else s"BENCH_FULL_c$cpus.json"
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(file),

@@ -18,7 +18,7 @@ object IngestCli {
     val lakeRoot = args(1)
     val timeframe = if (args.length >= 3) args(2) else "day"
     val watchlist = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-ingest")

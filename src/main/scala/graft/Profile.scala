@@ -17,7 +17,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <queryName> [queryName...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus(default = 32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -34,7 +34,7 @@ object QueryCli {
       case Array(k, v) => k -> v
     }.toMap
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-query")

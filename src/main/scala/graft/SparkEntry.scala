@@ -138,6 +138,16 @@ object SparkEntry {
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
     queries.filterNot { case (name, _) => benchRetired(name) }
 
+  /** `SPARK_GRAFT_CPUS` as a positive core count, or `default` when it
+    * is unset. Any other value ("", "*", "0", "4c") throws: a bad value
+    * must not silently pick another core count or another record file.
+    */
+  def cpus(env: Map[String, String] = sys.env, default: Int = 4): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(default) { s =>
+      s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
