@@ -56,10 +56,8 @@ object AdjustPipeline {
       .show(50, truncate = false)
 
     // QA invariants from the reference notebook: split piecewise jumps +
-    // SA/TR return correlation
-    val series = Series.loadSeries(
-      LakeReader.read(spark, lakeRoot),
-      written.withColumnRenamed("close_split", "close_sa"), "day")
+    // SA/TR return correlation, joined at the raw lake's own timeframe
+    val series = Series.loadSeries(bars, written, Series.timeframeOf(bars))
     Series.splitPiecewiseJumps(series).show(20, truncate = false)
     Series.returnCorrelation(series).show(20, truncate = false)
     spark.stop()

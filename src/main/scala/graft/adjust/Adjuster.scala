@@ -2,9 +2,6 @@ package graft.adjust
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-
-import graft.ops.Cumulative
 
 /** Factor application + materialization — builds the adjusted lake from
   * raw bars and refdata dims (reference pipeline stages 3-10,
@@ -17,18 +14,15 @@ object Adjuster {
   val MaterializeClose = "close"
   val MaterializeOhlc = "ohlc"
 
-  /** Full adjusted build: identity attach → split factors → apply →
-    * dividend factors on the split base → apply → select by policy.
-    * Dims ride broadcast joins.
+  /** Full adjusted build: day grid → identity attach → factor kernel
+    * ([[Factors.factorTable]]) → split and total-return application per
+    * bar → select by policy. Bars sharing (ticker, datetime) collapse to
+    * one row (which one is unspecified).
     *
-    * Scale notes: `withId` (the full bar lake + identity) feeds three
-    * consumers (day grid, split application, TR base) and `withSplit`
-    * feeds two — without materialization each branch would re-scan and
-    * re-attach the whole lake. Both are persisted (memory-spilling-to-
-    * disk), and `withId` is hash-partitioned by `id` up front so every
-    * downstream window (`partitionBy(id)`) and factor join
-    * (`id, event_day` — subset-clustered) reuses one distribution
-    * instead of re-shuffling the fact table per stage.
+    * Plan shape: the bars are hash-partitioned by (ticker, event_day)
+    * once; the duplicate drop, the day-grid aggregate and the join back
+    * to the factor table all reuse that distribution, so the bar history
+    * is shuffled once and everything else runs on the day grid.
     */
   def buildAdjusted(
       bars: DataFrame,
@@ -37,6 +31,23 @@ object Adjuster {
       dividends: DataFrame,
       materialize: String = MaterializeClose,
       detectGaps: Boolean = false,
+      debugDump: Option[String] = None): DataFrame =
+    materializeColumns(
+      adjust(bars, securityMaster, splits, dividends, detectGaps, debugDump = debugDump),
+      materialize)
+
+  /** [[buildAdjusted]] before the column policy: every bar column plus
+    * event_day, id and the three factors (1.0 where none applies).
+    * `exact` switches both running products to the exact
+    * left-to-right fold (the oracle-compared queries use it).
+    */
+  private[graft] def adjust(
+      bars: DataFrame,
+      securityMaster: DataFrame,
+      splits: DataFrame,
+      dividends: DataFrame,
+      detectGaps: Boolean = false,
+      exact: Boolean = false,
       debugDump: Option[String] = None): DataFrame = {
     // debugDump (reference --debug-dump, factor_builder.py:1091-1115):
     // drop the pipeline intermediates — _id_days, _edges, _split_F,
@@ -44,94 +55,61 @@ object Adjuster {
     def dump(df: DataFrame, name: String): Unit = debugDump.foreach { dir =>
       graft.lake.Export.write(df, s"$dir/$name.csv")
     }
-    val withId = Factors.attachId(bars, securityMaster)
-      .repartition(col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the day grid feeds the group-ticker aggregate, the event-selection
-    // joins, and the as-of grid — day-level (tiny next to the bar lake),
-    // so persist rather than re-distinct the lake per consumer; groups
-    // is id-dim-sized and shared by both event families
-    val days = Factors.idDays(withId).persist(StorageLevel.MEMORY_AND_DISK)
-    val groups = Some(Factors.idGroups(days).persist(StorageLevel.MEMORY_AND_DISK))
-    dump(days, "_id_days")
+    val dated = bars.withColumn("event_day", to_date(col("datetime")))
+      .repartition(col("ticker"), col("event_day"))
+      .dropDuplicates("ticker", "event_day", "datetime")
+    val idGrid = Factors.attachId(Factors.dayGrid(dated), securityMaster)
+    dump(idGrid.select(col("id"), col("ticker"), col("event_day")), "_id_days")
     // detectGaps (reference CLI default for minute streaming, disabled
     // by --no-detect-split-gaps): overnight price gaps that round to a
     // clean split ratio recover splits missing/mis-dated in refdata
-    val edges = if (detectGaps) Some(Factors.dayEdges(withId)) else None
-    edges.foreach(dump(_, "_edges"))
-    val sf = Factors.splitFactorGrid(days, splits, edges = edges, groups = groups)
-    dump(sf, "_split_F")
-
-    val withSplit = withId
-      .join(sf, Seq("id", "event_day"), "left")
+    val grid = if (detectGaps) Factors.gapGuesses(idGrid) else idGrid
+    if (detectGaps) dump(grid, "_edges")
+    val factors = Factors.factorTable(grid, splits, dividends, exact)
+    dump(factors.select(col("id"), col("event_day"), col("split_price_factor"),
+      col("split_volume_factor")), "_split_F")
+    dump(factors.select(col("id"), col("event_day"), col("tr_price_factor")), "_div_G")
+    dated
+      .join(factors, Seq("ticker", "event_day"), "left")
       .withColumn("split_price_factor", coalesce(col("split_price_factor"), lit(1.0)))
       .withColumn("split_volume_factor", coalesce(col("split_volume_factor"), lit(1.0)))
-      .withColumn("close_split", col("close") * col("split_price_factor"))
-      .withColumn("volume_split",
-        (col("volume") * col("split_volume_factor")).cast("double"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Day-level base: the (last) split-adjusted close of each trading
-    // day — for day bars this is the row itself; for minute bars the
-    // day's final bar (factor_builder.py:707-725 edge extraction).
-    val dayBase = withSplit
-      .groupBy(col("id"), col("ticker"), col("event_day"))
-      .agg(max_by(col("close_split"), col("datetime")).as("close_split"))
-
-    val gf = Factors.dividendFactorGrid(dayBase, dividends, groups = groups)
-    dump(gf, "_div_G")
-    val adjusted = withSplit
-      .join(gf, Seq("id", "event_day"), "left")
       .withColumn("tr_price_factor", coalesce(col("tr_price_factor"), lit(1.0)))
-      .withColumn("close_tr", col("close_split") * col("tr_price_factor"))
-
-    materializeColumns(adjusted, materialize)
   }
 
-  /** Column policy: minimal / close (adds factors) / ohlc (adds adjusted
-    * open/high/low).
+  /** Column policy over the factor-joined bars of [[adjust]]: minimal
+    * (adjusted close/volume) / close (adds factors) / ohlc (adds
+    * adjusted open/high/low).
     */
-  def materializeColumns(adjusted: DataFrame, policy: String): DataFrame = policy match {
-    case MaterializeMinimal => adjusted.select(
+  def materializeColumns(adjusted: DataFrame, policy: String): DataFrame = {
+    val closeSplit = col("close") * col("split_price_factor")
+    val minimal = Seq(
       col("datetime"), col("ticker"), col("id"), col("event_day"),
       col("close"), col("volume"),
-      col("close_split"), col("volume_split"), col("close_tr"))
-    case MaterializeClose => adjusted.select(
-      col("datetime"), col("ticker"), col("id"), col("event_day"),
-      col("close"), col("volume"),
-      col("close_split"), col("volume_split"), col("close_tr"),
-      col("split_price_factor"), col("split_volume_factor"), col("tr_price_factor"))
-    case MaterializeOhlc =>
-      val extra = Seq("open", "high", "low").flatMap { c =>
-        Seq((col(c) * col("split_price_factor")).as(s"${c}_split"),
-          (col(c) * col("split_price_factor") * col("tr_price_factor")).as(s"${c}_tr"))
-      }
-      adjusted.select(Seq(
-        col("datetime"), col("ticker"), col("id"), col("event_day"),
-        col("close"), col("volume"),
-        col("close_split"), col("volume_split"), col("close_tr"),
-        col("split_price_factor"), col("split_volume_factor"),
-        col("tr_price_factor")) ++ extra: _*)
-    case other => throw new IllegalArgumentException(s"unknown materialize policy: $other")
+      closeSplit.as("close_split"),
+      (col("volume") * col("split_volume_factor")).cast("double").as("volume_split"),
+      (closeSplit * col("tr_price_factor")).as("close_tr"))
+    val factors = Seq(col("split_price_factor"), col("split_volume_factor"),
+      col("tr_price_factor"))
+    policy match {
+      case MaterializeMinimal => adjusted.select(minimal: _*)
+      case MaterializeClose => adjusted.select(minimal ++ factors: _*)
+      case MaterializeOhlc =>
+        val extra = Seq("open", "high", "low").flatMap { c =>
+          Seq((col(c) * col("split_price_factor")).as(s"${c}_split"),
+            (col(c) * col("split_price_factor") * col("tr_price_factor")).as(s"${c}_tr"))
+        }
+        adjusted.select(minimal ++ factors ++ extra: _*)
+      case other => throw new IllegalArgumentException(s"unknown materialize policy: $other")
+    }
   }
 
   /** Per-id audit summary (factor_builder.py:568-643 `_write_summary_csv`
     * / `_event_summary`): trading days, span, last bar timestamp,
     * cumulative split ratio (volume factor of the first day = total
-    * forward split product), per-event-family alignment stats —
-    * events_aligned count, last RAW event date vs the trading day it
-    * ALIGNED to (the forward-snap audit trail), dividend day count and
-    * total cash — and the reference's `used_fallback` flag.
-    *
-    * `used_fallback` mirrors the reference exactly
-    * (factor_builder.py:248-250,308-310,596): per family it is true
-    * when the id group had NO event_id-keyed events and so selected by
-    * ticker instead — including groups with no events at all (the
-    * reference flags those too: the fallback branch runs and also comes
-    * up empty); the summary column ORs the two families (:596).
-    * `last_*_raw_date` is the max date over the id's SELECTED events
-    * (direct or fallback, factor_builder.py:282,343) — before
-    * alignment, so a post-last-day event still counts.
+    * forward split product), and the per-family event stats of
+    * [[Factors.eventStats]] — the same selection and alignment the
+    * factor kernel runs, over the adjusted lake's (id, ticker,
+    * event_day) grid. `used_fallback` ORs the two families (:596).
     */
   def auditSummary(adjusted: DataFrame, splits: DataFrame,
       dividends: DataFrame): DataFrame = {
@@ -142,72 +120,14 @@ object Adjuster {
       max(col("datetime")).as("last_datetime"),
       max_by(col("split_volume_factor"), col("datetime")).as("last_svf"),
       min_by(col("split_volume_factor"), col("datetime")).as("first_svf"))
-    val days = adjusted
-      .select(col("id"), col("ticker"), col("event_day")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val groups = Some(Factors.idGroups(days).persist(StorageLevel.MEMORY_AND_DISK))
-    // ONE event selection per family (event×group-sized, persisted):
-    // the aligned stats and the raw-date/fallback stats below are two
-    // consumers of the same selection — re-selecting would re-run the
-    // group aggregate and selection joins per consumer
-    val splitSel = Factors.selectEvents(
-        Factors.eventCols(splits, "execution_date", "ratio"), days, groups)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val divSel = Factors.selectEvents(
-        Factors.eventCols(dividends, "ex_date", "cash_amount"), days, groups)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // same forward-snap the factor grids use — aligned stats count
-    // exactly the events the factors consumed (post-last-day events
-    // excluded), matching the reference's per-day semantics:
-    // events_aligned = aligned DAYS whose ratio product != 1
-    // (factor_builder.py:280), dividend_event_days = aligned days with
-    // positive cash, total_cash = aligned cash only (:341-342)
-    val splitPerDay = Factors.alignSelected(splitSel, days, "execution_date")
-      .groupBy(col("snap_id").as("id"), col("snap_day"))
-      .agg(Cumulative.productAgg(col("ratio"), col("ratio")).as("day_ratio"))
-    val splitStats = splitPerDay.groupBy(col("id"))
-      .agg(sum(when(col("day_ratio") =!= 1.0, 1L).otherwise(0L))
-          .as("split_events_aligned"),
-        Cumulative.productAgg(col("day_ratio"), col("day_ratio"))
-          .as("split_cum_ratio"),
-        max(col("snap_day")).as("last_split_aligned_day"))
-    val divPerDay = Factors.alignSelected(divSel, days, "ex_date")
-      .groupBy(col("snap_id").as("id"), col("snap_day"))
-      .agg(sum(col("cash_amount")).as("amount"))
-    val divStats = divPerDay.groupBy(col("id"))
-      .agg(sum(when(col("amount") > 0.0, 1L).otherwise(0L))
-          .as("dividend_event_days"),
-        sum(col("amount")).as("total_cash"),
-        max(col("snap_day")).as("last_dividend_aligned_day"))
-    // last RAW event dates + fallback flags are over each id's SELECTED
-    // events — including ones that never aligned (factor_builder.py:
-    // 282,343 take ev.max() before the alignment dropna). An id absent
-    // from a family's selection has no events at all: its raw date is
-    // null and its fallback flag true (the reference's empty-fallback
-    // branch).
-    val rawSplitMax = splitSel
-      .groupBy(col("snap_id").as("id"))
-      .agg(max(col("execution_date")).as("last_split_raw_date"),
-        max(col("used_fallback")).as("__split_fb"))
-    val rawDivMax = divSel
-      .groupBy(col("snap_id").as("id"))
-      .agg(max(col("ex_date")).as("last_dividend_raw_date"),
-        max(col("used_fallback")).as("__div_fb"))
+    val stats = Factors.eventStats(
+      adjusted.select(col("id"), col("ticker"), col("event_day")).distinct(),
+      splits, dividends)
     perId
-      .join(broadcast(splitStats), Seq("id"), "left")
-      .join(broadcast(divStats), Seq("id"), "left")
-      .join(broadcast(rawSplitMax), Seq("id"), "left")
-      .join(broadcast(rawDivMax), Seq("id"), "left")
+      .join(broadcast(stats), Seq("id"), "left")
       .withColumn("cum_split_ratio", col("first_svf") / col("last_svf"))
-      .withColumn("split_events_aligned",
-        coalesce(col("split_events_aligned"), lit(0L)))
-      .withColumn("split_cum_ratio", coalesce(col("split_cum_ratio"), lit(1.0)))
-      .withColumn("dividend_event_days",
-        coalesce(col("dividend_event_days"), lit(0L)))
-      .withColumn("total_cash", coalesce(col("total_cash"), lit(0.0)))
       .withColumn("used_fallback",
-        coalesce(col("__split_fb"), lit(true)) ||
-          coalesce(col("__div_fb"), lit(true)))
-      .drop("first_svf", "last_svf", "__split_fb", "__div_fb")
+        col("split_used_fallback") || col("dividend_used_fallback"))
+      .drop("first_svf", "last_svf", "split_used_fallback", "dividend_used_fallback")
   }
 }

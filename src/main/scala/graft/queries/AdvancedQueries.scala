@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 
-import graft.adjust.Factors
+import graft.adjust.Adjuster
 import graft.dedup.Dedup
 import graft.model.Tables
 import graft.multimodal.Multimodal
@@ -1594,53 +1594,13 @@ object AdvancedQueries {
           .filter(col("event_type") === "click" && col("event_id") % 31 === 0)
           .select(col("ticker"), to_date(col("ts")).as("ex_date"),
             dec4(col("value")).as("cash_amount"))
-        // withId feeds the day grid, the split application, and (via the
-        // split base) the TR grid — persist + id-partition once instead
-        // of re-running the scan→aggregate→PIT-attach chain per branch
-        val withId = Factors.attachId(bars, sm)
-          .repartition(col("id"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // day grid + group tickers are shared by BOTH event families
-        // (selection joins, as-of grid): one groups subtree in the plan
-        // lets runtime exchange reuse dedupe it. Deliberately NOT
-        // persisted/checkpointed here — measured at bench scale, the
-        // extra materialization barriers cost ~2.5 s on this tiny-data
-        // query while every duplicated subtree sits above the already-
-        // persisted withId (BENCH_LOCAL.md round 7 note).
-        val days = Factors.idDays(withId)
-        // groups is id-dim-sized and consumed by BOTH factor grids:
-        // checkpointed once instead of re-planned + re-executed per
-        // grid (the idGroups scaladoc's compute-once advice, upgraded
-        // from persist to a plan-truncating materialization)
-        val groups = Some(Factors.idGroups(days).localCheckpoint())
-        val sgrid = Factors.splitFactorGrid(days, splits, exact = true,
-          groups = groups)
-        // ONE plan-truncation point at the factor-table boundary
-        // (guide §3.3): dayBase feeds BOTH the dividend grid and the
-        // final join, and everything below it (day grid, group
-        // tickers, split alignment + windows) otherwise re-plans and
-        // re-executes per consumer inside one giant composite plan —
-        // measured at 32c as a 0.8 s analysis prefix plus ~45
-        // sequential AQE micro-stages with driver gaps between them.
-        // localCheckpoint materializes the id×day factor table once
-        // and hands both consumers an RDD scan: same rows (the
-        // checkpoint is below the deterministic float math, which is
-        // per-row and unaffected by partitioning), half the stage
-        // cascade, and the dividend/TR half plans against a leaf.
-        val dayBase = withId.join(sgrid, Seq("id", "event_day"), "left")
-          .withColumn("close_split",
-            col("close") * coalesce(col("split_price_factor"), lit(1.0)))
-          .localCheckpoint()
-        val dgrid = Factors.dividendFactorGrid(
-          dayBase.select(col("id"), col("ticker"), col("event_day"),
-            col("close_split")),
-          dividends, exact = true, groups = groups)
-        dayBase.join(dgrid, Seq("id", "event_day"), "left")
-          .withColumn("close_tr",
-            col("close_split") * coalesce(col("tr_price_factor"), lit(1.0)))
+        val adj = Adjuster.adjust(bars, sm, splits, dividends, exact = true)
+        val closeSplit = col("close") * col("split_price_factor")
+        adj
           .select(col("ticker"),
             date_format(col("event_day"), "yyyy-MM-dd").as("day"),
-            col("id"), col("close"), col("close_split"), col("close_tr"))
+            col("id"), col("close"), closeSplit.as("close_split"),
+            (closeSplit * col("tr_price_factor")).as("close_tr"))
           .orderBy(col("ticker"), col("day"))
       },
       Some("""WITH ev AS (SELECT 'U'||CAST(user_id AS VARCHAR) AS ticker, user_id, ts, event_id, event_type, value FROM events),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.adjust.Factors
 import graft.model.Tables
 import graft.ops.AsOf
 
@@ -51,7 +52,7 @@ object ExtraQueries {
           .withColumn("prev", lag(col("o_totalprice"), 1).over(w))
           .filter(col("prev").isNotNull && col("prev") > 0)
           .withColumn("gap", col("o_totalprice") / col("prev"))
-          .withColumn("guess", graft.adjust.Factors.splitGapGuess(col("gap")))
+          .withColumn("guess", Factors.splitGapGuess(col("gap")))
           .select(col("o_orderkey"), col("gap"), col("guess"))
           .orderBy(col("o_orderkey"))
       },
@@ -218,7 +219,7 @@ object ExtraQueries {
         ORDER BY m.event_id""")),
 
     // ---- F15 end-to-end: the full gap-detection pipeline
-    // (dayEdges → splitGapGuess → splitFactorGrid override,
+    // (day grid → splitGapGuess → the factor kernel's override,
     // factor_builder.py:789-814). Synthetic smooth closes drop 10:1 on
     // 2024-01-15 for every 5th ticker with EMPTY refdata splits — the
     // recovered factor grid must re-date every series exactly. All
@@ -241,19 +242,12 @@ object ExtraQueries {
                 col("event_day") >= lit("2024-01-15").cast("date"),
                 lit(0.1)).otherwise(lit(1.0)))
           .withColumn("datetime", col("event_day").cast("timestamp"))
-          .withColumn("id", col("ticker"))
-          // bars (distinct + per-ticker window) feeds the day grid,
-          // the alignment grid AND dayEdges — one plan-truncating
-          // materialization instead of re-planning + re-executing the
-          // subtree per consumer (the q32 localCheckpoint treatment;
-          // the window order is unique per (ticker, event_day), so
-          // the checkpointed values are deterministic)
-          .localCheckpoint()
-        val days = bars.select(col("id"), col("ticker"), col("event_day"))
+        val ids = Factors.dayGrid(bars).withColumn("id", col("ticker"))
         val noSplits = Seq.empty[(String, java.sql.Date, Double)]
           .toDF("ticker", "execution_date", "ratio")
-        graft.adjust.Factors.splitFactorGrid(days, noSplits, exact = true,
-            edges = Some(graft.adjust.Factors.dayEdges(bars)))
+        val noDividends = Seq.empty[(String, java.sql.Date, Double)]
+          .toDF("ticker", "ex_date", "cash_amount")
+        Factors.factorTable(Factors.gapGuesses(ids), noSplits, noDividends, exact = true)
           .select(col("id").as("ticker"),
             date_format(col("event_day"), "yyyy-MM-dd").as("day"),
             col("split_price_factor"), col("split_volume_factor"))

@@ -23,6 +23,13 @@ object Series {
       if (d.columns.contains(to)) d else d.withColumnRenamed(from, to) }
   }
 
+  /** The timeframe of a bar lake read from its root: minute lakes carry
+    * the `day` partition column ([[graft.ingest.BarsIngest]]), day lakes
+    * stop at `month`.
+    */
+  def timeframeOf(lake: DataFrame): String =
+    if (lake.columns.contains("day")) "minute" else "day"
+
   /** Join unadjusted × adjusted series for QA: day granularity joins on
     * the calendar date (lake_io.py:500-506), minute on the exact
     * timestamp (:509-511).

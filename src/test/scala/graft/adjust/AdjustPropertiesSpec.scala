@@ -11,9 +11,13 @@ import graft.SparkTestBase
 
 /** Property-style invariants over randomized scenarios (SURVEY.md §5):
   * the split ratio is piecewise-constant and jumps only at aligned split
-  * days; notional (close × volume) is conserved by split adjustment;
-  * the latest bar is always unadjusted (anchor-to-last); adjustment
-  * with empty event tables is the identity.
+  * days (and where a ticker's id changes); notional (close × volume) is
+  * conserved by split adjustment; the latest bar is always unadjusted
+  * (anchor-to-last); adjustment with empty event tables is the identity.
+  * Scenarios give a ticker no FIGI, a FIGI from a mid-window day (a
+  * NOFIGI__ prefix), or a mid-window FIGI change, and key each event to
+  * one of its FIGIs or to none — so both the direct and the ticker
+  * fallback selection run.
   */
 class AdjustPropertiesSpec extends SparkTestBase {
   import spark.implicits._
@@ -22,8 +26,9 @@ class AdjustPropertiesSpec extends SparkTestBase {
 
   private case class Scenario(
       bars: Seq[(Timestamp, String, Float, Long)],
-      splits: Seq[(String, Date, Double)],
-      dividends: Seq[(String, Date, Double)])
+      sm: Seq[(String, String, Option[Date], Option[Date])],
+      splits: Seq[(String, Date, Double, Option[String])],
+      dividends: Seq[(String, Date, Double, Option[String])])
 
   private def genScenario(): Scenario = {
     val tickers = Seq("AAA", "BBB").take(1 + rnd.nextInt(2))
@@ -33,29 +38,76 @@ class AdjustPropertiesSpec extends SparkTestBase {
     val bars = for (t <- tickers; d <- days) yield
       (Timestamp.valueOf(s"$d 21:00:00"), t,
         (50 + rnd.nextInt(100) + rnd.nextFloat()).toFloat, 100L + rnd.nextInt(1000))
+    val sm = tickers.flatMap { t =>
+      val mid = days(1 + rnd.nextInt(days.size - 1))
+      rnd.nextInt(3) match {
+        case 0 => Nil
+        case 1 => Seq((t, s"FIGI_$t", Some(Date.valueOf(mid)), None))
+        case _ => Seq(
+          (t, s"FIGI_${t}_A", None, Some(Date.valueOf(mid.minusDays(1)))),
+          (t, s"FIGI_${t}_B", Some(Date.valueOf(mid)), None))
+      }
+    }
+    def figi(t: String): Option[String] = {
+      val fs = sm.filter(_._1 == t).map(_._2)
+      val k = rnd.nextInt(fs.size + 1)
+      if (k == fs.size) None else Some(fs(k))
+    }
     val splits = tickers.flatMap { t =>
-      (0 until rnd.nextInt(3)).map { _ =>
+      (0 until rnd.nextInt(4)).map { _ =>
         val d = start.plusDays(rnd.nextInt(days.size + 10)) // may land after last day
-        (t, Date.valueOf(d), Seq(2.0, 3.0, 10.0, 0.5)(rnd.nextInt(4)))
+        (t, Date.valueOf(d), Seq(2.0, 3.0, 10.0, 0.5)(rnd.nextInt(4)), figi(t))
       }
     }
     val dividends = tickers.flatMap { t =>
-      (0 until rnd.nextInt(2)).map { _ =>
-        (t, Date.valueOf(start.plusDays(rnd.nextInt(days.size))), 0.25 + rnd.nextDouble())
+      (0 until rnd.nextInt(3)).map { _ =>
+        (t, Date.valueOf(start.plusDays(rnd.nextInt(days.size))), 0.25 + rnd.nextDouble(),
+          figi(t))
       }
     }
-    Scenario(bars, splits, dividends)
+    Scenario(bars, sm, splits, dividends)
   }
 
   private def adjust(s: Scenario) = Adjuster.buildAdjusted(
     s.bars.toDF("datetime", "ticker", "close", "volume"),
-    Seq.empty[(String, String, Date, Date)]
-      .toDF("ticker", "composite_figi", "effective_start", "effective_end"),
-    s.splits.toDF("ticker", "execution_date", "ratio"),
-    s.dividends.toDF("ticker", "ex_date", "cash_amount"),
+    s.sm.toDF("ticker", "composite_figi", "effective_start", "effective_end"),
+    s.splits.toDF("ticker", "execution_date", "ratio", "composite_figi"),
+    s.dividends.toDF("ticker", "ex_date", "cash_amount", "composite_figi"),
     Adjuster.MaterializeClose)
 
+  /** Expected jumps of one ticker's close/close_split series, from the
+    * reference's rules: per id group (the in-window FIGI, else
+    * NOFIGI__ticker) the direct events, else all the ticker's events,
+    * snapped forward onto the group's days. The ratio jumps at every
+    * snapped day after the group's first whose ratio product is not 1,
+    * and where the id changes unless the new group's later ratios
+    * multiply to 1 (the old group ends anchored at 1). Also names the
+    * selection path each group took.
+    */
+  private def expectedJumps(sc: Scenario, ticker: String,
+      tradingDays: Seq[LocalDate]): (Int, Seq[String]) = {
+    def idOf(d: LocalDate) = sc.sm.collectFirst {
+      case (t, f, s, e) if t == ticker && s.forall(x => !d.isBefore(x.toLocalDate)) &&
+          e.forall(x => !d.isAfter(x.toLocalDate)) => f
+    }.getOrElse(Factors.NoFigiPrefix + ticker)
+    val events = sc.splits.filter(_._1 == ticker)
+    val groups = tradingDays.map(idOf).distinct.zipWithIndex.map { case (id, k) =>
+      val idDays = tradingDays.filter(idOf(_) == id)
+      val direct = events.filter(_._4.getOrElse(Factors.NoFigiPrefix + ticker) == id)
+      val dayRatio = (if (direct.nonEmpty) direct else events)
+        .flatMap(e => idDays.find(d => !d.isBefore(e._2.toLocalDate)).map(_ -> e._3))
+        .groupMapReduce(_._1)(_._2)(_ * _)
+      val later = dayRatio.filter(_._1 != idDays.head).values
+      val jumps = later.count(r => math.abs(r - 1.0) > 1e-9) +
+        (if (k > 0 && math.abs(later.product - 1.0) > 1e-9) 1 else 0)
+      val path = if (direct.nonEmpty) "direct" else if (events.nonEmpty) "fallback" else "none"
+      (jumps, if (k > 0) Seq(path, "id change") else Seq(path))
+    }
+    (groups.map(_._1).sum, groups.flatMap(_._2))
+  }
+
   test("randomized invariants hold over 15 scenarios") {
+    val paths = scala.collection.mutable.Set.empty[String]
     (1 to 15).foreach { i =>
       val sc = genScenario()
       val adj = adjust(sc).cache()
@@ -86,16 +138,13 @@ class AdjustPropertiesSpec extends SparkTestBase {
           .setScale(6, BigDecimal.RoundingMode.HALF_UP))
         val jumps = ratios.zip(ratios.drop(1)).count { case (a, b) => a != b }
         val tradingDays = series.map(_._2.toLocalDateTime.toLocalDate).distinct.sorted
-        val alignedSplitDays = sc.splits
-          .filter(s => s._1 == ticker && s._3 != 1.0)
-          .map(s => tradingDays.find(d => !d.isBefore(s._2.toLocalDate)))
-          .collect { case Some(d) if d != tradingDays.head => d }
-          .distinct
-        assert(jumps == alignedSplitDays.size,
-          s"[$i/$ticker] jumps $jumps != aligned splits ${alignedSplitDays.size}")
+        val (expected, taken) = expectedJumps(sc, ticker, tradingDays)
+        paths ++= taken
+        assert(jumps == expected, s"[$i/$ticker] jumps $jumps != expected $expected")
       }
       adj.unpersist()
     }
+    assert(Set("direct", "fallback", "id change").subsetOf(paths), s"paths run: $paths")
   }
 
   test("empty event tables are the identity adjustment") {

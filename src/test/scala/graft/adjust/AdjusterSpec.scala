@@ -218,11 +218,61 @@ class AdjusterSpec extends SparkTestBase {
     assert(approx(m("2024-01-03")._2, 50.0))             // fallback split applies
     assert(approx(m("2024-01-04")._2, 100.0))
     // selection flags: prefix keyed directly, suffix via fallback
-    val sel = Factors.selectEvents(
-        Factors.eventCols(splits2, "execution_date", "ratio"),
-        Factors.idDays(Factors.attachId(bars2, sm2)))
-      .select($"snap_id", $"used_fallback").as[(String, Boolean)]
+    val sel = Factors.eventStats(
+        adj.select($"id", $"ticker", $"event_day").distinct(), splits2, noDiv)
+      .select($"id", $"split_used_fallback").as[(String, Boolean)]
       .collect().toMap
     assert(sel == Map("NOFIGI__EEE" -> false, "FIGI_EEE" -> true))
+  }
+
+  test("an id trading two tickers on one day keeps one factor per day") {
+    // FIGI_X is AAA through 01-03 and BBB from 01-03: on 01-03 the id
+    // trades both tickers. The BBB 2:1 split on 01-03 applies ONCE to
+    // the id's series (factor_builder.py groups by id, one row per
+    // trading day), and every input bar comes back exactly once.
+    val bars2 = Seq(("2024-01-02", "AAA", "15:00", 100.0f), ("2024-01-03", "AAA", "15:00", 101.0f),
+      ("2024-01-03", "BBB", "20:00", 50.0f), ("2024-01-04", "BBB", "20:00", 51.0f))
+      .map { case (day, t, hm, c) => (Timestamp.valueOf(s"$day $hm:00"), t, c, 10L) }
+      .toDF("datetime", "ticker", "close", "volume")
+    val sm2 = Seq(
+      ("AAA", "FIGI_X", None: Option[Date], Some(d("2024-01-03"))),
+      ("BBB", "FIGI_X", Some(d("2024-01-03")), None: Option[Date]))
+      .toDF("ticker", "composite_figi", "effective_start", "effective_end")
+    val splits2 = Seq(("BBB", d("2024-01-03"), 2.0, "FIGI_X"))
+      .toDF("ticker", "execution_date", "ratio", "composite_figi")
+    val divs2 = Seq(("BBB", d("2024-01-04"), 1.0, "FIGI_X"))
+      .toDF("ticker", "ex_date", "cash_amount", "composite_figi")
+    val adj = Adjuster.buildAdjusted(bars2, sm2, splits2, divs2,
+      Adjuster.MaterializeClose)
+    val rows = adj.select($"ticker", date_format($"event_day", "yyyy-MM-dd"), $"id",
+        $"split_price_factor", $"tr_price_factor")
+      .as[(String, String, String, Double, Double)].collect()
+    assert(rows.length == 4, rows.toSeq)
+    val m = rows.map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+    assert(rows.forall(_._3 == "FIGI_X"))
+    assert(approx(m(("AAA", "2024-01-02"))._2, 0.5), s"split applied once: $m")
+    assert(approx(m(("AAA", "2024-01-03"))._2, 1.0) && approx(m(("BBB", "2024-01-03"))._2, 1.0))
+    // the 01-04 dividend's base is the id's last bar of 01-03 (BBB at
+    // 20:00, 50.0), not AAA's 15:00 bar
+    val g = (50.0 - 1.0) / 50.0
+    Seq(("AAA", "2024-01-02"), ("AAA", "2024-01-03"), ("BBB", "2024-01-03"))
+      .foreach(k => assert(approx(m(k)._3, 1.0 / g), s"$k tr ${m(k)._3}"))
+    assert(approx(m(("BBB", "2024-01-04"))._3, 1.0))
+  }
+
+  test("bars sharing (ticker, datetime) collapse to one row") {
+    val bars2 = Seq((ts("2024-01-02"), "DUP", 10.0f, 1L), (ts("2024-01-02"), "DUP", 11.0f, 2L),
+      (ts("2024-01-03"), "DUP", 12.0f, 3L))
+      .toDF("datetime", "ticker", "close", "volume")
+    val noSm = Seq.empty[(String, String, Date, Date)]
+      .toDF("ticker", "composite_figi", "effective_start", "effective_end")
+    val noSplits = Seq.empty[(String, Date, Double)].toDF("ticker", "execution_date", "ratio")
+    val noDiv = Seq.empty[(String, Date, Double)].toDF("ticker", "ex_date", "cash_amount")
+    val out = Adjuster.buildAdjusted(bars2, noSm, noSplits, noDiv, Adjuster.MaterializeClose)
+      .select(date_format($"event_day", "yyyy-MM-dd"), $"close".cast("double"))
+      .as[(String, Double)].collect()
+    assert(out.length == 2, out.toSeq)
+    val kept = out.filter(_._1 == "2024-01-02").map(_._2)
+    assert(kept.length == 1 && Set(10.0, 11.0).contains(kept.head), kept.toSeq)
   }
 }

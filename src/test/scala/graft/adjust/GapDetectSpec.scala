@@ -33,6 +33,9 @@ class GapDetectSpec extends SparkTestBase {
   private lazy val noDividends = Seq.empty[(String, Date, Double)]
     .toDF("ticker", "ex_date", "cash_amount")
 
+  private def dated(df: DataFrame): DataFrame =
+    df.withColumn("event_day", to_date(col("datetime")))
+
   private def spfByDay(adj: DataFrame): Map[String, Double] =
     adj.select(date_format(col("event_day"), "yyyy-MM-dd"),
         col("split_price_factor"))
@@ -136,7 +139,7 @@ class GapDetectSpec extends SparkTestBase {
       ("GGG", "FIGI_OLD", Some(d("2023-01-01")), Some(d("2024-02-05"))),
       ("GGG", "FIGI_NEW", Some(d("2024-02-06")), None: Option[Date]))
       .toDF("ticker", "composite_figi", "effective_start", "effective_end")
-    val withId = Factors.attachId(bars, sm2)
+    val withId = Factors.attachId(Factors.dayGrid(dated(bars)), sm2)
     val ids = withId.select(date_format(col("event_day"), "yyyy-MM-dd"), col("id"))
       .distinct().as[(String, String)].collect().toMap
     assert(ids("2024-02-05") == "FIGI_OLD" && ids("2024-02-06") == "FIGI_NEW")
@@ -144,14 +147,14 @@ class GapDetectSpec extends SparkTestBase {
     // factor_builder.py:739-743): the lag crosses the identity boundary.
     // An id-partitioned lag returns null here — the split would be
     // silently undetectable.
-    val e = Factors.dayEdges(withId)
+    val e = Factors.gapGuesses(withId)
     val gap = e.filter(col("event_day") === lit("2024-02-06").cast("date"))
       .select(col("raw_gap")).as[Double].head()
     assert(gap > 0.095 && gap < 0.105, s"boundary gap $gap")
-    val g = e.select(col("id"), Factors.splitGapGuess(col("raw_gap")).as("guess"))
+    val g = e.select(col("id"), col("guess"))
       .filter(col("guess").isNotNull).as[(String, Double)].collect().toSeq
     assert(g == Seq(("FIGI_NEW", 10.0)), s"guesses $g")
-    // Documented divergence (day-path semantics): splitFactorGrid anchors
+    // Documented divergence (day-path semantics): the factor kernel anchors
     // per id (factor_builder.py:363 groups the day path by id); the
     // reference's MINUTE path groups factors per ticker
     // (factor_builder.py:769), which would also rescale FIGI_OLD's days.
@@ -160,15 +163,13 @@ class GapDetectSpec extends SparkTestBase {
     // re-keying of the grid shows up here.
     val noSplits = Seq.empty[(String, Date, Double)]
       .toDF("ticker", "execution_date", "ratio")
-    val spf = Factors.splitFactorGrid(Factors.idDays(withId), noSplits,
-        exact = true, edges = Some(e))
+    val spf = Factors.factorTable(e, noSplits, noDividends, exact = true)
       .select(col("split_price_factor")).as[Double].collect()
     assert(spf.forall(v => approx(v, 1.0)), s"per-id anchoring: ${spf.toSeq}")
   }
 
   test("day edges: first/last close and prior-day gap") {
-    val withId = Factors.attachId(bars, sm)
-    val e = Factors.dayEdges(withId)
+    val e = Factors.gapGuesses(Factors.dayGrid(dated(bars)))
       .select(date_format(col("event_day"), "yyyy-MM-dd"),
         col("first_close").cast("double"), col("last_close").cast("double"),
         col("raw_gap"))

@@ -183,4 +183,29 @@ class IngestSpec extends SparkTestBase {
     val plan = got.queryExecution.executedPlan.toString
     assert(!plan.contains("month=2") || plan.contains("PartitionFilters"))
   }
+
+  test("the QA join takes its timeframe from the lake layout") {
+    // Two minute bars of one ticker-day: joined as a day lake every bar
+    // would match both adjusted bars of its day (4 rows, not 2).
+    val header = "ticker,window_start,open,high,low,close,volume,transactions,vwap"
+    def epochMs(ts: String) = java.sql.Timestamp.valueOf(ts).getTime
+    val dir = Files.createTempDirectory("graft_tf").toString
+    writeGz(s"$dir/minute.csv.gz", Seq(header,
+      s"aapl,${epochMs("2024-01-02 14:30:00")},1,2,0.5,1.5,100,5,1.2",
+      s"aapl,${epochMs("2024-01-02 14:31:00")},1,2,0.5,1.6,100,5,1.2"))
+    BarsIngest.ingest(spark, s"$dir/minute.csv.gz", s"$dir/lake", timeframe = "minute")
+    val raw = LakeReader.read(spark, s"$dir/lake")
+    assert(graft.query.Series.timeframeOf(raw) == "minute")
+    assert(graft.query.Series.timeframeOf(LakeReader.read(spark, lakeRoot)) == "day")
+    val noSm = Seq.empty[(String, String, java.sql.Date, java.sql.Date)]
+      .toDF("ticker", "composite_figi", "effective_start", "effective_end")
+    val noSplits = Seq.empty[(String, java.sql.Date, Double)]
+      .toDF("ticker", "execution_date", "ratio")
+    val noDiv = Seq.empty[(String, java.sql.Date, Double)]
+      .toDF("ticker", "ex_date", "cash_amount")
+    val adj = graft.adjust.Adjuster.buildAdjusted(raw, noSm, noSplits, noDiv)
+    val series = graft.query.Series.loadSeries(raw, adj, graft.query.Series.timeframeOf(raw))
+    assert(series.count() == 2)
+    assert(series.filter($"close".cast("double") =!= $"close_sa").count() == 0)
+  }
 }
