@@ -2,16 +2,28 @@
 # One-command correctness gate: runs the driver contract (graft.Verify)
 # and the DuckDB oracle compare (scripts/selfcheck.py) at sf0.01 AND
 # sf0.001, exiting nonzero on any FAIL. Pass --test to also run the
-# ScalaTest suite first. This is the same recipe the round driver runs;
-# run it before every round snapshot.
+# ScalaTest suite first. Run it unfiltered before every snapshot: that
+# is the acceptance check. --only a,b runs and checks just the named
+# queries (SPARK_GRAFT_ONLY for Verify, --only for selfcheck.py), for a
+# quick re-check of the rows a change touches.
 #
-# Usage: scripts/gate.sh [--test]
+# Usage: scripts/gate.sh [--test] [--only name1,name2,...]
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
 fail=0
+test=0 only=""
+while [[ $# -gt 0 ]]; do
+  case "$1" in
+    --test) test=1; shift ;;
+    --only) only=$2; shift 2 ;;
+    *) echo "gate.sh: unknown argument $1" >&2; exit 2 ;;
+  esac
+done
+only_args=()
+[[ -n "${only}" ]] && only_args=(--only "${only}")
 
-if [[ "${1:-}" == "--test" ]]; then
+if [[ ${test} -eq 1 ]]; then
   echo "== sbt test =="
   if ! sbt -batch test > /tmp/gate_sbt_test.log 2>&1; then
     echo "GATE: sbt test FAILED (log: /tmp/gate_sbt_test.log)"
@@ -27,7 +39,8 @@ for sf in 0.01 0.001; do
   # by a PREVIOUS green run if this Verify fails to produce output —
   # so always start from an empty dir and fail on Verify's own exit.
   rm -rf "${out}"
-  if ! sbt -batch "runMain graft.Verify /root/testdata/sf${sf} ${out}" \
+  if ! SPARK_GRAFT_ONLY="${only}" \
+      sbt -batch "runMain graft.Verify /root/testdata/sf${sf} ${out}" \
       > "/tmp/gate_verify_sf${sf}.log" 2>&1; then
     echo "GATE: Verify FAILED at sf${sf} (log: /tmp/gate_verify_sf${sf}.log)"
     fail=1
@@ -37,7 +50,8 @@ for sf in 0.01 0.001; do
   grep -E "^\[error\] \[verify\]" "/tmp/gate_verify_sf${sf}.log" || true
   # run selfcheck once; show per-query FAIL lines plus the summary (the
   # PASS lines are noise, but a tripped gate must say WHICH query failed)
-  sc_out=$(python3 scripts/selfcheck.py "/root/testdata/sf${sf}" "${out}")
+  sc_out=$(python3 scripts/selfcheck.py "/root/testdata/sf${sf}" "${out}" \
+    "${only_args[@]}")
   sc_rc=$?
   echo "${sc_out}" | grep -vE "^PASS " || true
   if [[ ${sc_rc} -ne 0 ]]; then
@@ -47,7 +61,7 @@ for sf in 0.01 0.001; do
 done
 
 if [[ $fail -eq 0 ]]; then
-  echo "GATE: PASS (both scale factors)"
+  echo "GATE: PASS (both scale factors${only:+, only ${only}})"
 else
   echo "GATE: FAIL"
 fi

@@ -2,7 +2,9 @@
 """Local stand-in for the driver's correctness gate: reads the parquet
 dumps produced by `graft.Verify`, runs each oracle SQL in DuckDB over the
 same testdata, and compares (schema by sorted column name, values after
-row-sort). Usage: selfcheck.py <sfDir> <verifyOutDir>
+row-sort). Usage: selfcheck.py <sfDir> <verifyOutDir> [--only a,b]
+--only checks just the named queries (the SPARK_GRAFT_ONLY filter of a
+Verify run); a name with no oracle is a FAIL.
 """
 import json, sys, glob, os
 import duckdb
@@ -44,7 +46,7 @@ def dtype_mismatch(got: pd.DataFrame, exp: pd.DataFrame):
             bad.append(f"{c}: spark={got[c].dtype}({g}) oracle={exp[c].dtype}({e})")
     return bad
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, only=None) -> int:
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -52,7 +54,11 @@ def main(sf_dir: str, out_dir: str) -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted((only or set()) - oracles.keys()):
+        print(f"FAIL {name}: no oracle"); n_fail += 1
     for name, sql in sorted(oracles.items()):
+        if only is not None and name not in only:
+            continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output"); n_fail += 1; continue
@@ -80,4 +86,9 @@ def main(sf_dir: str, out_dir: str) -> int:
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    args, only = sys.argv[1:], None
+    if "--only" in args:
+        i = args.index("--only")
+        only = {n.strip() for n in args[i + 1].split(",") if n.strip()}
+        del args[i:i + 2]
+    sys.exit(main(args[0], args[1], only))

@@ -74,8 +74,8 @@ object SparkEntry {
     *    qst24, which serves the swap those weights exist for (the
     *    qt46 → qt49 precedent one level up); the dual frozen-vs-
     *    retrained eval stays oracle-checked on qt49's own gate row;
-    *  - qst17 — its frozen-LM stream-scoring chain (the lmDocs %5
-    *    fit, collectModel, the per-doc scoreLocal calls over the
+    *  - qst17 — its frozen-LM stream-scoring chain (the %5-slice
+    *    NgramLm.trainLocal fit, the per-doc scoreLocal calls over the
     *    same 500 dressed (id, lang, text2) triples) runs VERBATIM
     *    inside qst23's admission map; the score VALUES stay
     *    hash-pinned on qst17's own gate row;

@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -143,70 +144,85 @@ object Classifier {
     */
   def trainQuality(prepared: DataFrame, dim: Int = 4096,
       eta: Double = 128.0, steps: Int = 8): Array[Double] = {
+    import prepared.sparkSession.implicits._
+    // one slim deserialized materialization; K pure-compute passes
+    // (the documented 100 TB posture: persist the prepared projection
+    // once, pay K slim scans, never re-tokenize). A null y/n/bs row
+    // (a null-text doc) contributes nothing and is not counted in N —
+    // the old Catalyst form's tolerance (explode(null) emits no rows);
+    // it is dropped before the decode, which would throw on it.
+    val feats = prepared
+      .filter(col("y").isNotNull && col("n").isNotNull &&
+        col("bs").isNotNull)
+      .select(col("y").as("_1"), col("n").as("_2"), col("bs").as("_3"))
+      .as[(Int, Int, Array[Int])].rdd
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try trainQualityRdd(feats, dim, eta, steps)
+    finally feats.unpersist()
+  }
+
+  /** [[trainQuality]] over already-decoded (y, n, bs) rows — the one
+    * copy of the GD math; the caller owns the input's persistence (it
+    * is scanned K + 1 times). Rows with a null bs are skipped.
+    */
+  def trainQualityRdd(rows: RDD[(Int, Int, Array[Int])],
+      dim: Int = 4096, eta: Double = 128.0,
+      steps: Int = 8): Array[Double] = {
     require(eta > 0 && java.lang.Double.isFinite(eta) &&
       (java.lang.Double.doubleToLongBits(eta) & 0xfffffffffffffL) == 0L,
       s"eta must be a finite power of two for an exact weight update, " +
         s"got $eta")
-    import prepared.sparkSession.implicits._
-    // one slim deserialized materialization; K pure-compute passes
-    // (the documented 100 TB posture: persist the prepared projection
-    // once, pay K slim scans, never re-tokenize)
-    val feats = prepared
-      .select(col("y").as("_1"), col("n").as("_2"), col("bs").as("_3"))
-      .as[(Int, Int, Array[Int])].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nRows = feats.count()
-      // Loud Long-range guard on the fixed-point gradient accumulate
-      // (the Dsir rMax / Mixture wsum discipline): each occurrence
-      // contributes floor((y−p)/n · 2^32) and a doc holds ≤ n
-      // occurrences, so a bucket's exact-long sum is bounded by
-      // nDocs · 2^32 — at nDocs ≥ 2^31 it can wrap, and the two engines
-      // diverge silently (Spark wraps, DuckDB raises). Train on a
-      // bounded sample (the CCNet posture — a quality classifier does
-      // not need the whole corpus) past that bound.
-      require(nRows < (1L << 31),
-        s"$nRows training docs: the floor(g*2^32) per-bucket gradient " +
-          "sum risks Long overflow at nDocs >= 2^31 - train on a sample")
-      val nDocs = nRows.toDouble
-      val w = Array.fill(dim)(0.0)
-      var step = 0
-      while (step < steps) {
-        val isFirst = step == 0
-        // snapshot for closure capture: tasks must see the step's
-        // weights, never a concurrently-updated array
-        val wStep = w.clone()
-        val grad = feats.treeAggregate(new Array[Long](dim))(
-          seqOp = { (acc, row) =>
-            val (y, n, bs) = row
-            val nD = n.toDouble
-            val p = if (isFirst) 0.5
-              else {
-                var m = 0.0
-                var i = 0
-                while (i < bs.length) { m += wStep(bs(i)); i += 1 }
-                m = m / nD
-                0.5 + 0.5 * (m / (1.0 + math.abs(m)))
-              }
-            val q = math.floor((y.toDouble - p) / nD * FixedPoint).toLong
-            var i = 0
-            while (i < bs.length) { acc(bs(i)) += q; i += 1 }
-            acc
-          },
-          combOp = { (a, b) =>
-            var i = 0
-            while (i < dim) { a(i) += b(i); i += 1 }
-            a
-          })
-        var b = 0
-        while (b < dim) {
-          if (grad(b) != 0L)
-            w(b) = w(b) + eta * (grad(b).toDouble / FixedPoint / nDocs)
-          b += 1
-        }
-        step += 1
+    val feats = rows.filter(_._3 != null)
+    val nRows = feats.count()
+    // Loud Long-range guard on the fixed-point gradient accumulate
+    // (the Dsir rMax / Mixture wsum discipline): each occurrence
+    // contributes floor((y−p)/n · 2^32) and a doc holds ≤ n
+    // occurrences, so a bucket's exact-long sum is bounded by
+    // nDocs · 2^32 — at nDocs ≥ 2^31 it can wrap, and the two engines
+    // diverge silently (Spark wraps, DuckDB raises). Train on a
+    // bounded sample (the CCNet posture — a quality classifier does
+    // not need the whole corpus) past that bound.
+    require(nRows < (1L << 31),
+      s"$nRows training docs: the floor(g*2^32) per-bucket gradient " +
+        "sum risks Long overflow at nDocs >= 2^31 - train on a sample")
+    val nDocs = nRows.toDouble
+    val w = Array.fill(dim)(0.0)
+    var step = 0
+    while (step < steps) {
+      val isFirst = step == 0
+      // snapshot for closure capture: tasks must see the step's
+      // weights, never a concurrently-updated array
+      val wStep = w.clone()
+      val grad = feats.treeAggregate(new Array[Long](dim))(
+        seqOp = { (acc, row) =>
+          val (y, n, bs) = row
+          val nD = n.toDouble
+          val p = if (isFirst) 0.5
+            else {
+              var m = 0.0
+              var i = 0
+              while (i < bs.length) { m += wStep(bs(i)); i += 1 }
+              m = m / nD
+              0.5 + 0.5 * (m / (1.0 + math.abs(m)))
+            }
+          val q = math.floor((y.toDouble - p) / nD * FixedPoint).toLong
+          var i = 0
+          while (i < bs.length) { acc(bs(i)) += q; i += 1 }
+          acc
+        },
+        combOp = { (a, b) =>
+          var i = 0
+          while (i < dim) { a(i) += b(i); i += 1 }
+          a
+        })
+      var b = 0
+      while (b < dim) {
+        if (grad(b) != 0L)
+          w(b) = w(b) + eta * (grad(b).toDouble / FixedPoint / nDocs)
+        b += 1
       }
-      w
-    } finally feats.unpersist()
+      step += 1
+    }
+    w
   }
 }

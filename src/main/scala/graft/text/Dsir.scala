@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -80,23 +81,34 @@ object Dsir {
     */
   def fitRatioLut(prep: DataFrame, targetCol: String,
       dim: Int = 4096): Array[Double] = {
+    import prep.sparkSession.implicits._
+    // Null target flags count toward the raw distribution only —
+    // exactly the when(targetCol) semantics of the aggregate this
+    // replaced; a null bs (null-text doc) decodes to null and is
+    // skipped by the RDD form.
+    fitRatioLutRdd(prep
+      .select(coalesce(col(targetCol), lit(false)).as("_1"),
+        col("bs").as("_2"))
+      .as[(Boolean, Array[Int])].rdd, dim)
+  }
+
+  /** [[fitRatioLut]] over decoded (is_target, bs) rows — the one copy
+    * of the LUT math. Rows with a null bs contribute nothing (the old
+    * Catalyst form's explode(null) tolerance).
+    */
+  def fitRatioLutRdd(rows: RDD[(Boolean, Array[Int])],
+      dim: Int = 4096): Array[Double] = {
     // ONE treeAggregate pass computes both distributions' per-bucket
     // counts as exact longs (guide §2.3: full map-side aggregation —
     // only 2·dim·8 bytes per partition cross, never the exploded gram
     // stream) and the totals fall out as the column sums; the
     // previous form paid two plans (a whole-table agg THEN an
-    // explode→groupBy→collect exchange) per fit. Null target flags
-    // count toward the raw distribution only — exactly the
-    // when(targetCol) semantics of the aggregate this replaces.
-    import prep.sparkSession.implicits._
-    val (cr, ct) = prep
-      .select(coalesce(col(targetCol), lit(false)).as("_1"),
-        col("bs").as("_2"))
-      .as[(Boolean, Array[Int])].rdd
+    // explode→groupBy→collect exchange) per fit.
+    val (cr, ct) = rows
       .treeAggregate((new Array[Long](dim), new Array[Long](dim)))(
         seqOp = { case ((cr, ct), (isT, bs)) =>
           var i = 0
-          while (i < bs.length) {
+          while (bs != null && i < bs.length) {
             cr(bs(i)) += 1L
             if (isT) ct(bs(i)) += 1L
             i += 1
@@ -176,20 +188,27 @@ object Dsir {
     }
     val isTarget = 50L * stops >= 3L * t.length
     val nG = if (t.length < 2) 0 else t.length - 1
-    var acc = 0L
-    i = 0
-    while (i < nG) {
-      val b = (graft.functions.TokenHashes60.hashOne(md,
-        salt + ":" + t(i) + " " + t(i + 1)) % dim).toInt
-      acc += math.floor(lut(b) * FixedPoint).toLong
-      i += 1
-    }
-    val w = if (nG == 0) 0.0
-      else acc.toDouble / FixedPoint / nG.toDouble
+    val w = weightLocal(Array.tabulate(nG)(i =>
+      (graft.functions.TokenHashes60.hashOne(md,
+        salt + ":" + t(i) + " " + t(i + 1)) % dim).toInt), lut)
     val u = (graft.functions.TokenHashes60.hashOne(md,
       "dsir:" + docId) % 1048576L).toDouble / 1048576.0
     val keep = if (mx == mn) false else u < (w - mn) / (mx - mn)
     (isTarget, nG, w, keep)
+  }
+
+  /** Local twin of [[importanceWeight]] over a decoded bucket array:
+    * the same ascending floor(r·2^32) long accumulate and
+    * (sum/2^32)/n division order; an empty array weighs 0.
+    */
+  def weightLocal(bs: Array[Int], lut: Array[Double]): Double = {
+    var acc = 0L
+    var i = 0
+    while (i < bs.length) {
+      acc += math.floor(lut(bs(i)) * FixedPoint).toLong
+      i += 1
+    }
+    if (bs.isEmpty) 0.0 else acc.toDouble / FixedPoint / bs.length.toDouble
   }
 
   /** The deterministic resampling draw: u(doc) = a rational in [0,1)

@@ -98,10 +98,18 @@ object Mixture {
       : Seq[(String, Long, Double, Long)] = {
     val s = docs.sparkSession
     import s.implicits._
-    val sizes: Array[(String, Long)] = docs.groupBy(col(groupCol))
+    temperatureTargetsOf(docs.groupBy(col(groupCol))
       .agg(count(lit(1)).as("grp_n"))
       .select(col(groupCol).cast("string"), col("grp_n"))
-      .as[(String, Long)].collect()
+      .as[(String, Long)].collect())
+  }
+
+  /** [[temperatureTargets]]' driver math over already-counted
+    * (stratum, n) sizes — the one copy of the share/total/target
+    * arithmetic, for callers that count strata in their own pass.
+    */
+  def temperatureTargetsOf(sizes: Seq[(String, Long)])
+      : Seq[(String, Long, Double, Long)] = {
     require(sizes.nonEmpty, "no strata: empty input")
     val nums = sizes.map { case (g, n) =>
       // loud Long-range guard (the Dsir rMax discipline): for n ≥ 2^62

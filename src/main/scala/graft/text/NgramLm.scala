@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -200,10 +201,11 @@ object NgramLm {
           col("n_tok").cast("double")).as("lm_score"))
   }
 
-  /** Driver-collected model for the STREAM-EDGE serving shape: the
-    * pruned per-language tables as plain maps — the ADC-LUT class
-    * (vocab-bounded after the minCount prune; KBs-to-MBs, broadcast
-    * once, never corpus-sized). Keys are gram tokens joined by ' ' —
+  /** Driver-side model for the STREAM-EDGE serving shape, built by
+    * [[trainLocal]]: the pruned per-language tables as plain maps —
+    * the ADC-LUT class (vocab-bounded after the minCount prune;
+    * KBs-to-MBs, broadcast once, never corpus-sized). Keys are gram
+    * tokens joined by ' ' —
     * tokens come from split-on-space, so a space cannot occur INSIDE
     * a token and the key is unambiguous. (The previous U+0001 joiner
     * was wrong twice over: norm() collapses only \s+, so a control
@@ -220,21 +222,60 @@ object NgramLm {
 
   private def gk(parts: String*): String = parts.mkString(" ")
 
-  /** Collect a trained model to the driver (model-fit-sized collect,
-    * the Ivf/Pq class).
+  /** [[train]]'s edge twin: the same per-language Stupid Backoff model
+    * counted straight into a [[LocalModel]], with no Catalyst plan.
+    * Input rows are (lang, norm(text)) — [[TextOps.norm]] applied by
+    * the caller's projection, so the normalization is the batch
+    * expression itself; null or empty normalized texts are skipped
+    * (train's `n != ''` filter). One keyed count pass: every uni-, bi-
+    * and trigram occurrence is one exact-long count, combined
+    * map-side; unigrams all ship (the add-one floor and the per-lang
+    * N, V read every one), bi- and trigrams only at count ≥ minCount.
+    * That prune is exact for the ratio denominators too: a trigram
+    * occurrence contains its prefix bigram's, so c2(w2 w1) ≥ c3 and
+    * every kept trigram's RAW prefix count is a kept bigram count,
+    * exactly as every bigram's raw c1(w1) is a unigram count. Ratios
+    * are the same single IEEE division c_k.toDouble / c_(k-1).toDouble
+    * train's column form evaluates, so the maps equal the collected
+    * train tables bit for bit (NgramLmSpec pins it).
     */
-  def collectModel(model: Model): LocalModel = {
-    val uni = model.uni.collect().map(r =>
-      (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val bi = model.bi.collect().map(r =>
-      (r.getString(0), gk(r.getString(1), r.getString(2))) ->
-        r.getDouble(3)).toMap
-    val tri = model.tri.collect().map(r =>
-      (r.getString(0), gk(r.getString(1), r.getString(2), r.getString(3))) ->
-        r.getDouble(4)).toMap
-    val stats = model.langStats.collect().map(r =>
-      r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    LocalModel(uni, bi, tri, stats)
+  def trainLocal(normed: RDD[(String, String)], minCount: Int = 2)
+      : LocalModel = {
+    require(minCount >= 1, "minCount must be >= 1")
+    // key: (order, lang, gram key); tokens never contain ' ', so the
+    // ' '-joined gram key is unambiguous (the LocalModel contract)
+    val counts = normed
+      .flatMap { case (lang, n) =>
+        if (n == null || n.isEmpty) Iterator.empty
+        else {
+          val t = n.split(" ", -1)
+          t.indices.iterator.flatMap { i =>
+            Iterator(((1, lang, t(i)), 1L)) ++
+              (if (i >= 1) Iterator(((2, lang, gk(t(i - 1), t(i))), 1L))
+                else Iterator.empty) ++
+              (if (i >= 2) Iterator(((3, lang, gk(t(i - 2), t(i - 1), t(i))), 1L))
+                else Iterator.empty)
+          }
+        }
+      }
+      .reduceByKey(_ + _)
+      .filter { case ((order, _, _), c) => order == 1 || c >= minCount }
+      .collect()
+    def level(k: Int): Map[(String, String), Long] = counts.iterator
+      .collect { case ((`k`, lang, key), c) => (lang, key) -> c }.toMap
+    val uni = level(1)
+    val bi2 = level(2)
+    // the inner joins of train: a ratio needs its parent's raw count
+    def ratios(m: Map[(String, String), Long],
+        parent: Map[(String, String), Long]): Map[(String, String), Double] =
+      m.flatMap { case ((lang, key), c) =>
+        parent.get((lang, key.substring(0, key.lastIndexOf(' '))))
+          .map(cp => (lang, key) -> c.toDouble / cp.toDouble)
+      }
+    val stats = uni.groupBy(_._1._1).map { case (lang, g) =>
+      lang -> ((g.valuesIterator.sum, g.size.toLong))
+    }
+    LocalModel(uni, ratios(bi2, uni), ratios(level(3), bi2), stats)
   }
 
   /** Per-document score against a [[LocalModel]] — the stateless
@@ -254,7 +295,9 @@ object NgramLm {
     */
   def scoreLocal(text: String, lang: String, m: LocalModel):
       Option[(Int, Double)] = {
-    m.stats.get(lang).flatMap { case (nTot, vSz) =>
+    // score drops these rows: its norm filter and its lang join
+    if (text == null || lang == null) None
+    else m.stats.get(lang).flatMap { case (nTot, vSz) =>
       // TextOps.normLocal mirrors TextOps.norm exactly (operation
       // order, trim semantics, locale) — the shared local-normalizer
       // contract of every stream-edge scorer
@@ -301,7 +344,8 @@ object NgramLm {
     * crawl edge deploys next to the collected model: (lang, t1, t2)
     * from the doc_id % sampleMod score sample. [[tertileGate]] is this
     * table joined back to every score; a streaming admission gate
-    * (qst23) collects it once and verdicts arrivals against it.
+    * (qst23) fits the same thresholds with [[tertileThresholdsLocal]]
+    * and verdicts arrivals against them.
     */
   def tertileThresholds(scores: DataFrame, sampleMod: Long = 3): DataFrame = {
     val smp = scores.filter(col("doc_id") % sampleMod === 0)
@@ -317,6 +361,30 @@ object NgramLm {
       max(when(col("rn") ===
           ceil(lit(2.0) * col("m").cast("double") / lit(3.0)).cast("long"),
         col("lm_score"))).as("t2"))
+  }
+
+  /** [[tertileThresholds]]' edge twin over locally scored
+    * (doc_id, lang, lm_score) rows, e.g. [[scoreLocal]]'s: the same
+    * doc_id % sampleMod sample, the same per-language (lm_score,
+    * doc_id) order — doubles compared as Spark's sort does, equal
+    * values tied — and the same ranks ⌈m/3⌉ and ⌈2m/3⌉ computed in
+    * double. Returns lang -> (t1, t2), equal to the collected table's
+    * rows bit for bit (NgramLmSpec pins it). The sample is collected
+    * to the driver, so it must stay driver-sized.
+    */
+  def tertileThresholdsLocal(scores: Seq[(Long, String, Double)],
+      sampleMod: Long = 3): Map[String, (Double, Double)] = {
+    val bySparkOrder: Ordering[(Double, Long)] = (a, b) => {
+      val c = if (a._1 == b._1) 0 else java.lang.Double.compare(a._1, b._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+    scores.filter(_._1 % sampleMod == 0).groupBy(_._2).map {
+      case (lang, rows) =>
+        val sorted = rows.map(r => (r._3, r._1)).sorted(bySparkOrder)
+        val m = sorted.length.toDouble
+        def at(rank: Double): Double = sorted(rank.toLong.toInt - 1)._1
+        lang -> ((at(math.ceil(m / 3.0)), at(math.ceil(2.0 * m / 3.0))))
+    }
   }
 
   def tertileGate(scores: DataFrame, sampleMod: Long = 3): DataFrame = {

@@ -37,6 +37,29 @@ class FitPoolSpec extends SparkTestBase {
     assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null)
   }
 
+  test("inFitGroup tags jobs on the caller's thread, then restores the " +
+      "caller's own group even when the fit throws") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller", interruptOnCancel = false)
+    try {
+      val seen = DataOpsQueries.inFitGroup("spec-inline") {
+        spark.range(10).count()
+        (sc.getLocalProperty("spark.jobGroup.id"),
+          sc.getLocalProperty("spark.job.interruptOnCancel"))
+      }
+      assert(seen == (("graft-fit-spec-inline", "true")))
+      intercept[IllegalStateException](DataOpsQueries.inFitGroup("spec-x") {
+        throw new IllegalStateException("boom")
+      })
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "false")
+    } finally sc.clearJobGroup()
+    // an untagged caller is left untagged
+    DataOpsQueries.inFitGroup("spec-bare")(())
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
   test("a throwing fit propagates its failure through awaitFit") {
     val f = DataOpsQueries.fitThread("spec-boom") {
       throw new IllegalStateException("boom")

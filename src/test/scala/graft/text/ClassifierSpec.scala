@@ -80,6 +80,26 @@ class ClassifierSpec extends SparkTestBase {
     prep.unpersist()
   }
 
+  test("a null-text doc contributes nothing: the weights without it") {
+    // the null doc's y/n/bs are null; it must neither move a bucket
+    // nor count in N, in the DataFrame form and the RDD form alike
+    val docs = Seq((1L, "the the is"), (2L, "big data rows"),
+      (3L, "of the lake and the rows"))
+    val withNull = docs :+ ((4L, null: String))
+    def train(d: Seq[(Long, String)]) = Classifier.trainQuality(
+      Classifier.prepareQuality(d.toDF("doc_id", "text"), "text", "doc_id"),
+      eta = 128.0, steps = 3)
+    val bits = (w: Array[Double]) =>
+      w.toSeq.map(java.lang.Double.doubleToLongBits)
+    val want = bits(train(docs))
+    assert(bits(train(withNull)) == want)
+    val rows = Classifier.prepareQuality(docs.toDF("doc_id", "text"),
+        "text", "doc_id")
+      .select($"y", $"n", $"bs").as[(Int, Int, Array[Int])].collect()
+    assert(bits(Classifier.trainQualityRdd(spark.sparkContext.parallelize(
+      rows.toSeq :+ ((0, 0, null: Array[Int]))), steps = 3)) == want)
+  }
+
   test("non-power-of-two eta is rejected (exactness contract)") {
     val prep = Classifier.prepareQuality(
       Seq((1L, "the a")).toDF("doc_id", "text"), "text", "doc_id")

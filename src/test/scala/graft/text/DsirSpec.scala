@@ -98,6 +98,16 @@ class DsirSpec extends SparkTestBase {
       "null flags must fit exactly like false flags")
   }
 
+  test("a null-text doc contributes nothing: the LUT without it") {
+    // its bs is null; the fit must skip it, not fail on the decode
+    val base = Seq((1L, "a b a b", true), (2L, "x y x y", false))
+    val lutN = Dsir.fitRatioLut(prep(base :+ ((3L, null: String, true))),
+      "is_target", dim = 4096)
+    val lut = Dsir.fitRatioLut(prep(base), "is_target", dim = 4096)
+    assert(lutN.toSeq.map(java.lang.Double.doubleToLongBits) ==
+      lut.toSeq.map(java.lang.Double.doubleToLongBits))
+  }
+
   test("the salted draw is partition-independent") {
     val docs = (0 until 64).map(i =>
       (i.toLong, if (i % 3 == 0) "a b a b" else "x y x y", i % 3 == 0))

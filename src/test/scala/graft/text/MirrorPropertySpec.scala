@@ -85,7 +85,11 @@ class MirrorPropertySpec extends SparkTestBase {
     val model = NgramLm.train(
       df.filter($"doc_id" % 3 === 0 && $"lang" =!= "fr"),
       "text", "lang")
-    val local = NgramLm.collectModel(model)
+    val local = NgramLmSpec.collected(model)
+    // the edge-trained model is the same model on this messy corpus
+    NgramLmSpec.assertSameModel(NgramLm.trainLocal(NgramLmSpec.normed(
+      df.filter($"doc_id" % 3 === 0 && $"lang" =!= "fr"), "text", "lang")),
+      local)
     val batch = NgramLm.score(df, "doc_id", "text", "lang", model)
       .select($"doc_id", $"n_tok", $"lm_score")
       .as[(Long, Int, Double)].collect()

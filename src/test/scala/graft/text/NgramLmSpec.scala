@@ -1,6 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins [[NgramLm]]'s Stupid Backoff semantics on a hand-computable
@@ -96,7 +98,7 @@ class NgramLmSpec extends AnyFunSuite {
     val bi = model.bi.collect()
       .map(r => (r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
     assert(bi(("a", "bc")) == 2.0 / 3 && bi(("ab", "c")) == 2.0 / 2, bi)
-    val local = NgramLm.collectModel(model)
+    val local = NgramLmSpec.collected(model)
     val docs = Seq((1L, "en", "a bc"), (2L, "en", "ab c"))
     val dist = NgramLm.score(docs.toDF("doc_id", "lang", "text"),
         "doc_id", "text", "lang", model)
@@ -158,6 +160,12 @@ class NgramLmSpec extends AnyFunSuite {
       scores.filter($"doc_id" % 3 === 0)))
     assert(thMap == thSample,
       s"sample-only fit diverged: $thMap vs $thSample")
+    // the edge fits the thresholds locally: the same map, bit for bit
+    val rows = scores.select($"doc_id", $"lang", $"lm_score")
+      .as[(Long, String, Double)].collect().toSeq
+    val local = NgramLm.tertileThresholdsLocal(rows)
+    assertSameThresholds(local, NgramLm.tertileThresholds(scores))
+    assert(local.map { case (l, t) => l -> Some(t._1) } == thMap)
     val gate = NgramLm.tertileGate(scores)
       .select($"doc_id", $"lang", $"lm_score", $"keep")
       .as[(Long, String, Double, Boolean)].collect()
@@ -170,5 +178,106 @@ class NgramLmSpec extends AnyFunSuite {
     // the non-sampled en doc genuinely rides sampled thresholds
     assert(gate.find(_._1 == 4L).exists(_._4 == true))
     assert(gate.filter(_._2 == "fr").forall(!_._4))
+  }
+
+  private def assertSameThresholds(local: Map[String, (Double, Double)],
+      table: DataFrame): Unit = {
+    val want = table.collect().map(r =>
+      r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    def bits(m: Map[String, (Double, Double)]) = m.map { case (l, (a, b)) =>
+      l -> ((java.lang.Double.doubleToLongBits(a),
+        java.lang.Double.doubleToLongBits(b)))
+    }
+    assert(bits(local) == bits(want), s"local $local != table $want")
+  }
+
+  test("local tertile thresholds equal tertileThresholds: ties, m % 3 != 0, " +
+      "a one-doc language") {
+    // en: 7 sampled docs (m = 7 -> ranks 3 and 5) with tied scores
+    // that straddle both ranks, listed out of order; de: 5 sampled
+    // docs (ranks 2 and 4); fr: ONE sampled doc (both ranks 1) plus
+    // unsampled ones that must not count; unsampled en docs carry
+    // extreme scores that would move the ranks if they leaked in
+    val en = Seq((0L, 0.5), (3L, 0.25), (6L, 0.5), (9L, 0.5),
+      (12L, 0.75), (15L, 0.25), (18L, 0.5), (1L, 0.0), (2L, 1.0))
+    val de = Seq((21L, 0.3), (24L, 0.1), (27L, 0.3), (30L, 0.9),
+      (33L, 0.2))
+    val fr = Seq((36L, 0.6), (37L, 0.1), (38L, 0.95))
+    val rows = en.map(r => (r._1, "en", r._2)) ++
+      de.map(r => (r._1, "de", r._2)) ++ fr.map(r => (r._1, "fr", r._2))
+    val scores = rows.map { case (id, l, sc) => (id, l, 10, sc) }
+      .toDF("doc_id", "lang", "n_tok", "lm_score")
+    val local = NgramLm.tertileThresholdsLocal(rows)
+    assertSameThresholds(local, NgramLm.tertileThresholds(scores))
+    assert(local == Map("en" -> ((0.5, 0.5)), "de" -> ((0.2, 0.3)),
+      "fr" -> ((0.6, 0.6))), local)
+  }
+
+  test("trainLocal equals the collected train model bit for bit") {
+    // en: bigram (p q) occurs once (minCount - 1 at minCount 2) and is
+    // pruned while its unigrams stay; (a b) ends docs, so its RAW
+    // count (4) exceeds its one kept child trigram's (a b c: 2) — the
+    // kept trigram's denominator must be the raw 4; the (a,bc)/(ab,c)
+    // key-collision pair; a whitespace-only text that normalizes to
+    // empty; de: a second language sharing tokens with en
+    val target = Seq(
+        ("en", "a b c a b"), ("en", "a b c a b"), ("en", "p q"),
+        ("en", " \t \n "), ("en", ""),
+        ("en", "x bc x bc x"), ("en", "xb c xb c"),
+        ("de", "a b a b a"), ("de", "Der  Die DAS der die das"))
+      .toDF("lang", "text")
+    Seq(1, 2, 3).foreach { minCount =>
+      val want = NgramLmSpec.collected(
+        NgramLm.train(target, "text", "lang", minCount))
+      val got = NgramLm.trainLocal(
+        NgramLmSpec.normed(target, "text", "lang"), minCount)
+      NgramLmSpec.assertSameModel(got, want)
+    }
+    val m2 = NgramLm.trainLocal(NgramLmSpec.normed(target, "text", "lang"))
+    assert(!m2.bi.contains(("en", "p q")) && m2.uni(("en", "p")) == 1L)
+    assert(m2.tri(("en", "a b c")) == 2.0 / 4.0)
+    assert(m2.bi(("en", "x bc")) == 2.0 / 3.0 && m2.bi(("en", "xb c")) == 1.0)
+    assert(m2.stats.keySet == Set("en", "de"))
+  }
+}
+
+/** The spec-side reference for the edge model: [[NgramLm.train]]'s
+  * tables collected into a [[NgramLm.LocalModel]], and a bit-exact
+  * model comparison.
+  */
+object NgramLmSpec {
+
+  import org.scalatest.Assertions._
+
+  def collected(model: NgramLm.Model): NgramLm.LocalModel = {
+    def key(r: org.apache.spark.sql.Row, from: Int, to: Int): String =
+      (from until to).map(r.getString).mkString(" ")
+    NgramLm.LocalModel(
+      model.uni.collect().map(r =>
+        (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
+      model.bi.collect().map(r =>
+        (r.getString(0), key(r, 1, 3)) -> r.getDouble(3)).toMap,
+      model.tri.collect().map(r =>
+        (r.getString(0), key(r, 1, 4)) -> r.getDouble(4)).toMap,
+      model.langStats.collect().map(r =>
+        r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap)
+  }
+
+  /** (lang, norm(text)) rows: [[NgramLm.trainLocal]]'s input. */
+  def normed(df: DataFrame, textCol: String, langCol: String)
+      : RDD[(String, String)] = {
+    import df.sparkSession.implicits._
+    df.select(col(langCol), TextOps.norm(col(textCol)))
+      .as[(String, String)].rdd
+  }
+
+  def assertSameModel(got: NgramLm.LocalModel,
+      want: NgramLm.LocalModel): Unit = {
+    def bits(m: Map[(String, String), Double]) =
+      m.map { case (k, v) => k -> java.lang.Double.doubleToLongBits(v) }
+    assert(got.uni == want.uni, "unigram counts differ")
+    assert(bits(got.bi) == bits(want.bi), "bigram ratios differ")
+    assert(bits(got.tri) == bits(want.tri), "trigram ratios differ")
+    assert(got.stats == want.stats, "per-language stats differ")
   }
 }
