@@ -5,9 +5,11 @@
 # ScalaTest suite first. Run it unfiltered before every snapshot: that
 # is the acceptance check. --only a,b runs and checks just the named
 # queries (SPARK_GRAFT_ONLY for Verify, --only for selfcheck.py), for a
-# quick re-check of the rows a change touches.
+# quick re-check of the rows a change touches; an entry ending in `*`
+# names every query with that prefix (--only 'qst*'), and a name or
+# pattern that matches no query is a FAIL.
 #
-# Usage: scripts/gate.sh [--test] [--only name1,name2,...]
+# Usage: scripts/gate.sh [--test] [--only name1,prefix*,...]
 set -uo pipefail
 cd "$(dirname "$0")/.."
 

@@ -4,7 +4,9 @@ dumps produced by `graft.Verify`, runs each oracle SQL in DuckDB over the
 same testdata, and compares (schema by sorted column name, values after
 row-sort). Usage: selfcheck.py <sfDir> <verifyOutDir> [--only a,b]
 --only checks just the named queries (the SPARK_GRAFT_ONLY filter of a
-Verify run); a name with no oracle is a FAIL.
+Verify run); an entry ending in `*` names every query with that prefix
+(`--only 'qst*'`), as in graft.SparkEntry.onlyFilter. A name with no
+oracle, or a pattern that matches none, is a FAIL.
 """
 import json, sys, glob, os
 import duckdb
@@ -46,6 +48,13 @@ def dtype_mismatch(got: pd.DataFrame, exp: pd.DataFrame):
             bad.append(f"{c}: spark={got[c].dtype}({g}) oracle={exp[c].dtype}({e})")
     return bad
 
+def only_matches(entry: str, name: str) -> bool:
+    """One --only entry against a query name: `prefix*` matches by
+    prefix, anything else by the exact name."""
+    if entry.endswith("*"):
+        return name.startswith(entry[:-1])
+    return name == entry
+
 def main(sf_dir: str, out_dir: str, only=None) -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -54,10 +63,11 @@ def main(sf_dir: str, out_dir: str, only=None) -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted((only or set()) - oracles.keys()):
-        print(f"FAIL {name}: no oracle"); n_fail += 1
+    for entry in sorted(only or ()):
+        if not any(only_matches(entry, name) for name in oracles):
+            print(f"FAIL {entry}: no oracle"); n_fail += 1
     for name, sql in sorted(oracles.items()):
-        if only is not None and name not in only:
+        if only is not None and not any(only_matches(e, name) for e in only):
             continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:

@@ -53,13 +53,10 @@ object Bench {
         }
       }
     }
-    // Optional comma-separated query-name filter for local iteration
-    // (e.g. SPARK_GRAFT_ONLY=qd6_dup_clusters); driver runs unfiltered.
-    // Trim entries and drop blanks so "a, b" matches b and an empty or
-    // all-comma value means "no filter" rather than "run nothing".
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    // Optional query-name filter for local iteration (e.g.
+    // SPARK_GRAFT_ONLY=qd6_dup_clusters or qst*); driver runs
+    // unfiltered. See SparkEntry.onlyFilter.
+    val only = SparkEntry.onlyFilter()
     // Opt-in repeat count for local noise adjudication: time each query
     // N times and report the MIN (the least box-noise-contaminated
     // sample). Default 1 so driver totals stay comparable round-over-
@@ -77,7 +74,7 @@ object Bench {
     // retired rows remain measurable on demand.
     val timed = (if (only.isDefined) SparkEntry.queries
                  else SparkEntry.benchQueries)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.forall(_(name)) }
       .map { case (name, fn) =>
       val samples = (1 to repeats).map { _ =>
         val t0 = System.nanoTime()

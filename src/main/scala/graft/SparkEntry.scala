@@ -148,6 +148,28 @@ object SparkEntry {
         s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
     }
 
+  /** The `SPARK_GRAFT_ONLY` query filter of Verify and Bench, or None
+    * when it is unset or holds no entry. The value is a comma-separated
+    * list of names; an entry ending in `*` matches every name with
+    * that prefix (`qst*`). Entries are trimmed and blanks dropped, so
+    * "a, b" matches b and an all-comma value means "no filter" rather
+    * than "run nothing". `scripts/selfcheck.py --only` expands entries
+    * the same way.
+    */
+  def onlyFilter(env: Map[String, String] = sys.env)
+      : Option[String => Boolean] =
+    env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+      .map(entries => (name: String) => entries.exists(onlyMatches(_, name)))
+
+  /** One `SPARK_GRAFT_ONLY` entry against a query name: `prefix*`
+    * matches by prefix, anything else by the exact name.
+    */
+  private def onlyMatches(entry: String, name: String): Boolean =
+    if (entry.endsWith("*")) name.startsWith(entry.dropRight(1))
+    else name == entry
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

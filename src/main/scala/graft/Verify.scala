@@ -17,15 +17,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated query-name filter for local iteration
-    // (same contract as Bench); the driver runs unfiltered.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    // Optional query-name filter for local iteration (names and
+    // `prefix*` patterns, same contract as Bench); the driver runs
+    // unfiltered.
+    val only = SparkEntry.onlyFilter()
     // A query that throws is logged and the run goes on, so one broken
     // row does not hide the rest; the exit code then says it failed.
     val failed = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.forall(_(name)) }
       .flatMap { case (name, fn) =>
       val err = try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

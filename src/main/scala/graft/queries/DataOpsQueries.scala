@@ -137,18 +137,33 @@ object DataOpsQueries {
     finally prep.unpersist()
   }
 
-  /** Streaming replay of one testdata table. Spark's file streaming
-    * source requires a DIRECTORY, and every table under the sf dirs is
-    * a single flat parquet FILE — so stream the parent dir with a glob
-    * pinned to exactly that file. Goes through [[Tables.load]] first so
+  /** Streaming replay of one testdata table, a single flat parquet
+    * FILE under `dir`. The stream's path is a glob that matches exactly
+    * `<dir>/<table>.parquet` ([[tableGlob]]), so the file source lists
+    * that one file — streaming the parent dir through `pathGlobFilter`
+    * made it list the whole dir tree recursively (Spark's local dirs
+    * included) before filtering. Goes through [[Tables.load]] first so
     * session-level read confs (e.g. nanos-as-long for `events`) are set
     * and the schema matches the batch path bit-for-bit.
     */
-  private def replayTable(s: SparkSession, dir: String, table: String): DataFrame = {
+  private[graft] def replayTable(s: SparkSession, dir: String,
+      table: String): DataFrame = {
     val schema = Tables.load(s, dir, table).schema
-    s.readStream.schema(schema)
-      .option("pathGlobFilter", s"$table.parquet")
-      .parquet(dir)
+    s.readStream.schema(schema).parquet(tableGlob(dir, table))
+  }
+
+  /** A Hadoop glob matching exactly the file `<dir>/<table>.parquet`:
+    * `dir` and `table` with their glob metacharacters escaped, and the
+    * file name wrapped in a one-alternative `{...}` group, so the path
+    * is a glob (the file source lists only what a glob matches) that
+    * can match nothing but that file (ReplayGlobSpec).
+    */
+  private[graft] def tableGlob(dir: String, table: String): String = {
+    def esc(p: String): String = p.flatMap {
+      case c @ ('\\' | '{' | '}' | '[' | ']' | '*' | '?' | ',') => s"\\$c"
+      case c => c.toString
+    }
+    s"${esc(dir)}/{${esc(table)}.parquet}"
   }
 
   /** Drive an AvailableNow streaming plan to completion through a
@@ -215,8 +230,7 @@ object DataOpsQueries {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
     graft.model.Tables.normalizeEventTs(
-      s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
+      s.readStream.schema(rawSchema).parquet(tableGlob(dir, "events")))
   }
 
   /** Materialize `rows` as a one-file parquet dir, hand `f` a stream
@@ -6030,18 +6044,22 @@ object DataOpsQueries {
     // thresholds (tertileThresholds' order statistics), keep =
     // score > t1 with unscorable/unsampled defaulting to false (the
     // tertileGate contract); (4) trained-classifier margin — qt49's
-    // frozen w over prepareQuality's byte-identical feature exprs
-    // (carried columns, not a re-projection); (5) DSIR — qst21's
-    // SAMPLE-frozen ratio LUT + (mn, mx) normalizer as plan-literal
-    // expressions; (6) temperature mixture — qst20's frozen target
-    // table broadcast-attached, the same Mixture.keepExpr draw.
-    // admit = all five gates on the collapse survivor. Scale shape:
-    // the stream pays ONE shuffle (the dedup collapse, keyed by
-    // fingerprint) + two stream-static equi-joins against the doc
-    // lake row + broadcast attaches; every model artifact is KB-sized
-    // driver state fit ONCE in batch, from one shared per-doc feature
-    // pass. Arrivals replay the stored corpus, so frozen-fit ≡
-    // batch-fit and the oracle is the PROVEN
+    // frozen w through Classifier.marginLocal, the scalar twin of
+    // prepareQuality + margin; (5) DSIR — qst21's SAMPLE-frozen ratio
+    // LUT + (mn, mx) normalizer through Dsir.scoreLocal, qst21's own
+    // stream-edge scorer; (6) temperature mixture — qst20's frozen
+    // target table broadcast-attached, the same Mixture.keepExpr draw.
+    // Gates 2-5 run in ONE typed per-doc map over broadcast artifacts
+    // (the Structured Streaming split: fit in batch, apply with a
+    // stateless per-record operator), so the stream plan carries no
+    // higher-order function and no artifact literal — a refreshed
+    // artifact does not change the plan. admit = all five gates on
+    // the collapse survivor. Scale shape: the stream pays ONE shuffle
+    // (the dedup collapse, keyed by fingerprint) + two stream-static
+    // equi-joins against the doc lake row + broadcast attaches; every
+    // model artifact is KB-sized driver state fit ONCE in batch, from
+    // one shared per-doc feature pass. Arrivals replay the stored
+    // corpus, so frozen-fit ≡ batch-fit and the oracle is the PROVEN
     // CTE families chained verbatim: the qx14 lm/clf/tmx arms, qt47's
     // chain under qst21's sample-frozen predicate, qd1's MIN-canonical
     // group, and qt9's gram-join decontamination opened to every
@@ -6071,7 +6089,7 @@ object DataOpsQueries {
         val bcEval = s.sparkContext.broadcast(fit.evalGrams)
         val bcModel = s.sparkContext.broadcast(fit.lm)
         val bcTh = s.sparkContext.broadcast(fit.lmThresholds)
-        val (w, lut, mn, mx) = (fit.w, fit.lut, fit.mn, fit.mx)
+        val bcGates = s.sparkContext.broadcast((fit.w, fit.lut, fit.mn, fit.mx))
         val tDf = fit.targets.toDF("__tmix_g", "grp_n", "share", "target_n")
         // ---- the stream ----
         val sent = Seq(-1L).toDF("doc_id")
@@ -6121,11 +6139,13 @@ object DataOpsQueries {
               Seq("doc_id"))
             .select(col("doc_id"), col("n_copies"), col("lang"),
               col("text"), zqText2.as("text2"))
-          // stages 2 + 3: one typed map against the broadcast gram
-          // set, frozen LM and threshold table — local kernels
-          // ARE the batch kernels (WordNgramHashes.compute is the
-          // codegen entry point; scoreLocal carries the mirror
-          // contract qst17 pins)
+          // stages 2-5: one typed map against the broadcast gram set,
+          // frozen LM, threshold table and classifier/DSIR artifacts —
+          // local kernels ARE the batch kernels
+          // (WordNgramHashes.compute is the codegen entry point;
+          // NgramLm.scoreLocal, Classifier.marginLocal and
+          // Dsir.scoreLocal carry the mirror contracts
+          // MirrorPropertySpec pins)
           val gated = enriched
             .as[(Long, Long, String, String, String)]
             .map { case (id, nCopies, lang, text, text2) =>
@@ -6138,22 +6158,15 @@ object DataOpsQueries {
                 .scoreLocal(text2, lang, bcModel.value)
                 .exists { case (_, sc) =>
                   bcTh.value.get(lang).exists(th => sc > th._1) }
-              (id, nCopies, lang, text, deconKeep, lmKeep)
+              val (w, lut, mn, mx) = bcGates.value
+              val clfKeep = graft.text.Classifier.marginLocal(text, w) > 0.0
+              val dsirKeep = graft.text.Dsir.scoreLocal(id, text, lut, mn, mx)._4
+              (id, nCopies, lang, deconKeep, lmKeep, clfKeep, dsirKeep)
             }
-            .toDF("doc_id", "n_copies", "lang", "text",
-              "decon_keep", "lm_keep")
-          // stages 4-6: pure column expressions + one broadcast attach
-          val verdicts = graft.text.Classifier.prepareQuality(
-              gated, "text", "doc_id",
-              carry = Seq("n_copies", "lang", "text",
-                "decon_keep", "lm_keep"))
-            .withColumn("clf_keep",
-              graft.text.Classifier.margin(col("bs"), col("n"), w)
-                > lit(0.0))
-            .withColumn("__ds_w", graft.text.Dsir.importanceWeight(
-              graft.text.Dsir.bigramBuckets(col("text")), lut))
-            .withColumn("dsir_keep", graft.text.Dsir.keepByWeight(
-              col("doc_id"), col("__ds_w"), lit(mn), lit(mx)))
+            .toDF("doc_id", "n_copies", "lang",
+              "decon_keep", "lm_keep", "clf_keep", "dsir_keep")
+          // stage 6: one broadcast attach
+          val verdicts = gated
             .join(broadcast(tDf),
               col("lang").cast("string") === col("__tmix_g"))
             .withColumn("mix_keep", graft.text.Mixture.keepExpr(

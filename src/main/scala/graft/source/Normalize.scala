@@ -78,8 +78,22 @@ object Normalize {
       .otherwise(to_timestamp(c.cast("string")))
   }
 
-  /** Ticker cleanup at every boundary (ingest.py:245): upper + trim. */
-  def cleanTicker(c: Column): Column = upper(trim(c))
+  /** Ticker cleanup at every boundary (ingest.py:245): upper + trim.
+    * Spark's `upper` maps through ICU, whose case tables are built on
+    * first use in a JVM (about 2 s on a 4-core host), with every task
+    * that reaches it waiting on that class-init lock. A ticker that is
+    * valid all-ASCII UTF-8 (one byte per char) is upper-cased
+    * byte-wise by `translate` instead, which ICU maps identically;
+    * anything else still goes through `upper`, so the output is
+    * bit-identical for every input (NormalizeSpec pins the non-ASCII
+    * cases).
+    */
+  def cleanTicker(c: Column): Column = {
+    val t = trim(c)
+    when(is_valid_utf8(t) && length(t) === octet_length(t),
+      translate(t, "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"))
+      .otherwise(upper(t))
+  }
 
   /** Symbol separator normalization for refdata symbol matching
     * (run_pullers.py:25-36): '/', '-', '^', space → '.', collapse

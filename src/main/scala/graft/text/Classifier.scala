@@ -77,9 +77,9 @@ object Classifier {
       dim: Int = 4096, salt: String = "qc",
       carry: Seq[String] = Nil): DataFrame = {
     // `carry` threads caller columns through the projection unchanged
-    // (a composite like qst23's admission stream prepares the SAME
-    // y/n/bs features mid-pipeline without losing its verdict flags);
-    // the feature expressions stay byte-identical either way
+    // (AdmissionFit's shared per-doc pass prepares the SAME y/n/bs
+    // features next to the other fits' inputs); the feature
+    // expressions stay byte-identical either way
     require(carry.intersect(Seq("y", "n", "bs", "toks", idCol)).isEmpty &&
       carry.distinct.size == carry.size,
       s"carry collides with the projection's own output columns " +
@@ -113,6 +113,32 @@ object Classifier {
     val wLit = typedlit(weights)
     aggregate(bs, lit(0.0), (acc, b) => acc + element_at(wLit, b + 1)) /
       n.cast("double")
+  }
+
+  /** Stateless STREAM-EDGE twin of [[prepareQuality]] + [[margin]]:
+    * the margin of one non-null document text under frozen weights,
+    * for a per-doc kernel holding `weights` as broadcast state (the
+    * [[Dsir.scoreLocal]] class) instead of a plan literal.
+    *
+    * MIRROR CONTRACT: [[TextOps.tokensLocal]]'s tokens, each bucketed
+    * as [[graft.functions.TokenHashes60.hashOne]] of "qc:tok" modulo
+    * the bucket count (prepareQuality's default salt and bs; `weights`
+    * holds one entry per bucket), summed left to right from a 0.0
+    * seed (margin's fold), then divided by the token count
+    * (prepareQuality's n) — the same IEEE ops in the same order, so
+    * the result is bit-equal (MirrorPropertySpec pins it).
+    */
+  def marginLocal(text: String, weights: Array[Double]): Double = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val toks = TextOps.tokensLocal(text)
+    var m = 0.0
+    var i = 0
+    while (i < toks.length) {
+      m += weights((graft.functions.TokenHashes60.hashOne(md,
+        "qc:" + toks(i)) % weights.length).toInt)
+      i += 1
+    }
+    m / toks.length.toDouble
   }
 
   /** K batch-gradient steps over a prepared (y, n, bs) table; returns

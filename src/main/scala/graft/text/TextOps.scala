@@ -40,13 +40,16 @@ object TextOps {
   def tokens(text: Column): Column = split(norm(text), " ")
 
   /** Driver/executor-LOCAL mirror of [[norm]] for the stream-edge
-    * scorers (NgramLm.scoreLocal, Dsir.scoreLocal) — EXACT operation
-    * order: regexp_replace(\s+ -> ' ') innermost, then trim, then
-    * lower. Spark's trim strips ' ' only (UTF8String.trim), so strip
-    * spaces by hand rather than Java's <=0x20 trim; lower is
-    * ASCII-equal between UTF8String and Locale.ROOT on this corpus (a
-    * non-ASCII deployment pins the locale the same way the ADC
-    * typed-map twins pin their fold order).
+    * scorers (NgramLm.scoreLocal, Dsir.scoreLocal,
+    * Classifier.marginLocal) — EXACT operation order:
+    * regexp_replace(\s+ -> ' ') innermost, then trim, then lower.
+    * Spark's trim strips ' ' only (UTF8String.trim), so strip
+    * spaces by hand rather than Java's <=0x20 trim. The column form
+    * lowers through ICU's root-locale case mapping (Spark's
+    * collation-aware `lower`); the JDK's Locale.ROOT mapping agrees
+    * with it on ASCII and on the context- and length-changing cases
+    * MirrorPropertySpec pins (final sigma, dotted capital I, capital
+    * sharp s).
     */
   def normLocal(text: String): String = {
     val collapsed = text.replaceAll("\\s+", " ")

@@ -29,6 +29,22 @@ class SparkEntrySpec extends AnyFunSuite {
       intercept[IllegalArgumentException](cpus(bad))
   }
 
+  test("SPARK_GRAFT_ONLY takes names and prefix* patterns") {
+    def only(v: String) = SparkEntry.onlyFilter(Map("SPARK_GRAFT_ONLY" -> v))
+    assert(SparkEntry.onlyFilter(Map.empty).isEmpty)
+    assert(only("").isEmpty && only(" , ,").isEmpty)
+    val f = only("qst*, qd6_dup_clusters").get
+    assert(f("qst23_stream_admission") && f("qd6_dup_clusters"))
+    assert(!f("qd6_dup_clusters_x") && !f("qs28_ann_serving") && !f("qs"))
+    val names = SparkEntry.queries.keys.toSeq
+    assert(names.contains("qd6_dup_clusters") &&
+      names.exists(_.startsWith("qst")))
+    assert(names.filter(f).toSet ==
+      names.filter(n => n.startsWith("qst") || n == "qd6_dup_clusters").toSet)
+    assert(names.count(only("*").get) == names.size)
+    assert(!names.exists(only("nosuchprefix*").get))
+  }
+
   test("every oracle belongs to a registered query; flagship is registered") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.queries.contains("q32_adjusted_close"))

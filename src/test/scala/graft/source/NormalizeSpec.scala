@@ -48,6 +48,24 @@ class NormalizeSpec extends SparkTestBase {
     assert(df.as[Long].head() == 1455200494606748L)
   }
 
+  test("cleanTicker equals upper(trim(x)) on ASCII and non-ASCII input") {
+    // the ASCII fast path and the ICU arm: padding, empty, whitespace
+    // only, null, and the length-changing / context-sensitive / title-
+    // case mappings (ß → SS, ı → I, İ stays, ǅ → Ǆ, ﬀ → FF), é
+    val cases = Seq("  aApl ", "brk.b", "", "   ", null, "ß", "ı", "İ",
+      "ǅ", "ﬀ", "é", " sße ", "x\u0000y", "~`!@#{}[]|\\")
+    val df = cases.toDF("t")
+    val got = df.select(Normalize.cleanTicker($"t").as("c"),
+        upper(trim($"t")).as("u"))
+      .as[(String, String)].collect().toSeq
+    assert(got.size == cases.size)
+    got.zip(cases).foreach { case ((c, u), in) =>
+      assert(c == u, s"'$in': cleanTicker '$c' != upper(trim) '$u'")
+    }
+    assert(got.map(_._1).take(2) == Seq("AAPL", "BRK.B"))
+    assert(got(4)._1 == null && got(5)._1 == "SS")
+  }
+
   test("symbol normalization: separators to dots, collapse, strip") {
     val df = Seq("brk/b", "BRK-B", "BRK^B", "BRK B", "BRK..B", ".BRK.")
       .toDF("s").select(Normalize.normalizeSymbol($"s").as("n"))

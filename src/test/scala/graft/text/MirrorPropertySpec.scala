@@ -72,6 +72,50 @@ class MirrorPropertySpec extends SparkTestBase {
     prep.unpersist(); wts.unpersist()
   }
 
+  test("Classifier.marginLocal == prepareQuality + margin on 200 random docs") {
+    // edge docs: empty after norm, one token, and a null lang
+    val edges = Seq((1000L, " \t\n ", "en"), (1001L, "Data", "de"),
+      (1002L, "the ROW of a bc", null))
+    val docs = randomDocs(seed = 44, n = 200).map { case (id, text) =>
+      (id, text, if (id % 2 == 0) "en" else "de") } ++ edges
+    val df = docs.toDF("doc_id", "text", "lang")
+    // weights from a real fit (signed, most buckets touched), so the
+    // fold's operand order genuinely matters for the bits
+    val w = Classifier.trainQuality(
+      Classifier.prepareQuality(df, "text", "doc_id"), steps = 2)
+    assert(w.exists(_ > 0.0) && w.exists(_ < 0.0))
+    val batch = Classifier.prepareQuality(df, "text", "doc_id")
+      .select($"doc_id", Classifier.margin($"bs", $"n", w).as("m"))
+      .as[(Long, Double)].collect().toMap
+    assert(batch.size == docs.size)
+    docs.foreach { case (id, text, _) =>
+      val local = Classifier.marginLocal(text, w)
+      assert(java.lang.Double.doubleToLongBits(local) ==
+        java.lang.Double.doubleToLongBits(batch(id)),
+        s"doc $id (${text.take(30)}): local $local != batch ${batch(id)}")
+    }
+    // the gate genuinely splits on this corpus
+    val keeps = docs.count { case (_, text, _) =>
+      Classifier.marginLocal(text, w) > 0.0 }
+    assert(keeps > 0 && keeps < docs.length, s"kept $keeps/${docs.length}")
+  }
+
+  test("TextOps.tokensLocal == tokens, non-ASCII case mappings included") {
+    // final sigma (context-sensitive lowering), dotted capital I (one
+    // char to two), capital sharp s, sharp s, mixed with ASCII
+    val nonAscii = Seq("ΟΔΟΣ ΣΟΦΟΣ", "İSTANBUL İi", "STRAẞE ẞ",
+      "straße Maß", "Σ", " ΑΣ\tΣΑ  ", "Éé ÀÇ İΣẞß")
+    val docs = randomDocs(seed = 45, n = 200).map(_._2) ++ nonAscii
+    val batch = docs.zipWithIndex.toDF("text", "i")
+      .select($"i", TextOps.tokens($"text").as("toks"))
+      .as[(Int, Seq[String])].collect().toMap
+    docs.zipWithIndex.foreach { case (text, i) =>
+      assert(TextOps.tokensLocal(text).toSeq == batch(i),
+        s"'$text': local ${TextOps.tokensLocal(text).toSeq} != " +
+          s"batch ${batch(i)}")
+    }
+  }
+
   test("NgramLm.scoreLocal == NgramLm.score on 200 random docs") {
     val rnd = new scala.util.Random(43)
     val docs = randomDocs(seed = 42, n = 200).map { case (id, text) =>
