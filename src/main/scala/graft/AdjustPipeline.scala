@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.adjust.Adjuster
@@ -22,14 +22,7 @@ import graft.query.Series
 object AdjustPipeline {
   def main(args: Array[String]): Unit = {
     val Array(lakeRoot, refdataDir, outRoot) = args
-    val cpus = SparkEntry.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-adjust")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-adjust", SparkEntry.cpus())
     spark.sparkContext.setLogLevel("WARN")
 
     val bars = LakeReader.read(spark, lakeRoot)

@@ -1,17 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = SparkEntry.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Opt-in repeat count for local noise adjudication: time each query
+    // N times and report the MIN (the least box-noise-contaminated
+    // sample). Default 1 so driver totals stay comparable round-over-
+    // round. Parsed before the session starts, so a bad value fails fast.
+    val repeats = SparkEntry.repeats()
+    val spark = Session.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: pay one-time costs (codegen classloading, typed
     // encoder compilation, parquet footer caches, JIT) before the
@@ -57,16 +54,10 @@ object Bench {
     // SPARK_GRAFT_ONLY=qd6_dup_clusters or qst*); driver runs
     // unfiltered. See SparkEntry.onlyFilter.
     val only = SparkEntry.onlyFilter()
-    // Opt-in repeat count for local noise adjudication: time each query
-    // N times and report the MIN (the least box-noise-contaminated
-    // sample). Default 1 so driver totals stay comparable round-over-
-    // round.
-    val repeats = sys.env.get("SPARK_GRAFT_REPEATS").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(1)
     // A query that throws is recorded by NAME in "failed", never as a
     // time: a time-to-crash entry would make a broken build look FASTER
     // than a working one, and the driver bench could not tell the two
-    // apart.
+    // apart. A run with any failed row exits 1 and writes no record.
     // The bench times the SHIPPING surface (SparkEntry.benchQueries);
     // ladder rows superseded by a benched superior stay gate-only —
     // see SparkEntry.benchRetired for the per-row rationale. An
@@ -137,19 +128,20 @@ object Bench {
     // The authoritative per-query record must never depend on the
     // driver's truncation window: also write the complete JSON to a
     // committed in-repo file — but only for runs in the DRIVER's shape
-    // (unfiltered, at the driver's sf0.1 dir): a scoped
-    // SPARK_GRAFT_ONLY iteration or a small-SF smoke bench must not
-    // overwrite the authoritative record with partial/incomparable
-    // numbers. Core count is part of that shape too: the driver's
-    // 8-core SCALING run at sf0.1 must not clobber the 32-core record
-    // (observed in r20: BENCH_FULL.json silently held the c8 numbers)
+    // (unfiltered, at the driver's sf0.1 dir, no failed row): a scoped
+    // SPARK_GRAFT_ONLY iteration, a small-SF smoke bench or a run
+    // whose total misses a crashed row must not overwrite the
+    // authoritative record with partial/incomparable numbers. Core
+    // count is part of that shape too: the driver's 8-core SCALING run
+    // at sf0.1 must not clobber the 32-core record (observed in r20:
+    // BENCH_FULL.json silently held the c8 numbers)
     // — so the record carries `cpus` and lands in a per-core-count
     // file, BENCH_FULL.json itself only at the driver's 32-core
     // shape. Written relative to the working directory (sbt runs
     // from the repo root), so a worktree or second clone records into
     // ITSELF, never into another checkout. Best-effort — a read-only
     // checkout must not fail the bench.
-    if (only.isEmpty && sfDir.endsWith("sf0.1")) {
+    if (failed.isEmpty && only.isEmpty && sfDir.endsWith("sf0.1")) {
       val record = line.replaceFirst("\\{", s"""{"cpus":$cpus,""")
       val file = if (cpus == 32) "BENCH_FULL.json"
                  else s"BENCH_FULL_c$cpus.json"
@@ -162,5 +154,9 @@ object Bench {
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

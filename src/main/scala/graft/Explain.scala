@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan of named
   * queries (default: a pushdown/broadcast/window representative set) so
   * plan regressions — lost PushedFilters, a broadcast that became a
@@ -36,7 +34,7 @@ object Explain {
         // minhash arm (size filter must be an aggregate + equi-join,
         // never a giant window), and the real resample stage
         "qx4_clean_release", "qd12_minhash_capped", "qm6_resize",
-        "qs14_ann_recall_lloyd2", "qs15_lsh_neardup_capped",
+        "qs15_lsh_neardup_capped",
         // BM25 retrieval (term filter must ride map-side BEFORE the
         // postings exchange; df/stats broadcast; top-k must be
         // TakeOrderedAndProject) and the corpus n-gram survey (partial
@@ -224,12 +222,7 @@ object Explain {
     // write and rewrite temp lakes)
     // (ql5_index_roundtrip is deliberately absent: its body WRITES a
     // temp lake before serving — Explain would leave one behind)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-explain", SparkEntry.cpus())
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

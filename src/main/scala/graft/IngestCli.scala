@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 import graft.ingest.BarsIngest
 
@@ -18,14 +17,7 @@ object IngestCli {
     val lakeRoot = args(1)
     val timeframe = if (args.length >= 3) args(2) else "day"
     val watchlist = args.drop(3).toSeq
-    val cpus = SparkEntry.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-ingest", SparkEntry.cpus())
     spark.sparkContext.setLogLevel("WARN")
     BarsIngest.ingest(spark, csvGlob, lakeRoot, timeframe, watchlist)
     val n = spark.read.parquet(lakeRoot).count()

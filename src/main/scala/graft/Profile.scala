@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job breakdown of one bench row — the optimization-round
   * measurement tool (guide §1): runs named queries exactly as Bench
@@ -17,15 +16,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <queryName> [queryName...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = SparkEntry.cpus(default = 32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-profile", SparkEntry.cpus())
     spark.sparkContext.setLogLevel("WARN")
     // job id -> (t0, group, description); completed jobs appended to log
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, String)]()

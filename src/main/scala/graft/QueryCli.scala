@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.lake.{Export, LakeReader}
@@ -34,14 +33,7 @@ object QueryCli {
       case Array(k, v) => k -> v
     }.toMap
 
-    val cpus = SparkEntry.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-query")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-query", SparkEntry.cpus())
     spark.sparkContext.setLogLevel("WARN")
 
     val endRaw = flags.get("--end")

@@ -35,21 +35,13 @@ object SparkEntry {
     * stays benched, so the bench measures the surface a user deploys
     * rather than re-timing each rung of a design ladder whose lesson
     * is already recorded (BENCH_LOCAL r18 has the measured floor
-    * arithmetic for this exact set):
-    *  - qs17/qs19/qs20/qs21/qs23 — the PQ bit-budget/ADC ladder (m=4
-    *    toy, its Lloyd arm, the k-only lever, the 128-bit recon top,
-    *    cell-less ADC) superseded by the qs24 serving shape (same
-    *    m=16 × k=256 codes, ADC-scored, recall measured every round);
-    *  - qs7/qs10/qs12/qs13 — the int8 ladder and its measured
-    *    negatives, superseded by qs28 (SQ8) and the topKOn
-    *    float-cells contract;
-    *  - qs3/qs8/qs11/qs14 — the float-IVF/recall-iteration ladder,
-    *    superseded by the serving rows (qs22/qs24) and qs35/qs36,
-    *    which measure recall on the deployed shape every round;
+    * arithmetic for this exact set). The ANN design ladder that led to
+    * the qs22/qs24/qs28/qs29 serving rows (int8, PQ bit budgets,
+    * residual IVF-PQ, binary Hamming, float-IVF recall sweeps) was
+    * deleted outright; COVERAGE.md keeps each rung's measured lesson.
     *  - qs4 — single-table LSH, superseded by multi-table qs5 (and
-    *    the qs6/qs15 near-dup forms);
-    *  - qs18/qs25/qs26 — recon-serving predecessor and ADC-variant
-    *    measured negatives, superseded by qs22/qs24/qs29;
+    *    the qs6/qs15 near-dup forms); kept as the only oracle of
+    *    `Similarity.lshTopK`, SimilaritySpec's single-table baseline;
     *  - qs27 — its frozen-model serving chain is qs35's frozen arm
     *    verbatim, re-measured there each round;
     *  - qx11/qx13 — strict subtrees of the full curation release qx14
@@ -102,23 +94,7 @@ object SparkEntry {
     * chain.
     */
   val benchRetiredInto: Map[String, String] = Map(
-    "qs3_ivf_topk" -> "qs22_ivfpq_serving",
     "qs4_lsh_topk" -> "qs5_lsh_multi_topk",
-    "qs7_int8_quant" -> "qs28_sq8_ann",
-    "qs8_ann_recall" -> "qs35_refit_recovery",
-    "qs10_int8_ann" -> "qs28_sq8_ann",
-    "qs11_ann_recall_lloyd" -> "qs36_refit_lloyd",
-    "qs12_int8_ivf_ann" -> "qs28_sq8_ann",
-    "qs13_int8_ivf_float_cells" -> "qs28_sq8_ann",
-    "qs14_ann_recall_lloyd2" -> "qs36_refit_lloyd",
-    "qs17_pq_ann" -> "qs24_ivfpq_adc",
-    "qs18_ivfpq_ann" -> "qs22_ivfpq_serving",
-    "qs19_pq_lloyd" -> "qs24_ivfpq_adc",
-    "qs20_pq_k64" -> "qs24_ivfpq_adc",
-    "qs21_pq_128bit" -> "qs24_ivfpq_adc",
-    "qs23_pq_adc" -> "qs24_ivfpq_adc",
-    "qs25_ivfpq_residual" -> "qs24_ivfpq_adc",
-    "qs26_binary_hamming" -> "qs29_two_stage",
     "qs27_incremental_index" -> "qs35_refit_recovery",
     "qs34_index_health_audit" -> "qst22_stream_index_health",
     "qt46_trained_quality_classifier" -> "qst24_stream_model_swap",
@@ -143,9 +119,23 @@ object SparkEntry {
     * must not silently pick another core count or another record file.
     */
   def cpus(env: Map[String, String] = sys.env, default: Int = 4): Int =
-    env.get("SPARK_GRAFT_CPUS").fold(default) { s =>
+    positiveInt(env, "SPARK_GRAFT_CPUS", default)
+
+  /** `SPARK_GRAFT_REPEATS`, Bench's per-row sample count (default 1),
+    * parsed like [[cpus]]: "three" or "0" throws rather than silently
+    * running one repeat.
+    */
+  def repeats(env: Map[String, String] = sys.env): Int =
+    positiveInt(env, "SPARK_GRAFT_REPEATS", 1)
+
+  /** The env variable `key` as a positive Int, or `default` when it is
+    * unset; any other value throws.
+    */
+  private def positiveInt(env: Map[String, String], key: String,
+      default: Int): Int =
+    env.get(key).fold(default) { s =>
       s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+        s"$key must be a positive integer, got '$s'"))
     }
 
   /** The `SPARK_GRAFT_ONLY` query filter of Verify and Bench, or None

@@ -907,7 +907,7 @@ object Multimodal {
     }
 
   /** Perceptual near-duplicate image pairs over [[aHash64]] codes via
-    * 4×16-bit multi-index banding — the qd4/qs26 Hamming machinery
+    * 4×16-bit multi-index banding — the qd4/qs29 Hamming machinery
     * applied to the image modality. EXACT for `maxDist <= 3`: a pair
     * within Hamming 3 has its ≤3 differing bits spread over 4 bands,
     * so some band matches verbatim (pigeonhole) and the candidate

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
 import graft.adjust.Adjuster
 import graft.dedup.Dedup
@@ -52,7 +51,7 @@ object AdvancedQueries {
   }
 
   /** Exact cosine in DuckDB — same IEEE op sequence as
-    * [[graft.sim.Similarity.cosine]] (qs3-validated form).
+    * [[graft.sim.Similarity.cosine]] (qs4/qs5-validated form).
     */
   /** qs6's oracle CTE fragment (`b`/`cand`/`sc`, no WITH and no final
     * SELECT) — the multi-table LSH near-dup pair set, shared by qs6
@@ -418,37 +417,6 @@ object AdvancedQueries {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // ---- IVF ANN at full probe: partition-then-search machinery must
-    // reproduce the brute-force ranking exactly when every cell is
-    // probed (nprobe == k). Oracle: brute-force cosine top-k in SQL. ----
-    QueryDef("qs3_ivf_topk",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val model = Ivf.fit(e, "vec_id", "embedding", k = 8)
-        Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
-            model, k = 5, nprobe = 8)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some("""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id >= 8 AND vec_id < 16),
-        sc AS (
-          SELECT q.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(q.qe) + 1),
-                i -> CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        r AS (SELECT query_id, neighbor_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-          FROM sc)
-        SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank""")),
-
     // ---- LSH ANN (hyperplane sign buckets): approximate vs brute
     // force, but DETERMINISTIC — the md5-parity hyperplanes are pure
     // arithmetic, so the oracle replays the exact bucket assignment
@@ -590,339 +558,17 @@ object AdvancedQueries {
         ORDER BY vec_id"""
       }),
 
-    // ---- ANN recall measurement: recall@5 of each approximate arm
-    // (single-table LSH, OR-amplified multi-table LSH, full-probe IVF,
-    // PARTIAL-probe IVF) against the exact brute-force ranking, per
-    // query — the number a user tuning planes/tables/nprobe reads.
-    // Everything is deterministic (md5-parity hyperplanes; IVF at full
-    // probe ≡ brute by the qs3 contract), so the oracle recomputes each
-    // arm's top-5 set in SQL and counts the overlap bit-for-bit. The
-    // partial-probe arm (nprobe=2 of k=8 — the real recall/cost
-    // tradeoff) uses a seeds-only model (`iters = 0`: centroids = the 8
-    // lowest-id vectors verbatim), which makes its cell assignment
-    // closed-form SQL over the embeddings table itself; the
-    // Lloyd-refined partial probe has its own oracled row (qs11, which
-    // unrolls the Lloyd step in SQL) plus the multi-iteration
-    // SimilaritySpec measurement. ----
-    QueryDef("qs8_ann_recall",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        // result-sized (queries × k); every arm joins against it
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = Ivf.fit(e, "vec_id", "embedding", k = 8)
-        val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val arms = Seq(
-          "brute" -> brute,
-          "ivf_full" -> Ivf.topK(e, q, "vec_id", "embedding", "query_id",
-            "qe", model, k = 5, nprobe = 8),
-          "ivf_probe2" -> Ivf.topK(e, q, "vec_id", "embedding", "query_id",
-            "qe", seeds, k = 5, nprobe = 2),
-          "lsh_p4x8" -> Similarity.lshTopKMulti(e, q, "vec_id", "embedding",
-            "query_id", "qe", k = 5, planes = 4, tables = 8),
-          "lsh_p6" -> Similarity.lshTopK(e, q, "vec_id", "embedding",
-            "query_id", "qe", k = 5, planes = 6))
-        arms.map { case (m, ann) =>
-          Similarity.recallAtK(ann, brute, k = 5).withColumn("method", lit(m))
-        }.reduce(_ unionByName _)
-          .select(col("method"), col("query_id"),
-            col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("method"), col("query_id"))
-      },
-      Some {
-        val nTables = 8
-        val mBucketCols = (0 until nTables).map(tb =>
-          s"${lshBucketSql("embedding", planes = 4, table = tb)} AS b$tb").mkString(",\n          ")
-        val mAliases = (0 until nTables).map(tb => s"b$tb AS qb$tb").mkString(", ")
-        val mAnyMatch = (0 until nTables).map(tb => s"c.b$tb = mq.qb$tb").mkString(" OR ")
-        s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            ${cosineSql("e.embedding", "qv.qe")} AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        sb AS (SELECT vec_id, embedding,
-          ${lshBucketSql("embedding", planes = 6, table = 0)} AS bucket
-          FROM embeddings),
-        sq AS (SELECT vec_id AS query_id, embedding AS qe, bucket AS qb
-          FROM sb WHERE vec_id < 4),
-        ls0 AS (SELECT sq.query_id, c.vec_id AS neighbor_id,
-            ${cosineSql("c.embedding", "sq.qe")} AS cosine
-          FROM sb c JOIN sq ON c.bucket = sq.qb AND c.vec_id <> sq.query_id),
-        ls AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM ls0) WHERE rk <= 5),
-        mb AS (SELECT vec_id, embedding,
-          $mBucketCols
-          FROM embeddings),
-        mq AS (SELECT vec_id AS query_id, embedding AS qe, $mAliases
-          FROM mb WHERE vec_id < 4),
-        mc AS (SELECT DISTINCT mq.query_id, c.vec_id AS neighbor_id
-          FROM mb c JOIN mq ON ($mAnyMatch) AND c.vec_id <> mq.query_id),
-        ms0 AS (SELECT mc.query_id, mc.neighbor_id,
-            ${cosineSql("cv.embedding", "qv2.embedding")} AS cosine
-          FROM mc
-          JOIN mb cv ON cv.vec_id = mc.neighbor_id
-          JOIN mb qv2 ON qv2.vec_id = mc.query_id),
-        ms AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM ms0) WHERE rk <= 5),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, embedding, cell FROM (
-          SELECT e.vec_id, e.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id
-              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        iv AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM iv0) WHERE rk <= 5),
-        allarms AS (
-          SELECT 'brute' AS method, query_id, neighbor_id FROM br
-          UNION ALL SELECT 'ivf_full', query_id, neighbor_id FROM br
-          UNION ALL SELECT 'ivf_probe2', query_id, neighbor_id FROM iv
-          UNION ALL SELECT 'lsh_p4x8', query_id, neighbor_id FROM ms
-          UNION ALL SELECT 'lsh_p6', query_id, neighbor_id FROM ls),
-        hit AS (SELECT a.method, a.query_id, COUNT(*) AS n_hit
-          FROM allarms a JOIN br ON br.query_id = a.query_id
-            AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.method, a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id),
-        grid AS (SELECT m.method, ex.query_id, ex.n_exact FROM ex
-          CROSS JOIN (VALUES ('brute'), ('ivf_full'), ('ivf_probe2'),
-            ('lsh_p4x8'), ('lsh_p6')) m(method))
-        SELECT grid.method, grid.query_id,
-          CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(grid.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / grid.n_exact AS recall
-        FROM grid LEFT JOIN hit ON hit.method = grid.method
-          AND hit.query_id = grid.query_id
-        ORDER BY grid.method, grid.query_id"""
-      }),
-
-    // ---- ANN recall of a LLOYD-FITTED partial-probe IVF — the fit
-    // users actually deploy (qs8's partial-probe arm is seeds-only so
-    // its assignment is closed-form; this one runs a real Lloyd step).
-    // The oracle cannot inline fitted centroids as literals (they are
-    // data-dependent, and the gate runs two scale factors), so it
-    // UNROLLS the single Lloyd iteration in SQL instead: seeds = the 8
-    // lowest-id vectors; each sample vector (lowest 4096 ids — the
-    // whole table at test SFs, [[graft.sim.Ivf.fit]]'s maxSample)
-    // assigned to its nearest seed under the same (distance, index)
-    // tie rule; per-cell per-dim mean computed as a SEQUENTIAL
-    // ascending-vec_id float sum (list(... ORDER BY vec_id) +
-    // list_reduce) divided by the member count — bit-for-bit the
-    // accumulation order of fit's `sums(c)(i) += v(i)` loop over the
-    // id-sorted sample. Empty cells mirror fit's keep-the-old-centroid
-    // branch via the cent1 LEFT JOIN + COALESCE back to the seed — a
-    // cell only goes empty if two seed vectors are bit-identical (both
-    // assign to the lower-index cell), but the oracle must not silently
-    // diverge if the corpus ever contains duplicate low-id embeddings.
-    // Downstream (corpus assignment, 2-cell probe,
-    // top-5, recall-vs-brute) is the qs8 ivf_probe2 pattern, whose
-    // NearestCell ≡ l2sqSql equivalence the qs8 row already pins. ----
-    QueryDef("qs11_ann_recall_lloyd",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val lloyd = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 1)
-        val ann = Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
-          lloyd, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .withColumn("method", lit("ivf_lloyd1_probe2"))
-          .select(col("method"), col("query_id"),
-            col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some {
-        s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe
-          FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            ${cosineSql("e.embedding", "qv.qe")} AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        samp AS (SELECT vec_id, embedding FROM embeddings
-          ORDER BY vec_id LIMIT 4096),
-        a1 AS (SELECT vec_id, embedding, cell FROM (
-          SELECT s.vec_id, s.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id
-              ORDER BY ${l2sqSql("s.embedding", "c.ce")}, c.cell) AS rk
-          FROM samp s CROSS JOIN seeds c) WHERE rk = 1),
-        a1d AS (SELECT a1.cell, a1.vec_id, t.i,
-            CAST(a1.embedding[t.i] AS DOUBLE) AS v
-          FROM a1, range(1, $EmbeddingDim + 1) t(i)),
-        m1 AS (SELECT cell, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a1d GROUP BY cell, i),
-        cent1 AS (SELECT s.cell, t.i,
-            COALESCE(m1.cv, CAST(s.ce[t.i] AS DOUBLE)) AS cv
-          FROM seeds s CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
-          LEFT JOIN m1 ON m1.cell = s.cell AND m1.i = t.i),
-        cent AS (SELECT cell, list(cv ORDER BY i) AS ce FROM cent1 GROUP BY cell),
-        ca AS (SELECT vec_id, embedding, cell FROM (
-          SELECT e.vec_id, e.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id
-              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        iv AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM iv0) WHERE rk <= 5),
-        hit AS (SELECT iv.query_id, COUNT(*) AS n_hit
-          FROM iv JOIN br ON br.query_id = iv.query_id
-            AND br.neighbor_id = iv.neighbor_id
-          GROUP BY iv.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT 'ivf_lloyd1_probe2' AS method, ex.query_id,
-          CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id"""
-      }),
-
-    // ---- ANN recall of the MULTI-iteration Lloyd fit — the default
-    // users deploy is Ivf.fit(iters = 3); qs11 oracles exactly one
-    // step, this row proves the unrolled-SQL pattern COMPOSES: each
-    // iteration is one more (assign → ordered-float-sum means →
-    // COALESCE-guarded centroid) CTE layer over the previous one, so a
-    // second layer pins iters = 2 bit-for-bit (same sequential
-    // accumulation order, same (distance, index) tie rule, same
-    // empty-cell keep-old-centroid branch — genuinely reachable in
-    // iteration 2, where a fitted centroid can lose all its members).
-    // Downstream probe/recall is the qs11 shape; recall stays < 1 —
-    // a real measured tradeoff, not a full-probe identity. ----
-    QueryDef("qs14_ann_recall_lloyd2",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val lloyd = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2)
-        val ann = Ivf.topK(e, q, "vec_id", "embedding", "query_id", "qe",
-          lloyd, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .withColumn("method", lit("ivf_lloyd2_probe2"))
-          .select(col("method"), col("query_id"),
-            col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some {
-        s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe
-          FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            ${cosineSql("e.embedding", "qv.qe")} AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        samp AS (SELECT vec_id, embedding FROM embeddings
-          ORDER BY vec_id LIMIT 4096),
-        a1 AS (SELECT vec_id, embedding, cell FROM (
-          SELECT s.vec_id, s.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id
-              ORDER BY ${l2sqSql("s.embedding", "c.ce")}, c.cell) AS rk
-          FROM samp s CROSS JOIN seeds c) WHERE rk = 1),
-        a1d AS (SELECT a1.cell, a1.vec_id, t.i,
-            CAST(a1.embedding[t.i] AS DOUBLE) AS v
-          FROM a1, range(1, $EmbeddingDim + 1) t(i)),
-        m1 AS (SELECT cell, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a1d GROUP BY cell, i),
-        c1d AS (SELECT s.cell, t.i,
-            COALESCE(m1.cv, CAST(s.ce[t.i] AS DOUBLE)) AS cv
-          FROM seeds s CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
-          LEFT JOIN m1 ON m1.cell = s.cell AND m1.i = t.i),
-        c1 AS (SELECT cell, list(cv ORDER BY i) AS ce FROM c1d GROUP BY cell),
-        a2 AS (SELECT vec_id, embedding, cell FROM (
-          SELECT s.vec_id, s.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id
-              ORDER BY ${l2sqSql("s.embedding", "c.ce")}, c.cell) AS rk
-          FROM samp s CROSS JOIN c1 c) WHERE rk = 1),
-        a2d AS (SELECT a2.cell, a2.vec_id, t.i,
-            CAST(a2.embedding[t.i] AS DOUBLE) AS v
-          FROM a2, range(1, $EmbeddingDim + 1) t(i)),
-        m2 AS (SELECT cell, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a2d GROUP BY cell, i),
-        c2d AS (SELECT c.cell, t.i, COALESCE(m2.cv, c.ce[t.i]) AS cv
-          FROM c1 c CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
-          LEFT JOIN m2 ON m2.cell = c.cell AND m2.i = t.i),
-        cent AS (SELECT cell, list(cv ORDER BY i) AS ce FROM c2d GROUP BY cell),
-        ca AS (SELECT vec_id, embedding, cell FROM (
-          SELECT e.vec_id, e.embedding, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-              ORDER BY ${l2sqSql("e.embedding", "c.ce")}, c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id
-              ORDER BY ${l2sqSql("qv.qe", "c.ce")}, c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        iv0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            ${cosineSql("ca.embedding", "qp.qe")} AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        iv AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM iv0) WHERE rk <= 5),
-        hit AS (SELECT iv.query_id, COUNT(*) AS n_hit
-          FROM iv JOIN br ON br.query_id = iv.query_id
-            AND br.neighbor_id = iv.neighbor_id
-          GROUP BY iv.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT 'ivf_lloyd2_probe2' AS method, ex.query_id,
-          CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id"""
-      }),
-
     // ---- cluster-balanced sampling (Ivf.balancedSample): k-means
-    // cluster assignment over the WHOLE corpus (same iters=2 fit the
-    // qs14 oracle unrolls), then keep each vector with probability
-    // target/|cell| where target = the smallest cell — every cluster
-    // contributes equally to the sample. The oracle reuses qs14's
-    // two-layer Lloyd CTE chain verbatim, then adds the k-row size
-    // aggregate, the one-row min, and the salted-hash threshold
-    // (qt14's pattern with a "cluster:" salt). Deterministic
+    // cluster assignment over the WHOLE corpus (an iters=2 fit), then
+    // keep each vector with probability target/|cell| where target =
+    // the smallest cell — every cluster contributes equally to the
+    // sample. The oracle unrolls both Lloyd steps in SQL, one
+    // (assign → id-ordered sequential float sums / count → COALESCE
+    // an empty cell back to its old centroid) CTE layer per step —
+    // bit-for-bit Ivf.fit's accumulation order and (distance, index)
+    // tie rule, the one oracle of a Lloyd-refined Ivf.fit — then adds
+    // the k-row size aggregate, the one-row min, and the salted-hash
+    // threshold (qt14's pattern with a "cluster:" salt). Deterministic
     // throughout: totally-ordered assignment ties, exact-long modulo
     // compare, no RNG. ----
     QueryDef("qs16_cluster_balanced",
@@ -945,15 +591,14 @@ object AdvancedQueries {
     // of qx5's text recipe): semantic dedup (qs9's LSH pair graph +
     // transitive closure — drop non-canonical near-dups), cluster-
     // balanced mixing (qs16's keep), and the SERVING-GRADE PQ code
-    // (qs21/qs22's m=16×k=256 — 16 bytes/vector at recall 0.85, not
-    // qs17's m=4 toy) composed into one per-vector verdict +
-    // compressed representation — dedup, mix, compress, the full
-    // corpus-to-index build emitting the artifact qs22 actually
-    // serves from. Vectors in no near-dup cluster are canonical by
-    // definition (LEFT JOIN + COALESCE true). Oracle = the three
-    // proven CTE families chained (WITH RECURSIVE for the closure;
-    // PQ CTEs renamed pseeds/pcb/penc to dodge the Lloyd chain's
-    // names); per-stage flags stay visible. ----
+    // (qs22's m=16×k=256 — 16 bytes/vector at recall 0.85) composed
+    // into one per-vector verdict + compressed representation — dedup,
+    // mix, compress, the full corpus-to-index build emitting the
+    // artifact qs22 actually serves from. Vectors in no near-dup
+    // cluster are canonical by definition (LEFT JOIN + COALESCE true).
+    // Oracle = the three proven CTE families chained (WITH RECURSIVE
+    // for the closure; PQ CTEs renamed pseeds/pcb/penc to dodge the
+    // Lloyd chain's names); per-stage flags stay visible. ----
     QueryDef("qx6_embedding_release",
       (s, dir) => {
         val e = t(s, dir, "embeddings")

@@ -359,7 +359,7 @@ object DataOpsQueries {
           (last_fetch_id <> doc_id) AS refreshed
         FROM fin ORDER BY canonical_url"""
 
-  /** Unrolled K-step BPE-TRAINER oracle — the qs11/qs14 unrolled-Lloyd
+  /** Unrolled K-step BPE-TRAINER oracle — the qs16 unrolled-Lloyd
     * treatment applied to the one other iterative fit in the repo:
     * step i's CTEs count the adjacent pairs of corpus state i (ALL
     * positions, overlapping included), take the argmax with the
@@ -503,7 +503,7 @@ object DataOpsQueries {
 
   /** Unrolled-SQL oracle for qt46: replays [[graft.text.Classifier
     * .trainQuality]]'s K=8 batch-gradient steps as a
-    * materialized-CTE chain (the qs11/qt39 unrolled-fit precedent) —
+    * materialized-CTE chain (the qs16/qt39 unrolled-fit precedent) —
     * per-step gradient sums as floor(g*2^32) BIGINTs (the
     * order-independent fixed-point device), dense weight arrays
     * rebuilt per step for the ordered margin fold (list_reduce ≡ the
@@ -794,9 +794,9 @@ object DataOpsQueries {
           JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
           GROUP BY a.query_id)"""
 
-  /** qs36's Lloyd-refined PQ refit arm, GENERATED per subspace (the
-    * qs19/pqLloydOracleSql pattern at serving-grade m=16 × k=256 ×
-    * subDim=4): each of the 16 subspaces gets one unrolled Lloyd
+  /** qs36's Lloyd-refined PQ refit arm, GENERATED per subspace (qs16's
+    * unrolled-Lloyd layer applied per subspace at serving-grade
+    * m=16 × k=256 × subDim=4): each of the 16 subspaces gets one unrolled Lloyd
     * layer — seed slices from the seed arm's `npseeds` (fitLloyd's
     * seeds ARE the lowest-id sample prefix), sample assignment with
     * the (distance, code) tie rule, id-ordered sequential
@@ -1282,98 +1282,6 @@ object DataOpsQueries {
         WHERE pc.inter / (sa.n + sb.n - pc.inter) >= 0.5
         ORDER BY id_a, id_b"""
 
-  /** qt9's oracle body — shared verbatim by qt13_decontaminate_lake
-    * (same broadcast/shuffle result-identity contract).
-    */
-  /** qs19's oracle, GENERATED per subspace: the qs11/qs14 unrolled-
-    * Lloyd pattern applied independently to each of the 4 subspaces
-    * (seed codebook from the 8 lowest-id slices → sample assignment →
-    * id-ordered sequential means → COALESCE empty codes back to their
-    * seed), then the refined DOUBLE codebooks encode the corpus while
-    * their FLOAT casts (`CAST(x AS REAL)` ≡ JVM `.toFloat`, both IEEE
-    * round-to-nearest-even) build the reconstruction — exactly
-    * [[graft.sim.Pq.fitLloyd]] + [[graft.sim.Pq.reconstruct]]'s
-    * arithmetic. Tail = qs17's brute/score/recall CTEs.
-    */
-  private lazy val pqLloydOracleSql: String = {
-    val l2sub = (vec: String, ce: String, off: String) =>
-      s"""list_reduce(list_transform(range(1, 17),
-            i -> (CAST($vec[CAST($off + i AS INT)] AS DOUBLE) - CAST($ce[i] AS DOUBLE))
-               * (CAST($vec[CAST($off + i AS INT)] AS DOUBLE) - CAST($ce[i] AS DOUBLE))),
-            (x, y) -> x + y)"""
-    val perSub = (0 until 4).map { j =>
-      val o = j * 16
-      s"""scb_$j AS (SELECT code, list_slice(embedding, ${o + 1}, ${o + 16}) AS ce FROM seeds),
-        a1_$j AS (SELECT vec_id, sub, code FROM (
-          SELECT s.vec_id, list_slice(s.embedding, ${o + 1}, ${o + 16}) AS sub, sc.code,
-            ROW_NUMBER() OVER (PARTITION BY s.vec_id ORDER BY
-              ${l2sub("s.embedding", "sc.ce", o.toString)}, sc.code) AS rk
-          FROM samp s CROSS JOIN scb_$j sc) WHERE rk = 1),
-        a1d_$j AS (SELECT a.code, a.vec_id, t.i, CAST(a.sub[t.i] AS DOUBLE) AS v
-          FROM a1_$j a, range(1, 17) t(i)),
-        m1_$j AS (SELECT code, i,
-            list_reduce(list(v ORDER BY vec_id), (x, y) -> x + y) / COUNT(*) AS cv
-          FROM a1d_$j GROUP BY code, i),
-        c1d_$j AS (SELECT sc.code, t.i, COALESCE(m.cv, CAST(sc.ce[t.i] AS DOUBLE)) AS cv
-          FROM scb_$j sc CROSS JOIN range(1, 17) t(i)
-          LEFT JOIN m1_$j m ON m.code = sc.code AND m.i = t.i),
-        c1_$j AS (SELECT code, list(cv ORDER BY i) AS ce FROM c1d_$j GROUP BY code)"""
-    }.mkString(",\n        ")
-    val cbUnion = (0 until 4)
-      .map(j => s"SELECT $j AS j, code, ce FROM c1_$j")
-      .mkString(" UNION ALL ")
-    s"""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        samp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 4096),
-        $perSub,
-        cb1 AS ($cbUnion),
-        cbf AS (SELECT j, code,
-            list_transform(ce, x -> CAST(CAST(x AS REAL) AS DOUBLE)) AS fe
-          FROM cb1),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb1.j, cb1.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb1.j ORDER BY
-              ${l2sub("e.embedding", "cb1.ce", "cb1.j * 16")}, cb1.code) AS rk
-          FROM embeddings e CROSS JOIN cb1) WHERE rk = 1),
-        rec AS (SELECT enc.vec_id, flatten(list(f.fe ORDER BY enc.j)) AS re
-          FROM enc JOIN cbf f ON f.j = enc.j AND f.code = enc.code
-          GROUP BY enc.vec_id),
-        p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id"""
-  }
-
   /** Dictionary-quality oracle (Vocab.dictionaryQuality with topN=200,
     * keepAt=0.8) — shared by the batch arm (qt20) and its streaming
     * ingest-time twin (qst9), pinning arm-equivalence every round.
@@ -1392,6 +1300,9 @@ object DataOpsQueries {
           CAST(n_common AS DOUBLE) / CAST(n_tok AS DOUBLE) >= CAST(0.8 AS DOUBLE) AS keep
         FROM sc ORDER BY doc_id"""
 
+  /** qt9's oracle body — shared verbatim by qt13_decontaminate_lake
+    * (same broadcast/shuffle result-identity contract).
+    */
   private val decontaminateSql =
     s"""WITH d AS (SELECT doc_id, string_split($normSql, ' ') AS toks FROM documents),
         sp AS (SELECT doc_id, toks,
@@ -2404,674 +2315,21 @@ object DataOpsQueries {
             - CAST((cum - n_tok) // 64 AS BIGINT) * 64 AS bin_offset
         FROM c ORDER BY doc_id""")),
 
-    // ---- symmetric int8 embedding quantization (4x storage cut for
-    // ANN serving): per-vector amax/127 scale, round-half-up via IEEE
-    // floor (engine-portable; round() is not) ----
-    QueryDef("qs7_int8_quant",
-      (s, dir) => t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          Similarity.int8Scale(col("embedding")).as("scale"),
-          // codes serialized to csv: the driver compare hashes scalar
-          // columns only (array cells are unhashable on its side)
-          concat_ws(",", transform(
-            Similarity.int8Quantize(col("embedding")),
-            c => c.cast("string"))).as("q_csv"))
-        .orderBy(col("vec_id")),
-      Some("""WITH s AS (SELECT vec_id, embedding,
-          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
-        FROM embeddings)
-        SELECT vec_id, scale,
-          array_to_string(list_transform(embedding, x -> CASE WHEN scale = 0.0 THEN '0'
-            ELSE CAST(CAST(FLOOR(CAST(x AS DOUBLE) / scale + 0.5) AS INT) AS VARCHAR) END), ',') AS q_csv
-        FROM s ORDER BY vec_id""")),
-
-    // ---- int8-serving ANN agreement: top-k searched over the
-    // QUANTIZED corpus (qs7's codes — the 4x-smaller representation an
-    // ANN service actually holds in memory) vs the float top-k, as a
-    // per-query overlap table. Cosine is scale-invariant, so the only
-    // divergence is rounding — measured, not assumed. Quantization,
-    // both rankings, and the overlap are all closed-form SQL. ----
-    QueryDef("qs10_int8_ann",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val corpusI8 = e.select(col("vec_id"),
-          transform(Similarity.int8Quantize(col("embedding")),
-            c => c.cast("float")).as("embedding"))
-        val annI8 = Similarity.bruteTopK(corpusI8, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annI8, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        qz AS (SELECT vec_id, embedding,
-            list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
-          FROM embeddings),
-        zc AS (SELECT vec_id,
-            list_transform(embedding, x -> CASE WHEN scale = 0.0 THEN 0
-              ELSE CAST(FLOOR(CAST(x AS DOUBLE) / scale + 0.5) AS INT) END) AS codes
-          FROM qz),
-        i0 AS (SELECT qv.query_id, z.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(z.codes) + 1),
-              i -> CAST(z.codes[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(z.codes) + 1),
-                i -> CAST(z.codes[i] AS DOUBLE) * CAST(z.codes[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM zc z, qv WHERE z.vec_id <> qv.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- the full PRODUCTION SERVING STACK, oracled: IVF partial
-    // probe (nprobe=2 of 8) over the int8-QUANTIZED corpus — the
-    // 4x-smaller representation an ANN service actually holds — with
-    // float queries, measured as recall vs the float brute top-k. The
-    // model is seeds-only and fit ON the quantized corpus (centroids =
-    // the 8 lowest-id CODE vectors verbatim), so cell assignment,
-    // probe, int8 cosine, and recall are all closed-form SQL — qs8's
-    // IVF CTEs composed with qs10's quantization CTEs. The measured
-    // table IS the point: mean recall collapses to ~0.4 at sf0.01
-    // (two of the four queries at 0.0) vs 0.9 for qs8's float partial
-    // probe,
-    // because int8's PER-VECTOR scale discards magnitude — float
-    // queries probe code-space centroids with mismatched geometry and
-    // pick the wrong cells. Normalizing the corpus BEFORE quantizing
-    // was measured NOT to recover it (still 0.4 mean: the per-vector
-    // code scale keeps distorting L2 cell geometry whatever the input
-    // norms); the real production fix — float-space cell assignment,
-    // int8 only for in-cell scoring — is qs13's row. This pair pins
-    // the lesson as two measurements, not an assumption (the int8
-    // cosine itself is near-exact — qs10's full-probe overlap is
-    // 5/5). ----
-    QueryDef("qs12_int8_ivf_ann",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // int8 codes as float: every value in [-127,127] is exact
-        val corpusI8 = e.select(col("vec_id"),
-          transform(Similarity.int8Quantize(col("embedding")),
-            c => c.cast("float")).as("embedding"))
-        val seeds = Ivf.fit(corpusI8, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topK(corpusI8, q, "vec_id", "embedding",
-          "query_id", "qe", seeds, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        qz AS (SELECT vec_id, embedding,
-            list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
-          FROM embeddings),
-        zc AS (SELECT vec_id,
-            list_transform(embedding, x -> CASE WHEN scale = 0.0 THEN 0
-              ELSE CAST(FLOOR(CAST(x AS DOUBLE) / scale + 0.5) AS INT) END) AS codes
-          FROM qz),
-        cent AS (SELECT codes AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, codes FROM zc ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, codes, cell FROM (
-          SELECT z.vec_id, z.codes, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY z.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(z.codes) + 1),
-                i -> (CAST(z.codes[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(z.codes[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM zc z CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        i0 AS (SELECT qp.query_id, ca.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(ca.codes) + 1),
-              i -> CAST(ca.codes[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(ca.codes) + 1),
-                i -> CAST(ca.codes[i] AS DOUBLE) * CAST(ca.codes[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM ca JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- ... and the FIX, also oracled: the SAME int8-served stack
-    // with cell assignment in FLOAT space — the production IVF layout,
-    // where the coarse quantizer is fixed at index build on floats and
-    // int8 only compresses the stored vectors (Ivf.topKOn). Cells now
-    // match qs8's float ivf_probe2 geometry, so recall recovers to its
-    // 0.9 band and the residual difference is pure in-cell
-    // quantization error (near-zero per qs10). A normalized-corpus
-    // variant was measured during development and does NOT fix qs12
-    // (still 0.4 — per-vector code scale distorts L2 cells regardless
-    // of input norms), which is why assignment space, not input
-    // normalization, is the lever this row pins. ----
-    QueryDef("qs13_int8_ivf_float_cells",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val withCodes = e.select(col("vec_id"), col("embedding"),
-          transform(Similarity.int8Quantize(col("embedding")),
-            c => c.cast("float")).as("codes"))
-        val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKOn(withCodes, q, "vec_id", "embedding", "codes",
-          "query_id", "qe", seeds, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        qz AS (SELECT vec_id, embedding,
-            list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / CAST(127.0 AS DOUBLE) AS scale
-          FROM embeddings),
-        zc AS (SELECT vec_id,
-            list_transform(embedding, x -> CASE WHEN scale = 0.0 THEN 0
-              ELSE CAST(FLOOR(CAST(x AS DOUBLE) / scale + 0.5) AS INT) END) AS codes
-          FROM qz),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        i0 AS (SELECT qp.query_id, z.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(z.codes) + 1),
-              i -> CAST(z.codes[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(z.codes) + 1),
-                i -> CAST(z.codes[i] AS DOUBLE) * CAST(z.codes[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM ca JOIN zc z ON z.vec_id = ca.vec_id
-          JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- PRODUCT QUANTIZATION serving recall (sim/Pq): the corpus
-    // compressed to m=4 code ids from k=8 per-subspace codebooks (64
-    // float32 -> 4 bytes, 64x vs qs10's 4x), queries scored against
-    // the RECONSTRUCTION — exactly the ADC lookup-sum for L2, the same
-    // dot product for cosine — measured as recall@5 vs the float
-    // brute. The fit is the seed-codebook analogue of qs12's iters=0
-    // Ivf seeds (codebook j = the j-th subvectors of the 8 lowest-id
-    // vectors, verbatim), so encode, reconstruct, and score are all
-    // closed-form SQL: per-subspace argmin over list_slice windows,
-    // flatten(list(... ORDER BY j)) reassembly, qs10's cosine/recall
-    // tail. Reconstruction values are original float32 corpus values
-    // (no averaging), so the float cast is exact and the whole chain
-    // hash-matches. Like qs12, the RESULT is the measurement — PQ at
-    // this compression trades real recall, and the driver pins the
-    // exact trade every round. ----
-    QueryDef("qs17_pq_ann",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 16 + 1, t.j * 16 + 16) AS ce
-          FROM seeds s CROSS JOIN range(0, 4) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 17),
-                i -> (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          GROUP BY enc.vec_id),
-        p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- the COMPOSED IVF-PQ stack (the FAISS-style production
-    // layout): coarse cells assigned in FLOAT space — qs13's measured
-    // lesson — partial probe (nprobe=2 of 8), and PQ RECONSTRUCTION
-    // scoring inside the probed cells (qs17's 64x-compressed serving
-    // representation). Pure composition of proven pieces: Ivf.topKOn
-    // scores on the recon column while assigning on the float one, and
-    // the oracle is qs13's cell/probe CTEs with the int8 codes swapped
-    // for qs17's codebook/encode/reconstruct CTEs. The measurement
-    // completes the serving matrix the driver pins every round:
-    // float full probe 1.0 (qs8) / int8 cells 0.4 (qs12) / float
-    // cells + int8 scoring 0.9 (qs13) / PQ flat 0.2 (qs17) /
-    // IVF + PQ in-cell — this row. ----
-    QueryDef("qs18_ivfpq_ann",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8)
-        val withRecon = e.select(col("vec_id"), col("embedding"),
-          graft.sim.Pq.reconstruct(col("embedding"), pq).as("recon"))
-        val seeds = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val ann = Ivf.topKOn(withRecon, q, "vec_id", "embedding", "recon",
-          "query_id", "qe", seeds, k = 5, nprobe = 2)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 16 + 1, t.j * 16 + 16) AS ce
-          FROM seeds s CROSS JOIN range(0, 4) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 17),
-                i -> (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          GROUP BY enc.vec_id),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 2),
-        i0 AS (SELECT qp.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM ca JOIN rec r ON r.vec_id = ca.vec_id
-          JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- Lloyd-REFINED PQ (Pq.fitLloyd, iters=1): does one k-means
-    // step per subspace recover the recall qs17's seed codebooks give
-    // up? The oracle is GENERATED per subspace (pqLloydOracleSql):
-    // four independent copies of qs11/qs14's unrolled-Lloyd CTE chain
-    // over list_slice windows, refined DOUBLE codebooks encoding the
-    // corpus while their REAL casts (≡ JVM .toFloat, both round-to-
-    // nearest-even) build the reconstruction — exactly fitLloyd +
-    // reconstruct's arithmetic. The recall delta vs qs17 is the
-    // measured answer, pinned by the driver every round. ----
-    QueryDef("qs19_pq_lloyd",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fitLloyd(e, "vec_id", "embedding",
-          m = 4, k = 8, iters = 1)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some(pqLloydOracleSql)),
-
-    // ---- PQ at k=64 codes per subspace (m=4, 24 bits total): the
-    // first probe of qs19's "raise k or m" hypothesis — and the
-    // honest answer is that k ALONE does not move it either: measured
-    // recall 0.25 vs k=8's 0.2, the same noise band. Starving a
-    // 64-dim vector to 24 bits loses the ranking no matter how the
-    // codes are placed; qs21 pulls the lever that actually works (the
-    // total bit budget via m), completing the measured curve. Same
-    // seed-codebook fit and oracle shape as qs17 with LIMIT 64. ----
-    QueryDef("qs20_pq_k64",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 4, k = 64)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 64)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 16 + 1, t.j * 16 + 16) AS ce
-          FROM seeds s CROSS JOIN range(0, 4) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 17),
-                i -> (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 16 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          GROUP BY enc.vec_id),
-        p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- PQ at serving-grade bits (m=16 subspaces of 4 dims, k=256
-    // codes = 128 bits / 16 bytes per vector, 16x compression):
-    // measured recall 0.85 — the configuration that actually serves.
-    // The oracled qs17→qs19→qs20→qs21 curve pins the whole lesson:
-    // 12 bits 0.2, +Lloyd 0.2 (training no-op), 24 bits 0.25 (k
-    // alone no-op), 128 bits 0.9 — TOTAL bit budget is the lever, and
-    // an offline sweep (m×k grid) located this point before it was
-    // oracled. Same seed-codebook scheme at subDim=4: slices of 4,
-    // range(1,5) distances, 16-way flatten. ----
-    QueryDef("qs21_pq_128bit",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val recon = graft.sim.Pq.reconstructed(e, "vec_id", "embedding", model)
-        val annPq = Similarity.bruteTopK(recon, q,
-          "vec_id", "embedding", "query_id", "qe", k = 5)
-        Similarity.recallAtK(annPq, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        rec AS (SELECT enc.vec_id, flatten(list(cb.ce ORDER BY enc.j)) AS re
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          GROUP BY enc.vec_id),
-        p0 AS (SELECT qv.query_id, r.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(r.re) + 1),
-              i -> CAST(r.re[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(r.re) + 1),
-                i -> CAST(r.re[i] AS DOUBLE) * CAST(r.re[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM rec r, qv WHERE r.vec_id <> qv.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- the SERVING-GRADE composed IVF-PQ stack — qs18's proven
-    // composition re-pointed at qs21's serving-grade code: float-space
-    // coarse cells (qs13's lesson), partial probe (nprobe=4 of 8), and
-    // 128-bit PQ reconstruction scoring in-cell (m=16×k=256, 16 bytes/
-    // vector, the point the qs17→qs21 bit-budget sweep located at
-    // recall 0.85). This is the row that converts the measured PQ
-    // curve into the index a 100 TB corpus would actually serve from:
+    // ---- the SERVING-GRADE composed IVF-PQ stack: float-space
+    // coarse cells (assigning on compressed codes scrambles cells),
+    // partial probe (nprobe=4 of 8), and 128-bit PQ reconstruction
+    // scoring in-cell (m=16×k=256, 16 bytes/vector, the point a PQ
+    // bit-budget sweep located at recall 0.85 — COVERAGE.md keeps the
+    // sweep). This is the row that converts the measured PQ curve
+    // into the index a 100 TB corpus would actually serve from:
     // compressed 16× in-cell, scanning only the probed cells. Oracle =
-    // qs18's cent/ca/qp/i0 probe CTEs over qs21's LIMIT-256 subDim=4
+    // cent/ca/qp/i0 probe CTEs over LIMIT-256 subDim=4
     // codebook/encode/reconstruct CTEs. Recall vs the float brute is
     // the pinned measurement: 0.85 at nprobe=4 vs the 0.9 flat-PQ
     // ceiling — with only 8 cells on the test corpus the probe
     // fraction is necessarily coarse (half); at real scale the cell
     // count grows with the corpus and the probed FRACTION shrinks at
-    // held recall (the qs8→qs11→qs14 ladder's lesson), while the
-    // in-cell scan stays 16×-compressed. ----
+    // held recall, while the in-cell scan stays 16×-compressed. ----
     QueryDef("qs22_ivfpq_serving",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -3163,115 +2421,18 @@ object DataOpsQueries {
         FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
         ORDER BY ex.query_id""")),
 
-    // ---- ADC lookup-table scoring (Pq.withAdcTables/adcCosine) at the
-    // 128-bit serving point: the SAME ranking problem as qs21 but
-    // scored the production way — per query a m×k dot table computed
-    // ONCE on the query side, per candidate m lookups + m−1 adds over
-    // the 16-byte code column, NO reconstruction materialized (the
-    // dim×4-bytes/row width the reconstruction form ships through the
-    // score join). The dot regroups per subspace, so the oracle mirrors
-    // that exact grouping (per-j list_reduce, then an ORDER BY j fold);
-    // PqSpec pins rank-identity + 1e-12 agreement against the
-    // reconstruction form, and bit-exact L2 via the distance LUT. ----
-    QueryDef("qs23_pq_adc",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
-        val qLut = graft.sim.Pq.withAdcTables(q, "query_id", "qe", pq)
-          .select(col("query_id"), col("adc_lut"), col("adc_qnsq"))
-        val codes = graft.ops.Partitioning.spread(e)
-          .select(col("vec_id"),
-            graft.sim.Pq.codes(col("embedding"), pq).as("codes"))
-        val scored = codes.crossJoin(broadcast(qLut))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            graft.sim.Pq.adcCosine(col("codes"), col("adc_lut"),
-              col("adc_qnsq"), pq).as("cosine"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        val ann = scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qv.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qv.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          CROSS JOIN qv WHERE enc.vec_id <> qv.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
     // ---- the END-STATE serving plan (Ivf.topKAdc): qs22's composition
-    // with qs23's scoring — float-space cells, nprobe=4 partial probe,
-    // and ADC lookup-table sums over the 16-byte code column. Unlike
-    // qs22 (which ships a 64-float reconstruction through the candidate
-    // join to reuse the proven scorer), the corpus side here carries
-    // ONLY (id, cell, codes) — at 100 TB that is the difference between
-    // shuffling 256 B/row and 16 B/row through the probe join — and
-    // each query broadcasts its KB ADC tables. Rank-identical to qs22
-    // by the pinned ADC ≡ reconstruction contract: recall 0.8, same
-    // rows, measured independently by this oracle (probe CTEs + the
-    // per-subspace ADC fold tail). ----
+    // with ADC scoring (Pq.withAdcTables/adcCosine) — float-space
+    // cells, nprobe=4 partial probe, and ADC lookup-table sums over the
+    // 16-byte code column. Unlike qs22 (which ships a 64-float
+    // reconstruction through the candidate join to reuse the proven
+    // scorer), the corpus side here carries ONLY (id, cell, codes) — at
+    // 100 TB that is the difference between shuffling 256 B/row and 16
+    // B/row through the probe join — and each query broadcasts its KB
+    // ADC tables. Rank-identical to qs22 by the pinned ADC ≡
+    // reconstruction contract: recall 0.8, same rows, measured
+    // independently by this oracle (probe CTEs + the per-subspace ADC
+    // fold tail). ----
     QueryDef("qs24_ivfpq_adc",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -3360,242 +2521,6 @@ object DataOpsQueries {
           SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
             ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
         hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- BINARY center-thresholded codes + Hamming ranking (qs26):
-    // the cheapest tier of the compression curve — 64 bits/vector (vs
-    // int8's 512, PQ-128's 128), scored by bit_count(xor), one
-    // popcount per pair. Thresholds are per-dim means over the
-    // 256-lowest-id sample (deterministic sequential sum — raw sign
-    // bits MEASURED degenerate on this almost-all-positive corpus:
-    // every code identical, recall ≈ chance; centering is what
-    // makes binary codes carry signal). TWO measurements, because the
-    // right metric depends on the ROLE: recall@5 is ~chance (0.25 —
-    // a near-duplicate-heavy corpus needs magnitude information to
-    // rank WITHIN a cluster, which 64 bits cannot carry; binary codes
-    // are NOT a serving quantizer — contrast PQ-128's 0.85), while
-    // recall@(5-in-50) measures the coarse-FILTER role binary codes
-    // actually play in production stacks: generate a cheap popcount
-    // top-50, then exact-score the survivors — MEASURED 0.65: a
-    // 50-of-499 (10%) popcount scan keeps 65% of the true top-5. Past the > threshold
-    // compare (identical doubles both engines) everything is integer
-    // — disjoint-bit OR fold mirrored by the oracle's SUM ≡ OR (bit
-    // 63's 1<<63 overflows DuckDB's checked shift, so the oracle
-    // spells the signed constant arithmetically) — the oracle is
-    // exact, no tolerance contract. ----
-    QueryDef("qs26_binary_hamming",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val thr = Similarity.signThresholds(e, "vec_id", "embedding")
-        val cb = graft.ops.Partitioning.spread(e)
-          .select(col("vec_id"),
-            Similarity.signBits(col("embedding"), thr).as("code"))
-        val qb = q.select(col("query_id"),
-          Similarity.signBits(col("qe"), thr).as("qcode"))
-        val scored = cb.crossJoin(broadcast(qb))
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            bit_count(col("code").bitwiseXOR(col("qcode"))).as("dist"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("dist"), col("neighbor_id"))
-        val ranked = scored.withColumn("rank", row_number().over(w))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val r5 = Similarity.recallAtK(ranked.filter(col("rank") <= 5),
-          brute, k = 5)
-        val in50 = brute.filter(col("rank") <= 5)
-          .select(col("query_id"), col("neighbor_id"))
-          .join(ranked.filter(col("rank") <= 50)
-            .select(col("query_id"), col("neighbor_id")),
-            Seq("query_id", "neighbor_id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as("n_in50"))
-        r5.join(in50, Seq("query_id"), "left")
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"),
-            coalesce(col("n_in50"), lit(0L)).cast("int").as("n_in50"),
-            (coalesce(col("n_in50"), lit(0L)).cast("double") /
-              col("n_exact")).as("recall50"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        smp AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 256),
-        thr AS (SELECT r.i,
-            list_reduce(list(CAST(s.embedding[r.i] AS DOUBLE) ORDER BY s.vec_id),
-              (x, y) -> x + y) / CAST(COUNT(*) AS DOUBLE) AS t
-          FROM smp s CROSS JOIN range(1, 65) r(i) GROUP BY r.i),
-        cbits AS (SELECT e.vec_id, CAST(SUM(
-            CASE WHEN CAST(e.embedding[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS code
-          FROM embeddings e CROSS JOIN thr GROUP BY e.vec_id),
-        qbits AS (SELECT qv.query_id, CAST(SUM(
-            CASE WHEN CAST(qv.qe[thr.i] AS DOUBLE) > thr.t
-              THEN CASE WHEN thr.i = 64 THEN -9223372036854775807::BIGINT - 1::BIGINT
-                ELSE 1::BIGINT << CAST(thr.i - 1 AS INT) END
-              ELSE 0::BIGINT END) AS BIGINT) AS qcode
-          FROM qv CROSS JOIN thr GROUP BY qv.query_id),
-        h0 AS (SELECT qb.query_id, cb2.vec_id AS neighbor_id,
-            ROW_NUMBER() OVER (PARTITION BY qb.query_id
-              ORDER BY bit_count(xor(cb2.code, qb.qcode)), cb2.vec_id) AS rk
-          FROM cbits cb2, qbits qb WHERE cb2.vec_id <> qb.query_id),
-        h5 AS (SELECT query_id, neighbor_id FROM h0 WHERE rk <= 5),
-        h50 AS (SELECT query_id, neighbor_id FROM h0 WHERE rk <= 50),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM h5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        hit50 AS (SELECT a.query_id, COUNT(*) AS n_in50 FROM h50 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall,
-          CAST(COALESCE(hit50.n_in50, 0) AS INT) AS n_in50,
-          CAST(COALESCE(hit50.n_in50, 0) AS DOUBLE) / ex.n_exact AS recall50
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        LEFT JOIN hit50 ON hit50.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
-    // ---- RESIDUAL IVF-PQ (the classic FAISS IVFPQ layout): PQ
-    // codebooks learned over per-cell residuals r = x − centroid
-    // (Ivf.withResiduals) instead of raw vectors, reconstruction
-    // x̂ = centroid + r̂. Residuals concentrate around zero (cell-local
-    // variance only), so the same 128-bit budget spends its codes on a
-    // tighter distribution — whether that buys recall at THIS scale is
-    // the measured question, pinned against qs22's raw-vector 0.8.
-    // MEASURED ANSWER: it LOSES here — 0.4 with seed codebooks (this
-    // oracled row), 0.7 with Lloyd-2-trained residual codebooks
-    // (measured offline, same harness) — because the raw-vector seed
-    // codebooks are verbatim corpus points, effectively a 256-entry
-    // exact-match dictionary that suits this near-duplicate-heavy
-    // distribution, while residual slices carry no such alignment.
-    // Two lessons the driver pins: residual encoding is NOT free
-    // recall, and (contrast qs19, where training was a no-op for raw
-    // vectors) the residual form NEEDS trained codebooks to function
-    // at all. Same plan skeleton as qs22 (assignment + encode ride the
-    // scan; centroid table is a KB plan literal; probe join
-    // unchanged); the oracle adds the residual CTE (float-cast
-    // difference, mirrored exactly) and reassembles x̂ = centroid +
-    // code slices. ----
-    QueryDef("qs25_ivfpq_residual",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
-        val wr = Ivf.withResiduals(e, "vec_id", "embedding", cells)
-        val pq = graft.sim.Pq.fit(wr, "vec_id", "resid", m = 16, k = 256)
-        val recon = wr.select(col("vec_id"), col("embedding"),
-          zip_with(element_at(Ivf.centroidsLit(cells), col("cell") + 1),
-            graft.sim.Pq.reconstruct(col("resid"), pq),
-            (c, r) => c + r.cast("double")).as("recon"))
-        val ann = Ivf.topKOn(recon, q, "vec_id", "embedding", "recon",
-          "query_id", "qe", cells, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        rr AS (SELECT e.vec_id, ca.cell,
-            list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE) AS REAL)) AS resid
-          FROM embeddings e JOIN ca ON ca.vec_id = e.vec_id
-          JOIN cent c ON c.cell = ca.cell),
-        pseeds AS (SELECT resid, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, resid FROM rr ORDER BY vec_id LIMIT 256)),
-        pcb AS (SELECT t.j, s.code,
-            list_slice(s.resid, t.j * 4 + 1, t.j * 4 + 4) AS pe
-          FROM pseeds s CROSS JOIN range(0, 16) t(j)),
-        penc AS (SELECT vec_id, j, code FROM (
-          SELECT r2.vec_id, pcb.j, pcb.code,
-            ROW_NUMBER() OVER (PARTITION BY r2.vec_id, pcb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(r2.resid[CAST(pcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(pcb.pe[i] AS DOUBLE))
-                   * (CAST(r2.resid[CAST(pcb.j * 4 + i AS INT)] AS DOUBLE) - CAST(pcb.pe[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              pcb.code) AS rk
-          FROM rr r2 CROSS JOIN pcb) WHERE rk = 1),
-        prec AS (SELECT penc.vec_id, flatten(list(pcb.pe ORDER BY penc.j)) AS re
-          FROM penc JOIN pcb ON pcb.j = penc.j AND pcb.code = penc.code
-          GROUP BY penc.vec_id),
-        xh AS (SELECT rr.vec_id,
-            list_transform(range(1, 65),
-              i -> CAST(c.ce[i] AS DOUBLE) + CAST(p.re[i] AS DOUBLE)) AS xhat
-          FROM rr JOIN prec p ON p.vec_id = rr.vec_id
-          JOIN cent c ON c.cell = rr.cell),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        i0 AS (SELECT qp.query_id, x.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(x.xhat) + 1),
-              i -> CAST(x.xhat[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x2, y) -> x2 + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(x.xhat) + 1),
-                i -> CAST(x.xhat[i] AS DOUBLE) * CAST(x.xhat[i] AS DOUBLE)), (x2, y) -> x2 + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qp.qe) + 1),
-                i -> CAST(qp.qe[i] AS DOUBLE) * CAST(qp.qe[i] AS DOUBLE)), (x2, y) -> x2 + y)))
-            AS cosine
-          FROM ca JOIN xh x ON x.vec_id = ca.vec_id
-          JOIN qp ON ca.cell = qp.cell AND ca.vec_id <> qp.query_id),
-        i5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM i0) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM i5 a
           JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
           GROUP BY a.query_id),
         ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
@@ -3733,13 +2658,13 @@ object DataOpsQueries {
         ORDER BY ex.query_id""")),
 
     // ---- Per-dimension scalar quantization (qs28, the FAISS SQ8
-    // layout) — the missing rung of the compression ladder between
-    // per-vector int8 (qs13, 512 bits) and PQ-128 (qs22, 128 bits):
-    // per-dim affine codes from sample min/max (Similarity.sq8Params —
-    // pure comparisons, engine-exact), round-half-up via IEEE floor
-    // (the qs7 convention), reconstruction riding the corpus scan as a
-    // literal-array expression, served through the qs13/qs22 chain
-    // (float cells, nprobe=4, score on recon). MEASURED: mean recall
+    // layout) — the rung of the compression ladder between per-vector
+    // int8 (512 bits) and PQ-128 (qs22, 128 bits): per-dim affine
+    // codes from sample min/max (Similarity.sq8Params — pure
+    // comparisons, engine-exact), round-half-up via IEEE floor,
+    // reconstruction riding the corpus scan as a literal-array
+    // expression, served through the qs22 chain (float cells,
+    // nprobe=4, score on recon). MEASURED: mean recall
     // 0.95 — ABOVE per-vector int8's 0.9 and PQ-128's 0.8 on the
     // same float-cell nprobe=4 chain: per-dim min/max codes carry
     // visibly less error than a per-vector scale, at 4× PQ's bits.
@@ -3834,13 +2759,13 @@ object DataOpsQueries {
 
     // ---- TWO-STAGE retrieval composite (qs29): the production
     // pattern the compression ladder implies, composed end-to-end as
-    // ONE oracled plan — binary popcount prefilter (qs26's measured
-    // coarse role: top-50 of 499, a 10% scan) → ADC lookup-table
+    // ONE oracled plan — binary popcount prefilter (binary codes'
+    // measured coarse role: top-50 of 499, a 10% scan) → ADC lookup-table
     // shortlist over the candidates' PQ codes (qs24's scorer, top-20)
     // → exact cosine re-rank on the floats of the 20 survivors only
     // (the single full-width read). MEASURED: mean recall 0.65 vs
     // brute — the composite's recall is ceilinged by stage
-    // retentions (stage 1's ceiling is qs26's 0.65 coarse recall;
+    // retentions (stage 1's ceiling is the 0.65 coarse recall;
     // widening shortK back to coarseK recovers that ceiling exactly,
     // the property ServingSpec pins). The
     // knobs are explicit and every stage's quality has its own driver
@@ -3850,7 +2775,7 @@ object DataOpsQueries {
     // window, no corpus-wide sort; ServingSpec pins the plan), and
     // full vectors are fetched for exactly k·|Q| ids. qs32 composes
     // the same tiers INSIDE the IVF probe — the deployable variant
-    // (recall 0.75 vs this scan form's 0.65). Oracle: qs26's cbits/qbits chain
+    // (recall 0.75 vs this scan form's 0.65). Oracle: the cbits/qbits chain
     // → candidate CTE → qs24's enc/ADC fold restricted to candidates
     // → an exact-cosine tail over the shortlist. ----
     QueryDef("qs29_two_stage",
@@ -4438,7 +3363,7 @@ object DataOpsQueries {
     // 0.6 → 0.4 — the honest price of the SEED-fit codebook: 32 of
     // 256 seed slots move to near-identical clump points, displacing
     // old-region coverage. A production refit reclaims that with a
-    // Lloyd pass (Pq.fitLloyd — qs19's measured lever) at the same
+    // Lloyd pass (Pq.fitLloyd — qs36 measures it) at the same
     // re-encode cost; the row pins the seed-fit tradeoff both engines
     // can agree on exactly. Oracle = qs27's frozen ADC chain and the
     // same chain re-seeded from the drifted union, both over qs34's
@@ -4527,18 +3452,18 @@ object DataOpsQueries {
     // old-region pays 0.6 → 0.4, because 32 of 256 seed slots move to
     // near-identical clump points and displace old-region coverage.
     // This row pins the production answer: ONE Lloyd pass per PQ
-    // subspace (Pq.fitLloyd, qs19's measured lever at serving-grade
-    // m=16 × k=256) re-centers the codebooks on the drifted union —
-    // MEASURED drift 0.60 → 0.65 AND old 0.40 → 0.53 (both SFs share
-    // the fixed 500-row fixture), reclaiming most of the seed-fit's
-    // old-region loss at the SAME serving cost (the refit still pays
-    // only the bounded-sample driver fit + the map-only re-encode;
-    // the Lloyd pass adds k·sample driver arithmetic, no extra
-    // cluster pass). Both arms serve the SAME iters=0 coarse cells —
-    // the row isolates the codebook lever, and the oracle's Lloyd arm
-    // reuses the seed arm's cell chain verbatim. Oracle = the shared
-    // drift fixture + the seed refit arm + 16 generated unrolled-Lloyd
-    // subspace chains (the qs19 pattern at serving scale). ----
+    // subspace (Pq.fitLloyd at serving-grade m=16 × k=256) re-centers
+    // the codebooks on the drifted union — MEASURED drift 0.60 → 0.65
+    // AND old 0.40 → 0.53 (both SFs share the fixed 500-row fixture),
+    // reclaiming most of the seed-fit's old-region loss at the SAME
+    // serving cost (the refit still pays only the bounded-sample driver
+    // fit + the map-only re-encode; the Lloyd pass adds k·sample driver
+    // arithmetic, no extra cluster pass). Both arms serve the SAME
+    // iters=0 coarse cells — the row isolates the codebook lever, and
+    // the oracle's Lloyd arm reuses the seed arm's cell chain verbatim.
+    // Oracle = the shared drift fixture + the seed refit arm + 16
+    // generated unrolled-Lloyd subspace chains (ivfRefitLloydArmCtes).
+    // ----
     QueryDef("qs36_refit_lloyd",
       (s, dir) => {
         val e = t(s, dir, "embeddings")

@@ -111,11 +111,12 @@ object Ivf {
     * SEPARATE representation column `scoreCol` — the production IVF
     * layout: the coarse quantizer lives in float space (fixed at index
     * build), while the vectors actually held in memory are compressed
-    * (e.g. int8) codes. Assignment quality is float-grade; only the
-    * in-cell ranking pays the quantization error. (Running assignment
-    * on the codes themselves measurably scrambles cells: the
-    * per-vector int8 scale distorts L2 geometry whatever the input
-    * norms — see qs12/qs13.)
+    * (a PQ reconstruction in qs22, SQ8 in qs28). Assignment quality is
+    * float-grade; only the in-cell ranking pays the quantization
+    * error. (Running assignment on the codes themselves measurably
+    * scrambles cells: a per-vector int8 scale distorted L2 geometry
+    * whatever the input norms, recall 0.4 against 0.9 with float
+    * cells — COVERAGE.md keeps the measurement.)
     */
   def topKOn(
       corpus: DataFrame, queries: DataFrame,
@@ -149,34 +150,16 @@ object Ivf {
   def centroidsLit(model: Model): org.apache.spark.sql.Column =
     array(model.centroids.map(c => array(c.map(x => lit(x)): _*)): _*)
 
-  /** Cell assignment plus the per-cell RESIDUAL column — the encoding
-    * basis of the classic IVF-PQ layout: quantize r = x − c(cell(x))
-    * instead of x itself, because residuals concentrate around zero
-    * (cell-local variance only), so the same PQ bit budget spends its
-    * codes on a tighter distribution. Map-only: assignment rides the
-    * scan (codegen [[graft.functions.NearestCell]]) and the subtraction
-    * is a zip_with against the broadcast-literal centroid table. The
-    * residual is cast back to float32 — the storage width the corpus
-    * vectors themselves use, and the cast keeps [[Pq.fit]]'s
-    * seed-codebook chain closed-form for the oracle.
-    */
-  def withResiduals(corpus: DataFrame, idCol: String, vecCol: String,
-      model: Model): DataFrame = {
-    val cents = centroidsLit(model)
-    assign(corpus, idCol, vecCol, model).withColumn("resid",
-      zip_with(col(vecCol), element_at(cents, col("cell") + 1),
-        (x, c) => (x.cast("double") - c).cast("float")))
-  }
-
   /** The full production IVF-PQ serving plan: coarse cells assigned in
     * float space, partial probe, and ADC lookup-table scoring over the
     * PQ CODE column — the corpus side of the candidate join carries
     * only (id, cell, m-byte codes), never a float vector or a
     * reconstruction, and each query ships its KB-sized ADC tables
     * ([[Pq.withAdcTables]]) through the broadcast. Per candidate the
-    * score is m lookups + m−1 adds. Rank-identical to [[topKOn]] over
-    * [[Pq.reconstructed]] (the ADC ≡ reconstruction contract PqSpec
-    * pins), at a fraction of the shuffled width.
+    * score is m lookups + m−1 adds. Rank-identical to [[topKOn]]
+    * scoring a [[Pq.reconstruct]] column (qs22; the ADC ≡
+    * reconstruction contract PqSpec pins), at a fraction of the
+    * shuffled width.
     */
   def topKAdc(
       corpus: DataFrame, queries: DataFrame,

@@ -8,8 +8,8 @@ import graft.functions.NearestCell
 /** Product quantization — the production ANN compression beyond int8:
   * split each vector into `m` contiguous subspaces, learn a tiny
   * per-subspace codebook, and store each vector as `m` small code ids
-  * (here 64 floats → 4 bytes at m=4, k=8). Serving scores queries
-  * against the RECONSTRUCTION (codebook entry per subspace,
+  * (64 floats → 16 bytes at the serving m=16, k=256). Serving scores
+  * queries against the RECONSTRUCTION (codebook entry per subspace,
   * concatenated) — for L2 this is exactly the classic ADC lookup-table
   * sum, since ||q - x̂||² = Σ_j ||q_j - x̂_j||², and for cosine the
   * same reconstruction dot product.
@@ -27,10 +27,9 @@ import graft.functions.NearestCell
   * subvectors of the k lowest-id vectors, verbatim. Reconstruction
   * values are therefore original float32 corpus values (exactly
   * representable — no Lloyd averaging), which keeps the whole
-  * encode → reconstruct → score chain closed-form in SQL. A
-  * Lloyd-refined fit composes exactly like qs11/qs14's unrolled
-  * oracle layers if wanted; the serving-path semantics measured here
-  * do not depend on it.
+  * encode → reconstruct → score chain closed-form in SQL. The
+  * Lloyd-refined [[fitLloyd]] is oracled by unrolled SQL layers per
+  * subspace (qs36); the serving-path semantics do not depend on it.
   */
 object Pq {
 
@@ -70,7 +69,7 @@ object Pq {
     * k-means steps per subspace over a bounded sample (the `maxSample`
     * lowest-id vectors — deterministic, same contract as
     * [[Ivf.fit]]). Arithmetic mirrors Ivf.fit exactly so the oracle
-    * can unroll it in SQL the qs11/qs14 way, per subspace: sequential
+    * can unroll it in SQL the qs16 way, per subspace (qs36): sequential
     * id-ordered float-into-double sums, one divide per dim, empty
     * codes keep their previous centroid.
     */
@@ -137,14 +136,6 @@ object Pq {
     concat(parts: _*)
   }
 
-  /** Corpus compressed for serving: (idCol, vecCol = reconstruction).
-    * Drop-in for any scorer that took the float corpus.
-    */
-  def reconstructed(corpus: DataFrame, idCol: String, vecCol: String,
-      model: Model): DataFrame =
-    graft.ops.Partitioning.spread(corpus)
-      .select(col(idCol), reconstruct(col(vecCol), model).as(vecCol))
-
   // --------------------------------------------------------------------
   // ADC (asymmetric distance computation) — the production serving form:
   // score codes via per-subspace LOOKUP-TABLE sums instead of
@@ -168,7 +159,7 @@ object Pq {
   //
   // Scope: the tables score against the codebooks' DOUBLE entries,
   // while [[reconstruct]] float-casts them. For seed-fit codebooks
-  // (verbatim float32 corpus values — the qs21/qs22/qs23 serving
+  // (verbatim float32 corpus values — the qs22/qs24 serving
   // configuration) the cast is lossless and the two agree as stated;
   // for [[fitLloyd]] codebooks (averaged doubles) the ADC form is the
   // MORE precise of the two (no float truncation) and the 1e-12 pin

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * one serving plan instead of choosing one.
   *
   *   1. COARSE: popcount over 64-bit center-thresholded sign codes
-  *      (qs26's measured coarse-filter role — a 10% candidate scan
+  *      (binary codes' measured coarse-filter role — a 10% candidate scan
   *      keeps 0.8 of the true top-5 on the test corpus) cuts the
   *      corpus to `coarseK` candidates per query.
   *   2. SHORTLIST: ADC lookup-table scoring over the candidates' PQ
@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
   * codes per row (both built in ONE corpus pass — the stored serving
   * artifact), queries broadcast; no stage shuffles anything wider than
   * (query, id, code) until the final `shortK`-sized float fetch. The
-  * composite's recall is ceilinged by its stage retentions — each
-  * cut is measured in its own driver row (qs26 coarse 0.65, qs24 ADC
-  * 0.8) and qs29 measures the end-to-end point (0.65 at 50→20→5 on
-  * the test corpus; widening shortK to coarseK recovers the stage-1
-  * ceiling exactly, the property ServingSpec pins).
+  * composite's recall is ceilinged by its stage retentions — each cut
+  * was measured on its own (binary coarse 0.65, recorded in
+  * COVERAGE.md; qs24 ADC 0.8) and qs29 measures the end-to-end point
+  * (0.65 at 50→20→5 on the test corpus; widening shortK to coarseK
+  * recovers the stage-1 ceiling exactly, the property ServingSpec
+  * pins).
   */
 object Serving {
 

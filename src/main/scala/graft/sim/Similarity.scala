@@ -77,25 +77,6 @@ object Similarity {
     }.toDF("id_a", "id_b", "cosine")
   }
 
-  /** Per-vector symmetric int8 quantization scale: amax/127, as double.
-    * Quantized storage cuts ANN memory 4× vs float32 — the standard
-    * serving trade.
-    */
-  def int8Scale(vec: Column): Column =
-    array_max(transform(vec, x => abs(x.cast("double")))) / 127.0
-
-  /** Int8 codes: floor(x/scale + 0.5) — round-half-up spelled with
-    * IEEE floor, which is bit-identical across engines (round() is
-    * not: Spark and DuckDB disagree at the last ulp). The all-zero
-    * vector (scale 0) quantizes to zeros instead of dividing by zero.
-    */
-  def int8Quantize(vec: Column): Column = {
-    val s = int8Scale(vec)
-    transform(vec, x =>
-      when(s === 0.0, lit(0))
-        .otherwise(floor(x.cast("double") / s + 0.5).cast("int")))
-  }
-
   /** Per-dimension SQ8 affine parameters — (min_d, max_d) over the
     * `maxSample` lowest-id vectors (the [[Ivf.fit]] bounded-sample
     * contract; dims × 16 bytes of driver state). Min/max are pure
@@ -126,10 +107,12 @@ object Similarity {
   }
 
   /** Per-dimension scalar-quantized reconstruction (SQ8, the FAISS
-    * `SQ8` layout): code_d = round-half-up of (x_d−mn_d)·255/(mx_d−mn_d)
-    * clamped to [0,255] (out-of-sample values saturate), x̂_d =
-    * mn_d + code_d·(mx_d−mn_d)/255. Same IEEE-floor round-half-up as
-    * [[int8Quantize]]; a flat dimension (mx == mn) reconstructs to its
+    * `SQ8` layout): code_d = round-half-up of
+    * (x_d−mn_d)·255/(mx_d−mn_d) clamped to [0,255] (out-of-sample
+    * values saturate), x̂_d = mn_d + code_d·(mx_d−mn_d)/255.
+    * Round-half-up is spelled with IEEE floor, which is bit-identical
+    * across engines (round() is not: Spark and DuckDB disagree at the
+    * last ulp); a flat dimension (mx == mn) reconstructs to its
     * constant. Params ride the plan as literal arrays (dims × 16
     * bytes); the whole encode+decode is a map-side expression on the
     * corpus scan — at serving time the stored artifact is the 1-byte-

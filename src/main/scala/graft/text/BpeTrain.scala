@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * and pair counting is split + explode + count. Each round is one
   * aggregate pass over the state plus a driver-side argmax of ONE row
   * — the bounded-iteration fit shape of the unrolled-Lloyd rows
-  * (qs11/qs14). Round state is cut from its lineage with a
+  * (qs16, qs36). Round state is cut from its lineage with a
   * `localCheckpoint()` per round (lazy — it materializes inside the
   * next round's aggregate job) — the dupClusters iteration lesson,
   * which here bites through the CACHE MANAGER rather than the plan

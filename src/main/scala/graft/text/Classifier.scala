@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *    log doctrine; every operation here is a single IEEE op), and
   *    the learning rate is a power of two so the weight update's
   *    scaling is exact. The DuckDB oracle replays all K steps as an
-  *    unrolled materialized-CTE chain (the qs11/qt39 precedent) and
+  *    unrolled materialized-CTE chain (the qs16/qt39 precedent) and
   *    matches bit-for-bit.
   *
   * Measured on the bench corpus (eta=128, K=8, dim=4096): training

@@ -185,7 +185,7 @@ class PlanGuardSpec extends SparkTestBase {
       // aggregate end-to-end. (Serving.twoStageTopK — the SCAN form —
       // is deliberately absent: its stage-1 popcount scan IS a
       // broadcast-nested-loop over the 8-byte code column by design,
-      // the qs26 coarse-filter shape; stages 2-3 are id equi-joins)
+      // the binary coarse-filter shape; stages 2-3 are id equi-joins)
       "twoStageTopKIvf" -> graft.sim.Serving.twoStageTopKIvf(emb, queries,
         "vec_id", "embedding", "query_id", "qe", cells,
         graft.sim.Similarity.signThresholds(emb, "vec_id", "embedding"),

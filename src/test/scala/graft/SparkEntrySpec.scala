@@ -29,6 +29,15 @@ class SparkEntrySpec extends AnyFunSuite {
       intercept[IllegalArgumentException](cpus(bad))
   }
 
+  test("SPARK_GRAFT_REPEATS parses to a positive Int or fails loudly") {
+    def repeats(v: String) = SparkEntry.repeats(Map("SPARK_GRAFT_REPEATS" -> v))
+    assert(SparkEntry.repeats(Map.empty) == 1)
+    assert(repeats("3") == 3)
+    assert(repeats("03") == 3)
+    for (bad <- Seq("", "*", "0", "-4", "4c", " 4", "4.0", "three"))
+      intercept[IllegalArgumentException](repeats(bad))
+  }
+
   test("SPARK_GRAFT_ONLY takes names and prefix* patterns") {
     def only(v: String) = SparkEntry.onlyFilter(Map("SPARK_GRAFT_ONLY" -> v))
     assert(SparkEntry.onlyFilter(Map.empty).isEmpty)
@@ -48,6 +57,12 @@ class SparkEntrySpec extends AnyFunSuite {
   test("every oracle belongs to a registered query; flagship is registered") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.queries.contains("q32_adjusted_close"))
+  }
+
+  test("every registered query is oracled — Verify writes no row that " +
+      "the DuckDB selfcheck cannot check") {
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
+      s"no oracle: ${SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}")
   }
 
   test("bench retirement only names real queries and shrinks the bench " +

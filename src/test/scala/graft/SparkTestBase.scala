@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suites in the forked test JVM — one Spark context for the whole run.
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("graft-test", 4)
 
   def approx(a: Double, b: Double, eps: Double = 1e-9): Boolean =
     math.abs(a - b) <= eps * math.max(1.0, math.max(math.abs(a), math.abs(b)))

@@ -15,30 +15,6 @@ class SimilaritySpec extends SparkTestBase {
     df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("int8 quantization: codes in range, reconstruction within scale/2, zero-safe") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, Array(1.0f, -0.5f, 0.25f, 0.0f)),
-      (2L, Array(0.0f, 0.0f, 0.0f, 0.0f)),   // zero vector: scale 0, all-0 codes
-      (3L, Array(-2.0f, 2.0f, 1.0f, -1.0f)))
-      .toDF("vec_id", "embedding")
-    val out = rows.select($"vec_id",
-        Similarity.int8Scale($"embedding").as("s"),
-        Similarity.int8Quantize($"embedding").as("q"),
-        $"embedding")
-      .as[(Long, Double, Seq[Int], Seq[Float])].collect()
-    out.foreach { case (id, s, q, v) =>
-      assert(q.forall(c => c >= -127 && c <= 127), s"vec $id codes $q")
-      if (s == 0.0) assert(q.forall(_ == 0), s"vec $id")
-      else v.zip(q).foreach { case (x, c) =>
-        assert(math.abs(c * s - x) <= s / 2 + 1e-12, s"vec $id: $x -> $c")
-      }
-    }
-    // amax element always quantizes to ±127
-    val m = out.map(r => r._1 -> r._3).toMap
-    assert(m(1L).head == 127 && m(3L).take(2) == Seq(-127, 127))
-  }
-
   test("multi-table LSH recall dominates single-table") {
     val brute = pairs(Similarity.bruteTopK(
       e, q, "vec_id", "embedding", "query_id", "qe", k = 5))

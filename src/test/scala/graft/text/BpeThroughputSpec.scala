@@ -1,7 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
 /** Measures the encode kernel against a 10× merge table — the
   * production-table question the bundled 200-merge fixture leaves
@@ -15,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (src/test/resources/graft/bpe/merges_2k.tsv) is trained by the
   * same scripts/train_bpe.py run on the same corpus.
   */
-class BpeThroughputSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeThroughputSpec extends SparkTestBase {
 
   test("2000-merge table encode stays within ~4x of the 200-merge fixture") {
     val big = Bpe.loadResource("/graft/bpe/merges_2k.tsv")

@@ -1,7 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
 /** Pins [[BpeTrain.trainMerges]] against the bundled fixture table —
   * the loop-closing check: the table `scripts/train_bpe.py` froze from
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * trainer learns from the same corpus, so
   * train → tokenize → pack → meter runs end-to-end in-engine.
   */
-class BpeTrainSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeTrainSpec extends SparkTestBase {
 
   import spark.implicits._
 

@@ -1,22 +1,17 @@
 package graft.text
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestBase
 
 /** Pins [[NgramLm]]'s Stupid Backoff semantics on a hand-computable
   * corpus: backoff ladder level selection, the minCount prune, the
   * add-one OOV floor, the fixed-point mean, and the tertile gate's
   * order-statistic thresholds.
   */
-class NgramLmSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NgramLmSpec extends SparkTestBase {
 
   import spark.implicits._
 
