@@ -114,12 +114,12 @@ object SparkEntry {
   def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
     queries.filterNot { case (name, _) => benchRetired(name) }
 
-  /** `SPARK_GRAFT_CPUS` as a positive core count, or `default` when it
-    * is unset. Any other value ("", "*", "0", "4c") throws: a bad value
+  /** `SPARK_GRAFT_CPUS` as a positive core count, or 4 when it is
+    * unset. Any other value ("", "*", "0", "4c") throws: a bad value
     * must not silently pick another core count or another record file.
     */
-  def cpus(env: Map[String, String] = sys.env, default: Int = 4): Int =
-    positiveInt(env, "SPARK_GRAFT_CPUS", default)
+  def cpus(env: Map[String, String] = sys.env): Int =
+    positiveInt(env, "SPARK_GRAFT_CPUS", 4)
 
   /** `SPARK_GRAFT_REPEATS`, Bench's per-row sample count (default 1),
     * parsed like [[cpus]]: "three" or "0" throws rather than silently

@@ -602,23 +602,17 @@ object AdvancedQueries {
     QueryDef("qx6_embedding_release",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        // the Lloyd and PQ fits are independent of the LSH pair graph:
-        // submitted from the fit pool BEFORE the eager pairs
-        // checkpoint so their collect jobs back-fill the pair
-        // materialization (guide §2.6) instead of serializing after it
-        val fLloyd = DataOpsQueries.fitThread("qx6-lloyd") {
-          Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2) }
-        val fPq = DataOpsQueries.fitThread("qx6-pq") {
-          graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256) }
         val pairs = Similarity.lshNearDupPairs(e,
             "vec_id", "embedding", threshold = 0.45, planes = 4, tables = 8)
           .select(col("id_a"), col("id_b")).localCheckpoint()
         val sem = Dedup.dupClusters(pairs, pairsMaterialized = true)
           .select(col("doc_id").as("vec_id"), col("is_canonical"))
-        val lloyd = DataOpsQueries.awaitFit(fLloyd)
+        val lloyd = DataOpsQueries.inFitGroup("qx6-lloyd") {
+          Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2) }
         val bal = Ivf.balancedSample(e, "vec_id", "embedding", lloyd)
           .select(col("vec_id"), col("cell"), col("keep").as("b_keep"))
-        val pq = DataOpsQueries.awaitFit(fPq)
+        val pq = DataOpsQueries.inFitGroup("qx6-pq") {
+          graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256) }
         e.select(col("vec_id"),
             concat_ws(",", transform(
               graft.sim.Pq.codes(col("embedding"), pq),
@@ -690,22 +684,13 @@ object AdvancedQueries {
     QueryDef("qx7_build_then_serve",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        // the three model fits are independent of the LSH pair graph:
-        // submitted from the fit pool BEFORE the eager pairs
-        // checkpoint so their collect jobs back-fill the pair
-        // materialization (guide §2.6) instead of serializing after it
-        val fLloyd = DataOpsQueries.fitThread("qx7-lloyd") {
-          Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2) }
-        val fPq = DataOpsQueries.fitThread("qx7-pq") {
-          graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256) }
-        val fCells = DataOpsQueries.fitThread("qx7-cells") {
-          Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0) }
         val pairs = Similarity.lshNearDupPairs(e,
             "vec_id", "embedding", threshold = 0.45, planes = 4, tables = 8)
           .select(col("id_a"), col("id_b")).localCheckpoint()
         val sem = Dedup.dupClusters(pairs, pairsMaterialized = true)
           .select(col("doc_id").as("vec_id"), col("is_canonical"))
-        val lloyd = DataOpsQueries.awaitFit(fLloyd)
+        val lloyd = DataOpsQueries.inFitGroup("qx7-lloyd") {
+          Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 2) }
         val bal = Ivf.balancedSample(e, "vec_id", "embedding", lloyd)
           .select(col("vec_id"), col("keep").as("b_keep"))
         val released = e.join(bal, Seq("vec_id"))
@@ -714,8 +699,10 @@ object AdvancedQueries {
           .select(col("vec_id"), col("embedding"))
         val q = e.filter(col("vec_id") < 4)
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val pq = DataOpsQueries.awaitFit(fPq)
-        val cells = DataOpsQueries.awaitFit(fCells)
+        val pq = DataOpsQueries.inFitGroup("qx7-pq") {
+          graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256) }
+        val cells = DataOpsQueries.inFitGroup("qx7-cells") {
+          Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0) }
         Ivf.topKAdc(released, q, "vec_id", "embedding",
             "query_id", "qe", cells, pq, k = 5, nprobe = 4)
           .select(col("query_id"), col("neighbor_id"),

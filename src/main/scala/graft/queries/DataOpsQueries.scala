@@ -25,93 +25,11 @@ object DataOpsQueries {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  /** Dedicated bounded pool for concurrent fits: the global EC is the
-    * wrong default once fan-out widens (it sizes to CPU count and is
-    * shared with anything else on the JVM), and an unbounded fan-out
-    * would flood the scheduler with competing job chains. Twelve
-    * threads = the widest composite's peak concurrent demand plus
-    * headroom (qx17: the old-arm thread + both arms' FOUR inner fits
-    * — clf/dsir/mix/lmscore — + the new-arm materialization = 10;
-    * the +2 headroom is deliberate so the pool is never sized
-    * exactly to the peak, the r20-verdict hazard: an arm occupies a
-    * pool thread while awaiting its inner fits, so a pool at exactly
-    * the demand leaves zero slack for the next composite to add a
-    * fit without re-auditing). Fits never spawn fits, so queueing
-    * degrades to serialization, never deadlock. Still under the
-    * core count, so concurrent scans don't thrash the storage pool.
-    * Daemon threads so a finished main never hangs on pool shutdown.
-    */
-  private lazy val fitPool: scala.concurrent.ExecutionContext = {
-    val seq = new java.util.concurrent.atomic.AtomicInteger(0)
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        12,
-        (r: Runnable) => {
-          val th = new Thread(r, s"graft-fit-${seq.incrementAndGet()}")
-          th.setDaemon(true)
-          th
-        }))
-  }
-
-  /** Submit an independent eager model fit from its own thread — the
-    * composite-floor lever (SCALING.md): Spark's job submission is
-    * thread-safe, and a fit's VALUE cannot depend on completion
-    * order, so a composite's independent fits pipeline through the
-    * scheduler instead of serializing the driver. Fits with a data
-    * dependency stay sequential at the call sites.
-    *
-    * `tag` ("row-fit", e.g. "qst23-lm") becomes the Spark job group
-    * for every job the fit submits: concurrent fits are attributable
-    * in the UI / event logs and cancellable as a group
-    * (`sc.cancelJobGroup(s"graft-fit-$tag")`, interruptOnCancel so a
-    * blocked fit thread is actually interrupted). Job groups are
-    * thread-local, so tagging inside the pool thread cannot leak onto
-    * the caller's jobs; cleared after the fit because pool threads
-    * are reused.
-    */
-  /** A submitted fit: the pending value plus the job-group tag that
-    * owns every Spark job the fit submits — what [[awaitFit]] needs to
-    * cancel the group if the fit wedges.
-    */
-  private[graft] final case class Fit[T](
-      future: scala.concurrent.Future[T], group: String)
-
-  private[graft] def fitThread[T](tag: String)(body: => T): Fit[T] = {
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val group = s"graft-fit-$tag"
-    Fit(scala.concurrent.Future {
-      sc.setJobGroup(group, s"concurrent model fit: $tag",
-        interruptOnCancel = true)
-      try body finally sc.clearJobGroup()
-    }(fitPool), group)
-  }
-
-  /** Bounded await: a wedged fit (hung scan, deadlocked source) must
-    * fail the row loudly with a TimeoutException, not hang the
-    * verify/bench harness forever. 30 min is ~200x the slowest fit
-    * observed at sf0.1 and still far under any driver wall-clock. On
-    * timeout the fit's job group is CANCELLED (interruptOnCancel
-    * interrupts the blocked fit thread too) so the abandoned fit
-    * releases its pool thread and its jobs stop competing for
-    * executors — without this, a few wedged fits would permanently
-    * exhaust the bounded fit pool.
-    */
-  private[graft] def awaitFit[T](f: Fit[T]): T =
-    try scala.concurrent.Await.result(f.future,
-      scala.concurrent.duration.Duration(30,
-        java.util.concurrent.TimeUnit.MINUTES))
-    catch {
-      case e: java.util.concurrent.TimeoutException =>
-        try org.apache.spark.sql.SparkSession.active.sparkContext
-          .cancelJobGroup(f.group)
-        catch { case _: Throwable => () }
-        throw e
-    }
-
-  /** Run `body` on the caller's thread under the fit job group
-    * `graft-fit-<tag>` — a composite's fits that run in sequence stay
-    * attributable and cancellable like [[fitThread]]'s — then restore
-    * the caller's own job-group properties.
+  /** Run an eager model fit on the caller's thread under the fit job
+    * group `graft-fit-<tag>` ("row-fit", e.g. "qst24-w0"), so every
+    * Spark job the fit submits is attributable to it and cancellable
+    * as a group (`sc.cancelJobGroup`, interruptOnCancel); then restore
+    * the caller's own job-group properties, so groups nest.
     */
   private[graft] def inFitGroup[T](tag: String)(body: => T): T = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
@@ -1468,20 +1386,11 @@ object DataOpsQueries {
     val scores = graft.text.NgramLm.score(
         docs, "doc_id", "text2", "lang", model)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the whole LM branch (train aggregates + corpus
-    // scoring) from the fit pool: its first consumer otherwise sits
-    // inside the verdict arm's EXECUTION, serializing the LM chain
-    // after the fits instead of alongside them (guide §2.6 — the
-    // same lever as the clf/dsir/mix fits below; the persist's two
-    // verdict consumers then read the materialized cache)
-    val fLm = fitThread(s"$fitTag-lmscore") { scores.count() }
     val quality = graft.text.NgramLm.tertileGate(scores)
       .select(col("doc_id"), col("keep").as("lm_keep"))
-    // the three EAGER fits below (8-step GD, DSIR ratio LUT, mixture
-    // targets) are independent job chains — submitted from separate
-    // threads so the scheduler pipelines them (the fitThread
-    // composite-floor lever)
-    val fClf = fitThread(s"$fitTag-clf") {
+    // the three EAGER fits (8-step GD, DSIR ratio LUT, mixture
+    // targets), each under its own fit job group
+    val (prepC, w) = inFitGroup(s"$fitTag-clf") {
       val prepC = graft.text.Classifier.prepareQuality(
           graft.ops.Partitioning.spread(
             t(s, dir, "documents").filter(pred)),
@@ -1489,7 +1398,10 @@ object DataOpsQueries {
         .persist(StorageLevel.MEMORY_AND_DISK)
       (prepC, graft.text.Classifier.trainQuality(prepC))
     }
-    val fDsir = fitThread(s"$fitTag-dsir") {
+    val clf = prepC.select(col("doc_id"),
+      (graft.text.Classifier.margin(col("bs"), col("n"), w) > lit(0.0))
+        .as("clf_keep"))
+    val (prepD, lut) = inFitGroup(s"$fitTag-dsir") {
       val prepD = graft.ops.Partitioning.spread(
           t(s, dir, "documents").filter(pred))
         .select(col("doc_id"),
@@ -1499,16 +1411,6 @@ object DataOpsQueries {
         .persist(StorageLevel.MEMORY_AND_DISK)
       (prepD, graft.text.Dsir.fitRatioLut(prepD, "is_target"))
     }
-    val fMix = fitThread(s"$fitTag-mix") {
-      graft.text.Mixture.temperatureMixtureKeep(
-          t(s, dir, "documents").filter(pred), "doc_id", "lang")
-        .select(col("doc_id"), col("keep").as("mix_keep"))
-    }
-    val (prepC, w) = awaitFit(fClf)
-    val clf = prepC.select(col("doc_id"),
-      (graft.text.Classifier.margin(col("bs"), col("n"), w) > lit(0.0))
-        .as("clf_keep"))
-    val (prepD, lut) = awaitFit(fDsir)
     val wts = prepD.select(col("doc_id"),
         graft.text.Dsir.importanceWeight(col("bs"), lut).as("weight"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1518,8 +1420,11 @@ object DataOpsQueries {
       .select(col("doc_id"),
         graft.text.Dsir.keepByWeight(col("doc_id"), col("weight"),
           col("mn"), col("mw")).as("dsir_keep"))
-    val mix = awaitFit(fMix)
-    awaitFit(fLm)
+    val mix = inFitGroup(s"$fitTag-mix") {
+      graft.text.Mixture.temperatureMixtureKeep(
+          t(s, dir, "documents").filter(pred), "doc_id", "lang")
+        .select(col("doc_id"), col("keep").as("mix_keep"))
+    }
     val verdict = content.join(prov, "doc_id")
       .join(quality, Seq("doc_id"), "left")
       .join(clf, "doc_id").join(dsir, "doc_id").join(mix, "doc_id")
@@ -3065,12 +2970,6 @@ object DataOpsQueries {
           val brute = Similarity.bruteTopK(live, q,
               "vec_id", "embedding", "query_id", "qe", k = 5)
             .persist(StorageLevel.MEMORY_AND_DISK)
-          // the brute reference ranking's only consumer is the final
-          // recall join, but nothing else depends on it — materialize
-          // it from a pool thread so its stages back-fill the index
-          // build/write instead of serializing after the serving pass
-          // (guide §2.6, the fitThread lever)
-          val fBrute = fitThread("qs33-brute") { brute.count() }
           val thr = Similarity.signThresholds(e, "vec_id", "embedding")
           val pq = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 16, k = 256)
           val cells = Ivf.fit(e, "vec_id", "embedding", k = 8, iters = 0)
@@ -3097,7 +2996,6 @@ object DataOpsQueries {
             .persist(StorageLevel.MEMORY_AND_DISK)
           require(ann.filter(col("neighbor_id") % 8 === 3).isEmpty,
             "two-stage serving must never return a tombstoned id")
-          awaitFit(fBrute)
           val res = Similarity.recallAtK(ann, brute, k = 5)
             .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
               col("n_exact").cast("int").as("n_exact"), col("recall"))
@@ -3396,24 +3294,18 @@ object DataOpsQueries {
             .select(col("vec_id"),
               graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
               col("cell"))
-        // the three remaining model fits are independent given the
-        // persisted drifted union — submitted from separate threads
-        // (the fitThread composite-floor lever)
-        val fPqOld = fitThread("qs35-pq_old") { graft.sim.Pq.fit(old, "vec_id",
-          "embedding", m = 16, k = 256) }
-        val fCellsNew = fitThread("qs35-cells_new") { Ivf.fit(drifted, "vec_id",
-          "embedding", k = 8, iters = 0) }
-        val fPqNew = fitThread("qs35-pq_new") { graft.sim.Pq.fit(drifted, "vec_id",
-          "embedding", m = 16, k = 256) }
         // FROZEN arm: the stale qs27 models over the drifted corpus
-        val pqOld = awaitFit(fPqOld)
+        val pqOld = inFitGroup("qs35-pq_old") { graft.sim.Pq.fit(old,
+          "vec_id", "embedding", m = 16, k = 256) }
         val annFrozen = Ivf.topKAdcOnIndex(
           enc(old, cellsOld, pqOld).unionByName(enc(dressed, cellsOld, pqOld)),
           q, "vec_id", "query_id", "qe", cellsOld, pqOld, k = 5, nprobe = 4)
         // REFIT arm: alarm fired — refit on the drifted union,
         // re-encode map-only
-        val cellsNew = awaitFit(fCellsNew)
-        val pqNew = awaitFit(fPqNew)
+        val cellsNew = inFitGroup("qs35-cells_new") { Ivf.fit(drifted,
+          "vec_id", "embedding", k = 8, iters = 0) }
+        val pqNew = inFitGroup("qs35-pq_new") { graft.sim.Pq.fit(drifted,
+          "vec_id", "embedding", m = 16, k = 256) }
         val annRefit = Ivf.topKAdcOnIndex(enc(drifted, cellsNew, pqNew),
           q, "vec_id", "query_id", "qe", cellsNew, pqNew, k = 5, nprobe = 4)
         val rf = Similarity.recallAtK(annFrozen, brute, k = 5)
@@ -3484,16 +3376,8 @@ object DataOpsQueries {
         val brute = Similarity.bruteTopK(drifted, q,
             "vec_id", "embedding", "query_id", "qe", k = 5)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        // the three fits over the persisted drifted union are
-        // independent — submitted from separate threads (the
-        // fitThread composite-floor lever)
-        val fCellsNew = fitThread("qs36-cells_new") { Ivf.fit(drifted, "vec_id",
-          "embedding", k = 8, iters = 0) }
-        val fSeedPq = fitThread("qs36-pq_seed") { graft.sim.Pq.fit(drifted, "vec_id",
-          "embedding", m = 16, k = 256) }
-        val fLloydPq = fitThread("qs36-pq_lloyd") { graft.sim.Pq.fitLloyd(drifted,
-          "vec_id", "embedding", m = 16, k = 256, iters = 1) }
-        val cellsNew = awaitFit(fCellsNew)
+        val cellsNew = inFitGroup("qs36-cells_new") { Ivf.fit(drifted,
+          "vec_id", "embedding", k = 8, iters = 0) }
         def serve(pq: graft.sim.Pq.Model): DataFrame =
           Ivf.topKAdcOnIndex(
             Ivf.assign(drifted, "vec_id", "embedding", cellsNew)
@@ -3501,8 +3385,11 @@ object DataOpsQueries {
                 graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
                 col("cell")),
             q, "vec_id", "query_id", "qe", cellsNew, pq, k = 5, nprobe = 4)
-        val seedPq = awaitFit(fSeedPq)
-        val lloydPq = awaitFit(fLloydPq)
+        val seedPq = inFitGroup("qs36-pq_seed") { graft.sim.Pq.fit(drifted,
+          "vec_id", "embedding", m = 16, k = 256) }
+        val lloydPq = inFitGroup("qs36-pq_lloyd") {
+          graft.sim.Pq.fitLloyd(drifted, "vec_id", "embedding",
+            m = 16, k = 256, iters = 1) }
         val rs = Similarity.recallAtK(serve(seedPq), brute, k = 5)
           .select(col("query_id"), col("n_hit").as("ns"),
             col("n_exact"), col("recall").as("recall_seed"))
@@ -4784,14 +4671,9 @@ object DataOpsQueries {
               (size(TextOps.tokens(col("text"))) / lit(2)).cast("int"))))
             .otherwise(col("text")).as("text"))
         // the two frozen artifacts of the alarm → retrain cycle
-        // (qt49's fits verbatim; caches released after the eager GD).
-        // The trains are independent job chains — submitted from two
-        // threads so the scheduler pipelines them (the fitThread
-        // composite-floor lever)
-        val (fW0, fW1) = (fitThread("qst24-w0")(trainQualityOn(docs)),
-          fitThread("qst24-w1")(trainQualityOn(dressed)))
-        val w0 = awaitFit(fW0)
-        val w1 = awaitFit(fW1)
+        // (qt49's fits verbatim; caches released after the eager GD)
+        val w0 = inFitGroup("qst24-w0")(trainQualityOn(docs))
+        val w1 = inFitGroup("qst24-w1")(trainQualityOn(dressed))
         import s.implicits._
         val sent = Seq(-1L).toDF("doc_id")
           .select(col("doc_id"), lit("").as("text"),
@@ -6212,24 +6094,17 @@ object DataOpsQueries {
     // disambiguates the base table) — then diffed; the verdict
     // SELECT is the shared curationVerdictSelectSql, so the arms
     // cannot desynchronize from qx14. At 100 TB: two verdict chains
-    // (each linear, fits pipelined) + ONE doc_id equi-join — the
+    // (each linear, its fits in sequence) + ONE doc_id equi-join — the
     // diff itself adds no new shuffle class; in production the N-1
     // verdict is the stored qx15 artifact, making this N's cost
     // plus one join. ----
     QueryDef("qx16_release_lineage",
       (s, dir) => {
-        // the old arm builds on a fit thread so the two arms'
-        // independent model fits (LM, GD classifier, DSIR LUT,
-        // mixture targets) pipeline ACROSS arms as well as within
-        // them: an arm occupies one pool thread while its inner fits
-        // run on the rest, and fits never spawn fits, so the bounded
-        // pool cannot deadlock
-        val fOld = fitThread("qx16-arm_old") {
-          curationRelease(s, dir, col("doc_id") % 3 =!= 1,
-            fitTag = "qx16-old", sorted = false) }
+        val vOld = curationRelease(s, dir, col("doc_id") % 3 =!= 1,
+          fitTag = "qx16-old", sorted = false)
         val vNew = curationRelease(s, dir, fitTag = "qx16-new",
           sorted = false)
-        lineageDiff(vNew, awaitFit(fOld))
+        lineageDiff(vNew, vOld)
       },
       Some(lineageOracleSql)),
 
@@ -6251,23 +6126,11 @@ object DataOpsQueries {
         val tmp = java.nio.file.Files.createTempDirectory("qx17_manifest")
         val lake = s"$tmp/verdict_n1"
         try {
-          val fOld = fitThread("qx17-arm_old") {
-            curationRelease(s, dir, col("doc_id") % 3 =!= 1,
-              fitTag = "qx17-old", sorted = false) }
-          val vNew = curationRelease(s, dir, fitTag = "qx17-new",
-            sorted = false)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          // the two arm EXECUTIONS are as independent as their fits:
-          // materialize the new verdict from a pool thread while the
-          // main thread writes the old-arm manifest, so the row's wall
-          // cost is max(arm exec) not Σ — the fitThread lever applied
-          // one level up (same values: the diff below consumes the
-          // persisted materialization)
-          val fNewMat = fitThread("qx17-new-mat") { vNew.count() }
           // persisted: the old arm has TWO consumers (the manifest
           // write and the cardinality require) — the multi-consumer
           // persist discipline, released once both have run
-          val vOld = awaitFit(fOld)
+          val vOld = curationRelease(s, dir, col("doc_id") % 3 =!= 1,
+              fitTag = "qx17-old", sorted = false)
             .persist(StorageLevel.MEMORY_AND_DISK)
           vOld.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(lake)
@@ -6286,8 +6149,12 @@ object DataOpsQueries {
           // executors before the finally deletes the lake, and the
           // returned frame is those very rows (same columns, same
           // types — the createDataFrame this replaces was a
-          // driver-side copy of exactly this projection)
-          awaitFit(fNewMat)
+          // driver-side copy of exactly this projection). The new arm
+          // is persisted because the diff's global sort reads it twice
+          // (range sampling, then the sort itself).
+          val vNew = curationRelease(s, dir, fitTag = "qx17-new",
+              sorted = false)
+            .persist(StorageLevel.MEMORY_AND_DISK)
           val diff = lineageDiff(vNew, back).localCheckpoint()
           vNew.unpersist()
           diff

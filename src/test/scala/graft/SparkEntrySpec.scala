@@ -22,7 +22,6 @@ class SparkEntrySpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses to a positive Int or fails loudly") {
     def cpus(v: String) = SparkEntry.cpus(Map("SPARK_GRAFT_CPUS" -> v))
     assert(SparkEntry.cpus(Map.empty) == 4)
-    assert(SparkEntry.cpus(Map.empty, default = 32) == 32)
     assert(cpus("8") == 8)
     assert(cpus("032") == 32)   // compared as a number, not as a string
     for (bad <- Seq("", "*", "0", "-4", "4c", " 4", "4.0"))
