@@ -19,10 +19,14 @@ object Adjuster {
     * bar → select by policy. Bars sharing (ticker, datetime) collapse to
     * one row (which one is unspecified).
     *
-    * Plan shape: the bars are hash-partitioned by (ticker, event_day)
-    * once; the duplicate drop, the day-grid aggregate and the join back
-    * to the factor table all reuse that distribution, so the bar history
-    * is shuffled once and everything else runs on the day grid.
+    * Plan shape: the bars are hash-partitioned by (ticker, event_day),
+    * and the duplicate drop and the join back to the factor table reuse
+    * that distribution. The day-grid aggregate reads the bars through a
+    * second copy of that repartition: its exchange carries fewer
+    * columns and an inferred `isnotnull(datetime)`, so exchange reuse
+    * cannot match the two, and the raw lake is scanned and the bar
+    * history shuffled twice. Everything after the grid runs on the day
+    * grid.
     */
   def buildAdjusted(
       bars: DataFrame,

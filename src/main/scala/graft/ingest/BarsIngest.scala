@@ -1,7 +1,19 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FileBridge
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.source.Normalize
 
@@ -40,11 +52,7 @@ object BarsIngest {
       only: Option[String] = None,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     require(timeframe == "day" || timeframe == "minute", s"bad timeframe $timeframe")
-    val raw = spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .csv(csvGlob)
-    val bars = Normalize.normalizeBars(raw)
+    val bars = Normalize.normalizeBars(readDrops(spark, csvGlob))
       .transform(d => only.fold(d)(t => d.filter(col("ticker") === t.toUpperCase)))
       .transform(d => if (watchlist.isEmpty) d
         else d.filter(col("ticker").isin(watchlist.map(_.toUpperCase): _*)))
@@ -55,41 +63,149 @@ object BarsIngest {
       .na.drop(Seq("year", "month"))
     val partCols = if (timeframe == "minute") Seq("ticker", "year", "month", "day")
       else Seq("ticker", "year", "month")
-    bars
+    // INT64 micros, not the session's INT96 default: parquet keeps
+    // footer min/max for INT64 only, which [[manifest]] reads and
+    // datetime filters push down to. The conf is read when the write
+    // plans, so it is set only around it. Sorting by the partition
+    // columns first meets the planned write's required ordering, so no
+    // second sort reorders a file's rows away from datetime order.
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val prevTs = spark.conf.getOption(tsType)
+    spark.conf.set(tsType, "TIMESTAMP_MICROS")
+    try bars
       .repartition(partCols.map(col): _*)
-      .sortWithinPartitions(col("datetime"))
+      .sortWithinPartitions((partCols :+ "datetime").map(col): _*)
       .write
       .mode(mode)
       .option("compression", "zstd")
       .partitionBy(partCols: _*)
       .parquet(lakeRoot)
+    finally prevTs match {
+      case Some(v) => spark.conf.set(tsType, v)
+      case None => spark.conf.unset(tsType)
+    }
+  }
+
+  /** The drop files under `csvGlob` as all-string columns named by the
+    * header of the first file, read on the driver. Spark checks every
+    * other file's header against those names (`enforceSchema=false`)
+    * and fails the read on a mismatch: without a schema it would map a
+    * file with reordered columns by position and only log a warning.
+    * Headers whose names Spark has to rename (duplicates, blanks) can
+    * match no file, so they keep the positional read.
+    */
+  private def readDrops(spark: SparkSession, csvGlob: String): DataFrame = {
+    val opts = Map("header" -> "true", "inferSchema" -> "false")
+    FileBridge.csvHeaderSchema(spark, csvGlob, opts) match {
+      case Some((schema, byName)) =>
+        spark.read.options(opts).schema(schema)
+          .option("enforceSchema", !byName).csv(csvGlob)
+      case None => spark.read.options(opts).csv(csvGlob)
+    }
   }
 
   /** File-level manifest: per (ticker, file) min/max datetime + rows —
-    * the reference's JSON zone-map (ingest.py:345-422) as a one-job
-    * aggregate. Kept for audit; query pruning itself rides on hive
-    * partitions + parquet footer stats.
+    * the reference's JSON zone-map (ingest.py:345-422). Read from each
+    * file's footer on the driver: the row count and the `datetime`
+    * column's min/max statistics. A file whose footer has no `datetime`
+    * min/max (INT96 from older writers, all-null) is scanned instead, as
+    * a one-job aggregate. Kept for audit; query pruning itself rides on
+    * hive partitions + parquet footer stats.
     */
   def manifest(spark: SparkSession, lakeRoot: String): DataFrame =
-    spark.read.parquet(lakeRoot)
-      .groupBy(col("ticker"), input_file_name().as("path"))
-      .agg(
-        min(col("datetime")).as("start"),
-        max(col("datetime")).as("end"),
-        count(lit(1)).as("rows"))
+    fileManifest(spark, lakeRoot, Seq(lakeRoot))
 
   def writeManifest(spark: SparkSession, lakeRoot: String, out: String): Unit =
     manifest(spark, lakeRoot)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(out)
 
-  /** Incremental manifest maintenance: scan ONLY the partition paths
-    * touched by a new drop and merge into the previous manifest. Every
+  /** The manifest of the files under `paths`, partitions read from
+    * `lakeRoot` down. */
+  private def fileManifest(spark: SparkSession, lakeRoot: String,
+      paths: Seq[String]): DataFrame = {
+    // basePath keeps the hive partition columns (ticker/year/month)
+    // resolvable when reading partition subdirectories or files directly
+    val options = Map("basePath" -> lakeRoot)
+    def scan(files: Seq[String]) = spark.read.options(options).parquet(files: _*)
+      .groupBy(col("ticker"), input_file_name().as("path"))
+      .agg(
+        min(col("datetime")).as("start"),
+        max(col("datetime")).as("end"),
+        count(lit(1)).as("rows"))
+    val index = FileBridge.fileIndex(spark, paths, options)
+      .filter(_.partitionSchema.exists(f => f.name == "ticker" && f.dataType == StringType))
+    index.fold(scan(paths)) { ix =>
+      val tickerAt = ix.partitionSchema.fieldIndex("ticker")
+      val conf = spark.sessionState.newHadoopConfWithOptions(options)
+      // One options object per call: building it walks the whole
+      // Hadoop conf, which costs more than reading a footer.
+      val readOpts = HadoopReadOptions.builder(conf).build()
+      val files = for {
+        dir <- ix.listFiles(Nil, Nil)
+        f <- dir.files
+      } yield {
+        val ticker = if (dir.values.isNullAt(tickerAt)) null
+          else dir.values.getUTF8String(tickerAt).toString
+        (ticker, f.fileStatus, footerStats(f.fileStatus, conf, readOpts))
+      }
+      val footed = files.collect { case (t, st, Some((rows, lo, hi))) if rows > 0 =>
+        Row(t, st.getPath.toUri.toString, lo, hi, rows) }
+      val fromFooters = spark.createDataFrame(footed.asJava, StructType(Seq(
+          StructField("ticker", StringType), StructField("path", StringType),
+          StructField("start", LongType), StructField("end", LongType),
+          StructField("rows", LongType))))
+        .select(col("ticker"), col("path"), timestamp_micros(col("start")).as("start"),
+          timestamp_micros(col("end")).as("end"), col("rows"))
+      val unfooted = files.collect { case (_, st, None) => st.getPath.toString }
+      if (unfooted.isEmpty) fromFooters
+      else fromFooters.unionByName(scan(unfooted))
+    }
+  }
+
+  /** (rows, min, max) of `datetime` in epoch µs from one file's footer.
+    * None when the footer cannot give them exactly: no INT64 UTC
+    * `TIMESTAMP(MICROS)` `datetime` column, or a row group without
+    * min/max (INT96 carries none; an all-null group counts only when
+    * its null count says so), or no value at all. A file of 0 rows
+    * gives Some.
+    */
+  private def footerStats(st: FileStatus, conf: Configuration,
+      readOpts: ParquetReadOptions): Option[(Long, Long, Long)] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), readOpts)
+    val meta = try reader.getFooter finally reader.close()
+    val schema = meta.getFileMetaData.getSchema
+    val micros = schema.containsField("datetime") && {
+      val t = schema.getType(schema.getFieldIndex("datetime"))
+      t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        (t.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation =>
+            ts.isAdjustedToUTC && ts.getUnit == TimeUnit.MICROS
+          case _ => false
+        })
+    }
+    val blocks = meta.getBlocks.asScala.toSeq
+    val stats = blocks.map(b => b.getRowCount ->
+      b.getColumns.asScala.find(_.getPath.toDotString == "datetime").map(_.getStatistics))
+    val exact = micros && stats.forall { case (n, s) =>
+      s.exists(s => !s.isEmpty && (s.hasNonNullValue || s.getNumNulls == n)) }
+    val ranged = stats.flatMap(_._2).filter(_.hasNonNullValue)
+    val rows = blocks.map(_.getRowCount).sum
+    if (!exact) None
+    else if (rows == 0) Some((0L, 0L, 0L))
+    else if (ranged.isEmpty) None
+    else Some((rows,
+      ranged.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+      ranged.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max))
+  }
+
+  /** Incremental manifest maintenance: read ONLY the files under the
+    * partition paths touched by a new drop and merge into the previous manifest. Every
     * prior entry UNDER a touched path is evicted first — a dynamic
     * partition overwrite deletes the old files and writes new names, so
     * matching on file paths would leave stale entries for files that no
     * longer exist. At lake scale this turns the nightly manifest job
-    * from a 100 TB rescan into a scan of the day's drop.
+    * from a 100 TB rescan into the day's drop's footers.
     */
   def mergeManifest(
       spark: SparkSession, prevManifest: DataFrame,
@@ -99,7 +215,7 @@ object BarsIngest {
     // rendering) plus its status — Some(isDir) if it exists, None if
     // deleted. Deleted paths still participate in EVICTION (that is how
     // a deletion propagates to the manifest) but are excluded from the
-    // delta scan, which would otherwise fail on a missing path.
+    // delta read, which would otherwise fail on a missing path.
     val hconf = spark.sparkContext.hadoopConfiguration
     val resolved = newPaths.map { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
@@ -111,15 +227,8 @@ object BarsIngest {
       (q, status)
     }
     val existing = resolved.collect { case (q, Some(_)) => q.toString }
-    // basePath keeps the hive partition columns (ticker/year/month)
-    // resolvable when reading partition subdirectories directly
     val delta = if (existing.isEmpty) prevManifest.limit(0)
-      else spark.read.option("basePath", lakeRoot).parquet(existing: _*)
-        .groupBy(col("ticker"), input_file_name().as("path"))
-        .agg(
-          min(col("datetime")).as("start"),
-          max(col("datetime")).as("end"),
-          count(lit(1)).as("rows"))
+      else fileManifest(spark, lakeRoot, existing)
     // Eviction matches on NORMALIZED path components, both sides (the
     // manifest column gets its URI scheme+authority stripped).
     // Directories evict on the "/"-terminated prefix (a raw

@@ -4,13 +4,18 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FileBridge
 
 /** Query-side lake loader — the `load_polygonio_lake` equivalent
   * (reference: src/polygon_ingest/lake_io.py:216-337). The reference's
   * manifest-interval file selection + threaded reads (lake_io.py:108-147,
   * 283-304) are replaced by partition pruning (ticker/year/month[/day]
-  * hive columns) plus parquet row-group min/max pushdown: the same
-  * pruning, chosen by Catalyst from the filter alone.
+  * hive columns) plus parquet row-group min/max pushdown on `datetime`:
+  * the same pruning, chosen by Catalyst from the filter alone. Pushdown
+  * skips row groups only in files whose `datetime` is INT64
+  * (`TIMESTAMP_MICROS`, as [[graft.ingest.BarsIngest.ingest]] writes
+  * it); parquet keeps no min/max for INT96, so such files are read
+  * whole and filtered.
   */
 object LakeReader {
 
@@ -29,7 +34,7 @@ object LakeReader {
       end: Option[Timestamp] = None,
       endIsDateOnly: Boolean = false,
       columns: Seq[String] = Nil): DataFrame = {
-    var df = spark.read.parquet(lakeRoot)
+    var df = open(spark, lakeRoot)
     if (tickers.nonEmpty)
       df = df.filter(col("ticker").isin(tickers.map(_.toUpperCase): _*))
     // Partition-level prune first (year/month are partition columns →
@@ -60,4 +65,15 @@ object LakeReader {
     }
     df
   }
+
+  /** The lake at `lakeRoot`, equal to `spark.read.parquet(lakeRoot)`,
+    * with its metadata work on the driver: one listing, which starts no
+    * job on a local root, and the data schema from one footer (see
+    * [[org.apache.spark.sql.graftbridge.FileBridge]]). A root the
+    * driver listing does not cover (glob, streaming sink log, nothing
+    * listed) goes through `spark.read.parquet` itself.
+    */
+  def open(spark: SparkSession, lakeRoot: String): DataFrame =
+    FileBridge.fileIndex(spark, Seq(lakeRoot), Map.empty)
+      .fold(spark.read.parquet(lakeRoot))(FileBridge.parquetFrame(spark, _))
 }

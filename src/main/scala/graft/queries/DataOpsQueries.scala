@@ -2670,9 +2670,10 @@ object DataOpsQueries {
     // → exact cosine re-rank on the floats of the 20 survivors only
     // (the single full-width read). MEASURED: mean recall 0.65 vs
     // brute — the composite's recall is ceilinged by stage
-    // retentions (stage 1's ceiling is the 0.65 coarse recall;
-    // widening shortK back to coarseK recovers that ceiling exactly,
-    // the property ServingSpec pins). The
+    // retentions (stage 1's ceiling is the binary coarse recall
+    // recorded on COVERAGE.md's binary-codes line; widening shortK
+    // back to coarseK recovers that ceiling exactly, the property
+    // ServingSpec pins). The
     // knobs are explicit and every stage's quality has its own driver
     // row. At 100 TB the scan side carries 24 B/row (8 B sign code +
     // 16 B PQ code, built in ONE corpus pass), stage 1's rank is the

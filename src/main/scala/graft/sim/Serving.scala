@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * one serving plan instead of choosing one.
   *
   *   1. COARSE: popcount over 64-bit center-thresholded sign codes
-  *      (binary codes' measured coarse-filter role — a 10% candidate scan
-  *      keeps 0.8 of the true top-5 on the test corpus) cuts the
+  *      (binary codes' coarse-filter role; its measured recall is
+  *      recorded once, on COVERAGE.md's binary-codes line) cuts the
   *      corpus to `coarseK` candidates per query.
   *   2. SHORTLIST: ADC lookup-table scoring over the candidates' PQ
   *      codes (the qs24 scorer — m table lookups per candidate, KB
@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   * artifact), queries broadcast; no stage shuffles anything wider than
   * (query, id, code) until the final `shortK`-sized float fetch. The
   * composite's recall is ceilinged by its stage retentions — each cut
-  * was measured on its own (binary coarse 0.65, recorded in
-  * COVERAGE.md; qs24 ADC 0.8) and qs29 measures the end-to-end point
-  * (0.65 at 50→20→5 on the test corpus; widening shortK to coarseK
-  * recovers the stage-1 ceiling exactly, the property ServingSpec
-  * pins).
+  * was measured on its own (the binary coarse cut's figure is on
+  * COVERAGE.md's binary-codes line; qs24 ADC 0.8) and qs29 measures
+  * the end-to-end point (0.65 at 50→20→5 on the test corpus; widening
+  * shortK to coarseK recovers the stage-1 ceiling exactly, the
+  * property ServingSpec pins).
   */
 object Serving {
 

@@ -61,21 +61,23 @@ object Normalize {
     * 1e11→ms, else s). Accepts long, double, or string input.
     */
   def sniffTimestamp(c: Column): Column = {
-    val digits = c.cast("string").rlike("^[0-9]+(\\.0+)?$")
-    // Integer epochs stay in exact arithmetic: nanosecond values (~1.7e18)
-    // exceed double's 2^53 integer range, so a double round-trip can be
-    // off by a microsecond or more. decimal(20,0) holds the full range
-    // (and absorbs a literal ".0" suffix); the ns→µs division runs in
-    // decimal (exact quotient) — Column./ on longs would promote to
-    // double and reintroduce the precision loss.
-    val d = c.cast("decimal(20,0)")
-    val v = d.cast("long")
+    val s = c.cast("string")
+    val digits = s.rlike("^[0-9]+(\\.0+)?$")
+    // Integer epochs stay in exact long arithmetic: nanosecond values
+    // (~1.7e18) exceed double's 2^53 integer range, so a double
+    // round-trip can be off by a microsecond or more. The digits
+    // (without a literal ".0" suffix) parse as a long, null past
+    // Long.MaxValue (an error under ANSI), and ns → µs is the integral
+    // `div`: the regex admits no negative value, so it is the floor.
+    // Column./ on longs would promote to double and reintroduce the
+    // precision loss.
+    val v = substring_index(s, ".", 1).cast("long")
     when(digits,
-      when(v > 100000000000000000L, timestamp_micros(floor(d / 1000).cast("long")))
+      when(v > 100000000000000000L, timestamp_micros(call_function("div", v, lit(1000L))))
         .when(v > 100000000000000L, timestamp_micros(v))
         .when(v > 100000000000L, timestamp_millis(v))
         .otherwise(timestamp_seconds(v)))
-      .otherwise(to_timestamp(c.cast("string")))
+      .otherwise(to_timestamp(s))
   }
 
   /** Ticker cleanup at every boundary (ingest.py:245): upper + trim.

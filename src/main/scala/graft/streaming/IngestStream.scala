@@ -55,10 +55,10 @@ object IngestStream {
       // header NAMES must match the supplied schema: enforceSchema's
       // default (true) ignores the header row and binds by POSITION,
       // so a drop file with reordered columns would silently put epoch
-      // strings in `ticker` — while the batch twin (BarsIngest.ingest,
-      // schema inferred from the header) binds by name and ingests it
-      // correctly. false = fail loudly on header mismatch, keeping the
-      // batch/stream same-lake claim honest
+      // strings in `ticker`. false = fail loudly on header mismatch, as
+      // the batch twin (BarsIngest.ingest, schema named by the first
+      // drop's header) does, keeping the batch/stream same-lake claim
+      // honest
       .option("enforceSchema", false)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(watchDir)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.lake.LakeReader
+import graft.source.Normalize
 
 class IngestSpec extends SparkTestBase {
   import spark.implicits._
@@ -166,6 +167,98 @@ class IngestSpec extends SparkTestBase {
       Seq(month11.getAbsolutePath))
     assert(mergedDelDir.filter($"path".contains("month=11/")).count() === 0L)
     assert(mergedDelDir.filter($"path".contains("month=12/")).count() === 1L)
+  }
+
+  /** The former manifest: one aggregate over a scan of the lake, kept
+    * as the oracle of the footer-read one. */
+  private def scanManifest(root: String) =
+    spark.read.parquet(root)
+      .groupBy($"ticker", input_file_name().as("path"))
+      .agg(min($"datetime").as("start"), max($"datetime").as("end"),
+        count(lit(1)).as("rows"))
+
+  private def canonManifest(df: org.apache.spark.sql.DataFrame) =
+    df.select($"ticker", $"path", $"start", $"end", $"rows").orderBy($"path").collect().toSeq
+
+  test("the footer manifest equals the scan manifest on the fixtures and a " +
+      "bench-shaped lake") {
+    assert(canonManifest(BarsIngest.manifest(spark, lakeRoot)) ==
+      canonManifest(scanManifest(lakeRoot)))
+    // minute drops: one file per trading day with every ticker, 390
+    // session minutes, some minutes without a trade, ns epochs
+    val dir = Files.createTempDirectory("graft_benchshape").toString
+    val rnd = new scala.util.Random(7)
+    val tickers = (1 to 12).map(i => f"t$i%02d") :+ "brk/b"
+    for (day <- Seq("2024-03-04", "2024-03-05", "2024-04-01")) {
+      val open = java.sql.Timestamp.valueOf(s"$day 14:30:00").getTime * 1000000L
+      val rows = for (t <- tickers; m <- 0 until 390 if rnd.nextDouble() > 0.02)
+        yield s"$t,${open + m * 60000000000L},1,2,0.5,${1 + rnd.nextInt(100)},100,5,1.2"
+      writeGz(s"$dir/$day.csv.gz",
+        "ticker,window_start,open,high,low,close,volume,transactions,vwap" +: rnd.shuffle(rows))
+    }
+    BarsIngest.ingest(spark, s"$dir/*.csv.gz", s"$dir/lake", timeframe = "minute")
+    val got = canonManifest(BarsIngest.manifest(spark, s"$dir/lake"))
+    assert(got.size == 3 * tickers.size)
+    assert(got == canonManifest(scanManifest(s"$dir/lake")))
+  }
+
+  /** The former drop read, kept as the oracle: names from one file's
+    * header, every file mapped by position. */
+  private def positionalIngest(glob: String, root: String): Unit =
+    Normalize.normalizeBars(spark.read.option("header", "true")
+        .option("inferSchema", "false").csv(glob))
+      .withColumn("year", year($"datetime")).withColumn("month", month($"datetime"))
+      .na.drop(Seq("year", "month"))
+      .repartition($"ticker", $"year", $"month").sortWithinPartitions($"datetime")
+      .write.option("compression", "zstd").partitionBy("ticker", "year", "month")
+      .parquet(root)
+
+  test("drops with equal headers ingest to the same lake as the positional read") {
+    val dir = Files.createTempDirectory("graft_hdr_eq").toString
+    val header = "ticker,window_start,open,high,low,close,volume,transactions,vwap"
+    def epochMs(day: String) = java.sql.Timestamp.valueOf(s"$day 21:00:00").getTime
+    writeGz(s"$dir/a.csv.gz", Seq(header,
+      s"aapl,${epochMs("2024-01-02")},1,2,0.5,1.5,100,5,1.2",
+      s"msft,${epochMs("2024-01-02")},5,6,4.5,5.5,300,7,5.2"))
+    writeGz(s"$dir/b.csv.gz", Seq(header,
+      s"aapl,${epochMs("2024-02-01")},2,3,1.5,2.5,200,6,2.2",
+      s"msft,${epochMs("2024-02-01")},5,6,4.5,,,7,"))
+    BarsIngest.ingest(spark, s"$dir/*.csv.gz", s"$dir/lake", timeframe = "day")
+    positionalIngest(s"$dir/*.csv.gz", s"$dir/oracle")
+    def rows(root: String) = spark.read.parquet(root)
+      .withColumn("dir", regexp_extract(input_file_name(), "(ticker=.*)/[^/]+$", 1))
+      .collect().toSeq.sortBy(_.toString)
+    assert(rows(s"$dir/lake").size == 4)
+    assert(rows(s"$dir/lake") == rows(s"$dir/oracle"))
+    assert(spark.read.parquet(s"$dir/lake").schema == spark.read.parquet(s"$dir/oracle").schema)
+    // a header Spark must rename (a repeated name) can match no file by
+    // name, so it keeps the positional read
+    val dup = Files.createTempDirectory("graft_hdr_dup").toString
+    writeGz(s"$dup/a.csv.gz", Seq("ticker,window_start,close,close",
+      s"aapl,${epochMs("2024-01-02")},1.5,1.6"))
+    BarsIngest.ingest(spark, s"$dup/*.csv.gz", s"$dup/lake", timeframe = "day")
+    positionalIngest(s"$dup/*.csv.gz", s"$dup/oracle")
+    assert(rows(s"$dup/lake").size == 1)
+    assert(rows(s"$dup/lake") == rows(s"$dup/oracle"))
+  }
+
+  test("a drop whose header names the columns in another order fails the ingest") {
+    // by position, the second file's close would land in ticker
+    val dir = Files.createTempDirectory("graft_hdr_swap").toString
+    def epochMs(day: String) = java.sql.Timestamp.valueOf(s"$day 21:00:00").getTime
+    writeGz(s"$dir/a.csv.gz", Seq("ticker,window_start,close",
+      s"aapl,${epochMs("2024-01-02")},1.5"))
+    writeGz(s"$dir/b.csv.gz", Seq("close,window_start,ticker",
+      s"2.5,${epochMs("2024-01-03")},bbb"))
+    val e = intercept[Exception](
+      BarsIngest.ingest(spark, s"$dir/*.csv.gz", s"$dir/lake", timeframe = "day"))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).toSeq
+    assert(msgs.exists(_.contains("CSV header does not conform to the schema")), msgs)
+    // the positional read names the columns from one file and maps the
+    // other's close into ticker
+    val oracle = spark.read.option("header", "true").csv(s"$dir/*.csv.gz")
+    assert(oracle.filter($"ticker".isin("1.5", "2.5")).count() == 1)
   }
 
   test("LakeReader prunes by ticker + range and pads missing columns") {

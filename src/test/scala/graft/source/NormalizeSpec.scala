@@ -48,6 +48,68 @@ class NormalizeSpec extends SparkTestBase {
     assert(df.as[Long].head() == 1455200494606748L)
   }
 
+  test("sniffTimestamp equals the decimal(20,0) form on long, double and string " +
+      "input, with ANSI on and off") {
+    // the former form, kept as the oracle: a decimal(20,0) parse and an
+    // exact decimal ns -> µs floor
+    def decimalSniff(c: org.apache.spark.sql.Column) = {
+      val digits = c.cast("string").rlike("^[0-9]+(\\.0+)?$")
+      val d = c.cast("decimal(20,0)")
+      val v = d.cast("long")
+      when(digits,
+        when(v > 100000000000000000L, timestamp_micros(floor(d / 1000).cast("long")))
+          .when(v > 100000000000000L, timestamp_micros(v))
+          .when(v > 100000000000L, timestamp_millis(v))
+          .otherwise(timestamp_seconds(v)))
+        .otherwise(to_timestamp(c.cast("string")))
+    }
+    val s = 1700000000L
+    val longs = Seq(s, s * 1000, s * 1000000, s * 1000000000L + 123456789L, 0L, 7L,
+      100000000000L, 100000000001L, 100000000000000L, 100000000000001L,
+      100000000000000000L, 100000000000000001L, Long.MaxValue, -5L)
+    val doubles = Seq(s.toDouble, (s * 1000).toDouble, 1234567.0, 0.0, 12.5, -3.0,
+      1.7e18, Double.NaN)
+    val strings = Seq(s.toString, (s * 1000).toString, (s * 1000000).toString,
+      "1455200494606748983", "1455200494606748983.0", "1455200494606748983.000",
+      "9223372036854775807", "9223372036854775808", // 19 digits, past Long.MaxValue
+      "12345678901234567890", "99999999999999999999", // 20 digits
+      "123456789012345678901", // 21 digits
+      "0001700000000", "00000000000000000001700000000", "1700000000.0", "1700000000.5",
+      "", " 1700000000", "+1700000000", "-1700000000", "1.7e9",
+      "2023-11-14T22:13:20", "2023-11-14 22:13:20", "2023-11-14", "not a time", null)
+    val inputs = Seq(longs.map(Option(_)).toDF("raw"),
+      doubles.map(Option(_)).toDF("raw"), strings.toDF("raw"))
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    def eval(in: org.apache.spark.sql.DataFrame, f: org.apache.spark.sql.Column =>
+        org.apache.spark.sql.Column): Either[String, Option[Long]] =
+      try Right(Option(in.select(unix_micros(f($"raw"))).head().get(0))
+        .map(_.asInstanceOf[Long]))
+      catch { case _: Exception => Left("throws") }
+    val cases = try for (ansi <- Seq("true", "false"); df <- inputs; r <- df.collect()) yield {
+      spark.conf.set(key, ansi)
+      val one = spark.createDataFrame(java.util.List.of(r), df.schema)
+      (s"ANSI $ansi, ${df.schema.head.dataType} ${r.get(0)}",
+        eval(one, Normalize.sniffTimestamp), eval(one, decimalSniff))
+    } finally spark.conf.set(key, prev)
+    assert(cases.size == 2 * (longs.size + doubles.size + strings.size))
+    // One deliberate difference: with ANSI off, digits past
+    // Long.MaxValue are null, as a string -> long cast gives. The
+    // decimal form's decimal -> long cast wrapped them modulo 2^64 into
+    // an overflow error or an arbitrary time (99999999999999999999
+    // became a year-5138 timestamp). With ANSI on both forms throw.
+    val pastLong = Set("9223372036854775808", "12345678901234567890", "99999999999999999999")
+    val (wrapped, rest) = cases.partition { case (c, _, _) =>
+      c.startsWith("ANSI false") && pastLong.exists(p => c.endsWith(s" $p")) }
+    assert(wrapped.size == 3 && wrapped.forall(_._2 == Right(None)), wrapped)
+    assert(wrapped.exists(_._3 == Right(Some(99999999999999999L))), wrapped)
+    val differ = rest.filter { case (_, got, want) => got != want }
+    assert(differ.isEmpty, differ.mkString("\n"))
+    assert(cases.count { case (c, got, _) =>
+      c.startsWith("ANSI true") && pastLong.exists(p => c.endsWith(s" $p")) &&
+        got == Left("throws") } == 3)
+  }
+
   test("cleanTicker equals upper(trim(x)) on ASCII and non-ASCII input") {
     // the ASCII fast path and the ICU arm: padding, empty, whitespace
     // only, null, and the length-changing / context-sensitive / title-
