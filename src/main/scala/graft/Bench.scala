@@ -65,13 +65,7 @@ object Bench {
     // time: a time-to-crash entry would make a broken build look FASTER
     // than a working one, and the driver bench could not tell the two
     // apart. A run with any failed row exits 1 and writes no record.
-    // The bench times the SHIPPING surface (SparkEntry.benchQueries);
-    // ladder rows superseded by a benched superior stay gate-only —
-    // see SparkEntry.benchRetired for the per-row rationale. An
-    // explicit SPARK_GRAFT_ONLY filter overrides the retirement so
-    // retired rows remain measurable on demand.
-    val timed = (if (only.isDefined) SparkEntry.queries
-                 else SparkEntry.benchQueries)
+    val timed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_(name)) }
       .map { case (name, fn) =>
       val samples = (1 to repeats).map { _ =>

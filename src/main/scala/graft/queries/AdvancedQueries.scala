@@ -50,13 +50,6 @@ object AdvancedQueries {
     }.mkString("(", " + ", ")")
   }
 
-  /** Exact cosine in DuckDB — same IEEE op sequence as
-    * [[graft.sim.Similarity.cosine]] (qs4/qs5-validated form).
-    */
-  /** qs6's oracle CTE fragment (`b`/`cand`/`sc`, no WITH and no final
-    * SELECT) — the multi-table LSH near-dup pair set, shared by qs6
-    * (pairs) and qs9 (connected components over those pairs).
-    */
   /** qs16's oracle chain — the two-layer unrolled Lloyd fit (iters=2)
     * ending in per-vector assignment `ca`, cell sizes `sz`, and the
     * one-row smallest-cell target `tg` — shared with qx6's composite.
@@ -111,6 +104,10 @@ object AdvancedQueries {
     """('0x' || substr(md5('cluster:' || CAST(ca.vec_id AS VARCHAR)), 1, 15))::BIGINT
             % sz.cell_n < tg.target_n"""
 
+  /** qs6's oracle CTE fragment (`b`/`cand`/`sc`, no WITH and no final
+    * SELECT) — the multi-table LSH near-dup pair set, shared by qs6
+    * (pairs) and qs9 (connected components over those pairs).
+    */
   private lazy val lshNearDupCtes: String = {
     val nTables = 8
     val bucketCols = (0 until nTables).map(tb =>
@@ -164,6 +161,9 @@ object AdvancedQueries {
         i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))
            * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))), (x, y) -> x + y)"""
 
+  /** Exact cosine in DuckDB — same IEEE op sequence as
+    * [[graft.sim.Similarity.cosine]] (the qs5-validated form).
+    */
   private def cosineSql(a: String, b: String): String =
     s"""list_reduce(list_transform(range(1, len($a) + 1),
         i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)
@@ -417,40 +417,14 @@ object AdvancedQueries {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // ---- LSH ANN (hyperplane sign buckets): approximate vs brute
+    // ---- Multi-table LSH ANN (OR-amplification): approximate vs brute
     // force, but DETERMINISTIC — the md5-parity hyperplanes are pure
     // arithmetic, so the oracle replays the exact bucket assignment
     // (same weights as list literals) and checks rows/schema/hash
-    // bit-for-bit. Recall vs brute force is asserted in SimilaritySpec. ----
-    QueryDef("qs4_lsh_topk",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        Similarity.lshTopK(e, q, "vec_id", "embedding", "query_id", "qe",
-            k = 5, planes = 6)
-          .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-          .orderBy(col("query_id"), col("rank"))
-      },
-      Some(s"""WITH b AS (SELECT vec_id, embedding,
-          ${lshBucketSql("embedding", planes = 6, table = 0)} AS bucket
-          FROM embeddings),
-        q AS (SELECT vec_id AS query_id, embedding AS qe, bucket AS qb
-          FROM b WHERE vec_id < 4),
-        sc AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-            ${cosineSql("c.embedding", "q.qe")} AS cosine
-          FROM b c JOIN q ON c.bucket = q.qb AND c.vec_id <> q.query_id),
-        r AS (SELECT query_id, neighbor_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-          FROM sc)
-        SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id, cosine
-        FROM r WHERE rank <= 5 ORDER BY query_id, rank""")),
-
-    // ---- Multi-table LSH ANN (OR-amplification): exact-oracled like
-    // qs4 — candidates share a bucket in ANY of the 8 plane families
-    // (OR chain over per-table bucket equalities), deduped, then exact
-    // cosine rank. Recall dominance over single-table is asserted in
-    // SimilaritySpec. ----
+    // bit-for-bit. Candidates share a bucket in ANY of the 8 plane
+    // families (OR chain over per-table bucket equalities), deduped,
+    // then exact cosine rank. Recall dominance over the single-table
+    // form (`tables = 1`) is asserted in SimilaritySpec. ----
     QueryDef("qs5_lsh_multi_topk",
       (s, dir) => {
         val e = t(s, dir, "embeddings")
@@ -490,7 +464,7 @@ object AdvancedQueries {
     // qs2 — candidate pairs share a bucket in ANY of the 8 plane
     // families (bucket SELF-join, never all-pairs), deduped, then one
     // exact cosine check against the threshold. Exact-oracled like
-    // qs4/qs5; recall vs the brute qs2 baseline is asserted in
+    // qs5; recall vs the brute qs2 baseline is asserted in
     // SimilaritySpec. ----
     QueryDef("qs6_lsh_neardup",
       (s, dir) => Similarity.lshNearDupPairs(t(s, dir, "embeddings"),

@@ -243,11 +243,11 @@ object DataOpsQueries {
     s"bpev(tok, id) AS (SELECT * FROM (VALUES $vals) v(tok, id))"
   }
 
-  /** The document-lake maintenance policy closed-form — shared
-    * VERBATIM by ql7 (one whole-slice batch) and qst16 (the same
-    * batch streamed as keyed per-day micro-batches): the maintained
-    * lake's final state is policy-determined, so stream ≡ batch is
-    * pinned on the stored artifact itself.
+  /** The document-lake maintenance policy closed-form — qst16's
+    * oracle (the batch streamed as keyed per-day micro-batches): the
+    * maintained lake's final state is policy-determined, so the one
+    * whole-slice batch fold and the stream meet on the stored
+    * artifact itself.
     */
   private lazy val docLakeMaintOracleSql: String =
     s"""WITH u AS (${urlFixtureSql(
@@ -440,8 +440,7 @@ object DataOpsQueries {
     * and qx10's provenance half (canonical URL -> URL dedup ->
     * blocklist -> per-domain cap -> quality floor), ending at the
     * per-doc `content` / `prov` verdict tables. Shared verbatim by
-    * qx11, qx13 and qx14 so the three release composites cannot
-    * drift.
+    * the curation release oracles (qx14, qx15, qx17).
     */
   private lazy val releaseVerdictCtes: String = s"""u AS (${urlFixtureSql("doc_id % 120")}),$urlDomainCtes,
         b AS (SELECT doc_id, domain, canonical_url,
@@ -505,9 +504,9 @@ object DataOpsQueries {
           FROM b LEFT JOIN r ON r.doc_id = b.doc_id
           JOIN sc ON sc.doc_id = b.doc_id)"""
 
-  /** qx13's CCNet LM-quality CTE segment (Stupid Backoff scores +
-    * tertile thresholds + the "not tail" gate), shared by qx13 and
-    * qx14.
+  /** The curation release's CCNet LM-quality CTE segment (Stupid
+    * Backoff scores + tertile thresholds + the "not tail" gate), the
+    * `lm_keep` arm of [[curationCtesSql]].
     */
   private lazy val lmQualityCtes: String = s"""$ngramLmCteSql,
         smp AS (SELECT lang, lm_score, doc_id FROM scs WHERE doc_id % 3 = 0),
@@ -524,10 +523,11 @@ object DataOpsQueries {
             COALESCE(s.lm_score > th.t1, FALSE) AS quality_keep
           FROM scs s LEFT JOIN th ON th.lang = s.lang)"""
 
-  /** qs34's closed-form occupancy/refit oracle — shared VERBATIM by
-    * its streaming twin qst22 (the strongest streaming≡batch pin).
+  /** qst22's closed-form occupancy/refit oracle: the batch fold's
+    * SQL, so the stream's per-cell histograms and refit verdict are
+    * pinned against the batch answer.
     */
-  private lazy val qs34OracleSql: String = """WITH old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
+  private lazy val indexHealthOracleSql: String = """WITH old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
         bat AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 = 0),
         seeds AS (SELECT embedding AS ce, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
           FROM (SELECT vec_id, embedding FROM old ORDER BY vec_id LIMIT 8)),
@@ -564,7 +564,7 @@ object DataOpsQueries {
           (2 * tot.mn * 8 >= 3 * tot.tn) AS refit
         FROM occ, tot ORDER BY occ.cell"""
 
-  /** qs35/qs36's shared drift-fixture CTEs: the qs34 dressed batch,
+  /** qs35/qs36's shared drift-fixture CTEs: qst22's dressed batch,
     * the drifted union, the both-region query set, and the
     * brute-force truth. */
   private lazy val ivfDriftFixtureCtes: String = """old AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 8 <> 0),
@@ -598,7 +598,7 @@ object DataOpsQueries {
             ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5)"""
 
   /** qs35's FROZEN serving arm (old-corpus models over the drifted
-    * union — the qs27 ADC chain). */
+    * union — the frozen-model fit, encode, union and ADC chain). */
   private lazy val ivfFrozenArmCtes: String = """opseeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
           FROM (SELECT vec_id, embedding FROM old ORDER BY vec_id LIMIT 256)),
         ocb AS (SELECT t.j, s.code,
@@ -790,7 +790,7 @@ object DataOpsQueries {
   /** qt46's unrolled-GD CTE chain with every CTE name prefixed by `pre`
     * — prefix "" reproduces the standalone oracle; a non-empty prefix
     * lets the chain ride inside a composite's WITH list (qx14) without
-    * colliding with the release CTEs (qx13's own `g8`/`dom` would
+    * colliding with the release CTEs (their own `g8`/`dom` would
     * otherwise shadow the gradient/domain tables).
     */
   private def qt46CtesSql(pre: String, textSql: String = "text"): String = {
@@ -853,7 +853,7 @@ object DataOpsQueries {
     * [[qt46CtesSql]]), and `fitPred` restricts the MODEL FIT — the
     * ratio-LUT counts/totals AND the min/max normalizer — to a
     * doc_id predicate while scoring still covers every document.
-    * fitPred = "TRUE" is the full-corpus fit (qt47/qst18); a sample
+    * fitPred = "TRUE" is the full-corpus fit (qt47); a sample
     * predicate is the CCNet-style frozen-from-a-sample crawl-edge
     * form (qst21).
     */
@@ -1294,10 +1294,11 @@ object DataOpsQueries {
           (s.doc_id IN (SELECT batch_id FROM nr)) AS dup_near
         FROM sp s WHERE s.part = 'batch' ORDER BY s.doc_id"""
 
-  /** Shared content + provenance halves of the release verdict
-    * (qx11/qx13): content = qx4's boilerplate-clean → exact-dedup →
-    * n-gram decontamination chain; provenance = qx10's canonical-URL →
-    * URL-dedup → blocklist → domain-cap → quality-floor chain. Both
+  /** Shared content + provenance halves of the curation release
+    * verdict ([[curationRelease]]): content = qx4's boilerplate-clean
+    * → exact-dedup → n-gram decontamination chain; provenance =
+    * qx10's canonical-URL → URL-dedup → blocklist → domain-cap →
+    * quality-floor chain. Both
     * returned doc-keyed as one boolean each so composites conjoin
     * them without seeing the other side's corpus-sized intermediates.
     */
@@ -1361,10 +1362,10 @@ object DataOpsQueries {
     * verdict MATERIALIZED as the shard-lake artifact). See the qx14
     * QueryDef for the per-arm rationale and measured sole-rejector
     * counts.
-    */
-  /** `sorted = false` drops the verdict's trailing global sort for
+    *
+    * `sorted = false` drops the verdict's trailing global sort for
     * callers that only consume the row SET (qx15's kept-set join,
-    * qx16/qx17's diff arms — lineageDiff re-sorts its own output):
+    * qx17's diff arms — lineageDiff re-sorts its own output):
     * a global sort is a range-partitioner SAMPLING job plus a range
     * exchange plus the sort itself, and the arms PERSIST their
     * verdicts, which pins the sort into the materialization. qx14's
@@ -1438,13 +1439,11 @@ object DataOpsQueries {
     if (sorted) verdict.orderBy(col("doc_id")) else verdict
   }
 
-  /** The qt49/qst24 drift dressing in SQL — window doc_id % 4 = 3's
-    * source change (every second token a boilerplate 'zq'). ONE
-    * source for both oracles: qst24's containment claim is that its
-    * r_ chain is qt49's VERBATIM, so the dressed-text expression must
-    * be structurally shared, not coincidentally equal.
+  /** qst24's drift dressing in SQL — window doc_id % 4 = 3's source
+    * change (every second token a boilerplate 'zq'), the text its
+    * retrained r_ chain fits on.
     */
-  private val qt49DressedSql: String =
+  private val driftDressedSql: String =
     "CASE WHEN doc_id % 4 = 3 THEN text || " +
       "repeat(' zq', len(string_split(lower(trim(regexp_replace(" +
       "text, '\\s+', ' ', 'g'))), ' ')) // 2) ELSE text END"
@@ -1482,9 +1481,9 @@ object DataOpsQueries {
         $verdictArmCtes"""
 
   /** qx14's per-gate verdict SELECT over [[curationCtesSql]]'s
-    * terminal CTEs — ONE source shared by qx14 (ordered) and qx16's
-    * two release arms (unordered subqueries), so the lineage diff
-    * provably diffs the SAME verdict it ships.
+    * terminal CTEs — ONE source shared by qx14 (ordered) and the
+    * lineage oracle's two release arms (unordered subqueries), so
+    * qx17's diff provably diffs the SAME verdict qx14 checks.
     */
   private lazy val curationVerdictSelectSql: String = """SELECT content.doc_id, content_keep, provenance_keep,
           COALESCE(qual.quality_keep, FALSE) AS lm_keep,
@@ -1500,9 +1499,8 @@ object DataOpsQueries {
 
   /** The release-lineage diff: release N's verdict left-joined to
     * N-1's on doc_id, emitting per-doc status plus six per-gate flip
-    * flags — ONE source shared by qx16 (N-1 computed in-memory) and
-    * qx17 (N-1 read back from the stored manifest), so the two rows
-    * provably ship the same diff semantics. Gates flip because refits
+    * flags — qx17's diff, with N-1 read back from the stored
+    * manifest. Gates flip because refits
     * move thresholds/weights (lm/clf/dsir), the new crawl steals
     * exact-dup canonicals and domain-cap slots (content/provenance),
     * and mixture targets rescale with per-lang counts (mix).
@@ -1533,9 +1531,9 @@ object DataOpsQueries {
   /** The lineage oracle: the proven curation CTE chain run TWICE —
     * the old arm scoped to the pre-crawl corpus by shadowing
     * `documents` with a filtered CTE (main.documents disambiguates
-    * the base table) — then diffed. Shared verbatim by qx16 and qx17
-    * (whose only delta is routing the N-1 arm through the manifest
-    * lake, a value-identity the oracle match itself proves).
+    * the base table) — then diffed. qx17 routes its N-1 arm through
+    * the manifest lake; the oracle match proves that round trip is a
+    * value identity.
     */
   private lazy val lineageOracleSql: String = s"""WITH arm_new AS (SELECT * FROM (
           WITH $curationCtesSql
@@ -2435,133 +2433,6 @@ object DataOpsQueries {
         FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
         ORDER BY ex.query_id""")),
 
-    // ---- INCREMENTAL index maintenance (qs27): the operational
-    // question qs22-qs24 leave open — when a new batch of vectors
-    // arrives, does the index need a rebuild? The production answer
-    // this row pins: NO re-encode, NO refit. Quantizer and coarse
-    // cells stay FROZEN (fit on the OLD corpus only — here every
-    // vec_id % 8 != 0, so the models have never seen the arrivals);
-    // the batch is encoded map-only with the stale models and UNIONED
-    // onto the existing code table; serving runs `Ivf.topKAdcOnIndex`
-    // over the union — the stored-artifact entry point (IvfSpec pins
-    // union-of-encodes ≡ whole-corpus encode under fixed models, so
-    // appending never perturbs existing codes). At 100 TB that is the
-    // difference between a daily full re-index (scan + re-encode
-    // everything) and appending 16 B/row for the arrivals. MEASURED
-    // ANSWER on this corpus: mean recall 0.75 vs qs24's
-    // full-corpus-fit 0.8 — freezing the models against a 1-in-8
-    // unseen slice costs 0.05 of recall (the seed codebooks shift:
-    // with %8==0 ids excluded, different verbatim corpus points seed
-    // the dictionary) — the quantified price of skipping the
-    // rebuild. The oracle is qs24's chain with seeds
-    // and cent drawn from the old corpus only. ----
-    QueryDef("qs27_incremental_index",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val old = e.filter(col("vec_id") % 8 =!= 0)
-        val batch = e.filter(col("vec_id") % 8 === 0)
-        val q = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val brute = Similarity.bruteTopK(e, q,
-            "vec_id", "embedding", "query_id", "qe", k = 5)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pq = graft.sim.Pq.fit(old, "vec_id", "embedding", m = 16, k = 256)
-        val cells = Ivf.fit(old, "vec_id", "embedding", k = 8, iters = 0)
-        def enc(df: DataFrame): DataFrame =
-          Ivf.assign(df, "vec_id", "embedding", cells)
-            .select(col("vec_id"),
-              graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
-              col("cell"))
-        val index = enc(old).unionByName(enc(batch))
-        val ann = Ivf.topKAdcOnIndex(index, q, "vec_id",
-          "query_id", "qe", cells, pq, k = 5, nprobe = 4)
-        Similarity.recallAtK(ann, brute, k = 5)
-          .select(col("query_id"), col("n_hit").cast("int").as("n_hit"),
-            col("n_exact").cast("int").as("n_exact"), col("recall"))
-          .orderBy(col("query_id"))
-      },
-      Some("""WITH qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        br0 AS (SELECT qv.query_id, e.vec_id AS neighbor_id,
-            list_reduce(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)
-            / (sqrt(list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)), (x, y) -> x + y))
-             * sqrt(list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> CAST(qv.qe[i] AS DOUBLE) * CAST(qv.qe[i] AS DOUBLE)), (x, y) -> x + y)))
-            AS cosine
-          FROM embeddings e, qv WHERE e.vec_id <> qv.query_id),
-        br AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM br0) WHERE rk <= 5),
-        seeds AS (SELECT embedding, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code
-          FROM (SELECT vec_id, embedding FROM embeddings
-                WHERE vec_id % 8 <> 0 ORDER BY vec_id LIMIT 256)),
-        cb AS (SELECT t.j, s.code,
-            list_slice(s.embedding, t.j * 4 + 1, t.j * 4 + 4) AS ce
-          FROM seeds s CROSS JOIN range(0, 16) t(j)),
-        enc AS (SELECT vec_id, j, code FROM (
-          SELECT e.vec_id, cb.j, cb.code,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j ORDER BY
-              list_reduce(list_transform(range(1, 5),
-                i -> (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[CAST(cb.j * 4 + i AS INT)] AS DOUBLE) - CAST(cb.ce[i] AS DOUBLE))),
-                (x, y) -> x + y),
-              cb.code) AS rk
-          FROM embeddings e CROSS JOIN cb) WHERE rk = 1),
-        cent AS (SELECT embedding AS ce,
-            ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell
-          FROM (SELECT vec_id, embedding FROM embeddings
-                WHERE vec_id % 8 <> 0 ORDER BY vec_id LIMIT 8)),
-        ca AS (SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              list_reduce(list_transform(range(1, len(e.embedding) + 1),
-                i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(e.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM embeddings e CROSS JOIN cent c) WHERE rk = 1),
-        qp AS (SELECT query_id, qe, cell FROM (
-          SELECT qv.query_id, qv.qe, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY qv.query_id ORDER BY
-              list_reduce(list_transform(range(1, len(qv.qe) + 1),
-                i -> (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))
-                   * (CAST(qv.qe[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE))), (x, y) -> x + y),
-              c.cell) AS rk
-          FROM qv CROSS JOIN cent c) WHERE rk <= 4),
-        qn AS (SELECT query_id,
-            list_reduce(list_transform(range(1, len(qe) + 1),
-              i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)), (x, y) -> x + y) AS qnsq
-          FROM qv),
-        pj AS (SELECT enc.vec_id, qp.query_id, enc.j,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(qp.qe[CAST(enc.j * 4 + i AS INT)] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS dotj,
-            list_reduce(list_transform(range(1, 5),
-              i -> CAST(cb.ce[i] AS DOUBLE) * CAST(cb.ce[i] AS DOUBLE)),
-              (x, y) -> x + y) AS nrmj
-          FROM enc JOIN cb ON cb.j = enc.j AND cb.code = enc.code
-          JOIN ca ON ca.vec_id = enc.vec_id
-          JOIN qp ON qp.cell = ca.cell AND enc.vec_id <> qp.query_id),
-        p0 AS (SELECT vec_id AS neighbor_id, query_id,
-            list_reduce(list(dotj ORDER BY j), (x, y) -> x + y) AS num,
-            list_reduce(list(nrmj ORDER BY j), (x, y) -> x + y) AS rn
-          FROM pj GROUP BY vec_id, query_id),
-        p1 AS (SELECT p0.query_id, p0.neighbor_id,
-            num / (sqrt(rn) * sqrt(qn.qnsq)) AS cosine
-          FROM p0 JOIN qn ON qn.query_id = p0.query_id),
-        p5 AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rk FROM p1) WHERE rk <= 5),
-        hit AS (SELECT a.query_id, COUNT(*) AS n_hit FROM p5 a
-          JOIN br ON br.query_id = a.query_id AND br.neighbor_id = a.neighbor_id
-          GROUP BY a.query_id),
-        ex AS (SELECT query_id, COUNT(*) AS n_exact FROM br GROUP BY query_id)
-        SELECT ex.query_id, CAST(COALESCE(hit.n_hit, 0) AS INT) AS n_hit,
-          CAST(ex.n_exact AS INT) AS n_exact,
-          CAST(COALESCE(hit.n_hit, 0) AS DOUBLE) / ex.n_exact AS recall
-        FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
-        ORDER BY ex.query_id""")),
-
     // ---- Per-dimension scalar quantization (qs28, the FAISS SQ8
     // layout) — the rung of the compression ladder between per-vector
     // int8 (512 bits) and PQ-128 (qs22, 128 bits): per-dim affine
@@ -3124,74 +2995,28 @@ object DataOpsQueries {
         FROM ex LEFT JOIN hit ON hit.query_id = ex.query_id
         ORDER BY ex.query_id""")),
 
-    // ---- IVF index-health audit + refit trigger (qs34): the serving
-    // lifecycle's missing ALARM. qs27 established that appends ride a
-    // FROZEN coarse quantizer — the production question that leaves
-    // open is WHEN the freeze must end: centroids fit on last
-    // quarter's distribution degrade silently as the corpus drifts
-    // (every ANN engine's retrain guidance is exactly this
-    // occupancy-skew check). One count aggregate over the (cell)
-    // projection computes BOTH the fit-time and post-append occupancy
-    // histograms (the fit rows ride with in_fit=1, the appended batch
-    // with 0 — one exchange, K rows out); the refit verdict is
-    // INTEGER arithmetic end to end: refit ⟺ 2·max·K ≥ 3·total
-    // (occupancy imbalance ≥ 1.5× the balanced share) — no float
-    // exists for two engines to disagree on. The fixture's batch
-    // arrives from a changed upstream encoder (deterministically
-    // pulled 90% toward centroid 0 — the lmDocs dressing device, in
-    // embedding space); the trigger genuinely trips both ways at
-    // both SFs: refit_at_fit FALSE (max 63-69 of 437 across 8
-    // cells), refit TRUE after the append (cell 0 grows 57→120 at
-    // sf0.01). 100 TB: occupancy is a K-row aggregate over a
-    // cell-projected scan, the verdict a 1-row broadcast attach —
-    // the audit costs one slim pass, which is the point: run it on
-    // every append. ----
-    QueryDef("qs34_index_health_audit",
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val old = e.filter(col("vec_id") % 8 =!= 0)
-        val batch = e.filter(col("vec_id") % 8 === 0)
-        val cells = Ivf.fit(old, "vec_id", "embedding", k = 8, iters = 0)
-        val c0Lit = array(cells.centroids(0).map(lit): _*)
-        val dressed = batch.select(col("vec_id"),
-          zip_with(col("embedding"), c0Lit, (x, c) =>
-            (x.cast("double") * lit(0.1) + c * lit(0.9)).cast("float"))
-            .as("embedding"))
-        val occ = Ivf.assign(old, "vec_id", "embedding", cells)
-          .select(col("cell"), lit(1L).as("in_fit"))
-          .unionByName(Ivf.assign(dressed, "vec_id", "embedding", cells)
-            .select(col("cell"), lit(0L).as("in_fit")))
-          .groupBy(col("cell"))
-          .agg(sum(col("in_fit")).as("n_fit"), count(lit(1)).as("n_now"))
-        val tot = occ.agg(
-          max(col("n_fit")).as("mf"), sum(col("n_fit")).as("tf"),
-          max(col("n_now")).as("mn"), sum(col("n_now")).as("tn"))
-        occ.crossJoin(broadcast(tot))
-          .select(col("cell"),
-            col("n_fit").cast("int").as("n_fit"),
-            col("n_now").cast("int").as("n_now"),
-            (col("n_now") - col("n_fit")).cast("int").as("growth"),
-            (lit(2L) * col("mf") * lit(8L) >= lit(3L) * col("tf"))
-              .as("refit_at_fit"),
-            (lit(2L) * col("mn") * lit(8L) >= lit(3L) * col("tn"))
-              .as("refit"))
-          .orderBy(col("cell"))
-      },
-      Some(qs34OracleSql)),
-
-    // ---- Streamed index-health audit (qst22): qs34 run WHERE it
-    // belongs operationally — ON the append stream, per arriving
-    // batch, so the refit alarm fires at ingest time instead of on a
-    // scheduled scan. The arriving vectors (the qs34 dressed batch)
-    // flow as a stream; cell assignment is a STATELESS codegen
-    // projection riding it (NearestCell against the frozen coarse
-    // model — the qst17 frozen-model class); ONE windowed streaming
-    // count aggregate per cell (state = K+1 longs per window at any
-    // arrival rate — the qst19 histogram class) flushes on the
-    // far-future sentinel; the fit-side occupancy is a K-row batch
-    // table and the integer refit verdict composes post-flush with
-    // the SAME expressions the batch row uses. Oracle = qs34's SQL
-    // VERBATIM — stream ≡ batch pinned on the alarm itself. ----
+    // ---- Streamed index-health audit + refit trigger (qst22): the
+    // serving lifecycle's ALARM. Appends ride a FROZEN coarse
+    // quantizer (qs35's frozen arm); centroids fit on last quarter's
+    // distribution degrade silently as the corpus drifts, and every
+    // ANN engine's retrain guidance is this occupancy-skew check. It
+    // runs ON the append stream, per arriving batch, so the alarm
+    // fires at ingest time instead of on a scheduled scan. The
+    // arriving vectors come from a changed upstream encoder
+    // (deterministically pulled 90% toward centroid 0) and flow as a
+    // stream; cell assignment is a STATELESS codegen projection
+    // riding it (NearestCell against the frozen coarse model — the
+    // qst21 frozen-model class); ONE windowed streaming count
+    // aggregate per cell (state = K+1 longs per window at any arrival
+    // rate — the qst19 histogram class) flushes on the far-future
+    // sentinel; the fit-side occupancy is a K-row batch table. The
+    // refit verdict is INTEGER arithmetic end to end: refit ⟺
+    // 2·max·K ≥ 3·total (occupancy imbalance ≥ 1.5× the balanced
+    // share), so no float exists for two engines to disagree on. It
+    // trips both ways at both SFs: refit_at_fit FALSE, refit TRUE
+    // after the append (cell 0 grows 57→120 at sf0.01). Oracle = the
+    // batch fold's closed-form SQL, so stream ≡ batch is pinned on
+    // the alarm itself. ----
     QueryDef("qst22_stream_index_health",
       (s, dir) => {
         import s.implicits._
@@ -3239,16 +3064,18 @@ object DataOpsQueries {
               .as("refit"))
           .orderBy(col("cell"))
       },
-      Some(qs34OracleSql)),
+      Some(indexHealthOracleSql)),
 
-    // ---- REFIT after the alarm (qs35): the consumer qs34's trigger
-    // was missing — the lifecycle was fit → freeze → append (qs27) →
-    // alarm (qs34) → dead end. This row closes the loop: same drifted
-    // fixture (batch pulled 90% toward centroid 0, the thing that
-    // trips qs34's occupancy check), then BOTH serving arms measured
-    // against the same brute-force truth on the drifted corpus —
-    // FROZEN (models fit on the old corpus only, the qs27 posture the
-    // alarm says to abandon) vs REFIT (coarse quantizer AND PQ
+    // ---- REFIT after the alarm (qs35): the consumer of qst22's
+    // trigger — the lifecycle is fit → freeze → append → alarm
+    // (qst22) → refit. Same drifted fixture (batch pulled 90% toward
+    // centroid 0, the thing that trips qst22's occupancy check), then
+    // BOTH serving arms measured against the same brute-force truth
+    // on the drifted corpus — FROZEN (models fit on the old corpus
+    // only, arrivals encoded with them and appended to the code table
+    // with no re-encode, served by `Ivf.topKAdcOnIndex` over the
+    // union — the incremental-index posture the alarm says to
+    // abandon) vs REFIT (coarse quantizer AND PQ
     // codebooks refit on the drifted union, index re-encoded). The
     // refit is exactly what a 100 TB operator pays when the alarm
     // fires: two driver-sized model fits over the bounded lowest-id
@@ -3264,8 +3091,8 @@ object DataOpsQueries {
     // old-region coverage. A production refit reclaims that with a
     // Lloyd pass (Pq.fitLloyd — qs36 measures it) at the same
     // re-encode cost; the row pins the seed-fit tradeoff both engines
-    // can agree on exactly. Oracle = qs27's frozen ADC chain and the
-    // same chain re-seeded from the drifted union, both over qs34's
+    // can agree on exactly. Oracle = the frozen ADC chain and the
+    // same chain re-seeded from the drifted union, both over qst22's
     // dressed-batch CTEs, sharing one brute-force truth. ----
     QueryDef("qs35_refit_recovery",
       (s, dir) => {
@@ -3295,7 +3122,7 @@ object DataOpsQueries {
             .select(col("vec_id"),
               graft.sim.Pq.codes(col("embedding"), pq).as("codes"),
               col("cell"))
-        // FROZEN arm: the stale qs27 models over the drifted corpus
+        // FROZEN arm: the stale old-corpus models over the drifted corpus
         val pqOld = inFitGroup("qs35-pq_old") { graft.sim.Pq.fit(old,
           "vec_id", "embedding", m = 16, k = 256) }
         val annFrozen = Ivf.topKAdcOnIndex(
@@ -3422,10 +3249,11 @@ object DataOpsQueries {
         LEFT JOIN lhit lh ON lh.query_id = ex.query_id
         ORDER BY ex.query_id""")),
 
-    // ---- TOMBSTONE deletion at serve time (qs30): the story qs27's
-    // append-only maintenance leaves open — released docs later
-    // retracted (a 1-in-8 slice here) must never be served, and a
-    // 100 TB code index is not re-encoded to forget them. Models and
+    // ---- TOMBSTONE deletion at serve time (qs30): the story
+    // append-only index maintenance (qs35's frozen arm) leaves open —
+    // released docs later retracted (a 1-in-8 slice here) must never
+    // be served, and a 100 TB code index is not re-encoded to forget
+    // them. Models and
     // index are built on the FULL corpus (the retraction arrives
     // AFTER the build — the realistic order); the tombstone table
     // anti-joins the index BEFORE the probe join
@@ -4386,86 +4214,6 @@ object DataOpsQueries {
       },
       Some(qt46OracleSql)),
 
-    // ---- Retrain after the drift alarm (qt49): the text-side twin of
-    // qs34 → qs35/qs36 — qst19's monitor fires on a drifted ingest
-    // window and this row closes ITS dead end: what does retraining
-    // the frozen scorer actually buy? Fixture: ingest window
-    // doc_id % 4 = 3 arrives from a changed source that floods one
-    // feature (every second token a boilerplate 'zq' — n/2 noise
-    // tokens appended, the qst19 dressing made feature-effective),
-    // which both shifts the feature distribution AND genuinely flips
-    // labels (the stopword ratio dilutes: 48/39 window-3 docs flip at
-    // sf0.001/sf0.01). The FROZEN qt46 classifier (trained pre-drift)
-    // is evaluated against the post-drift truth next to a RETRAINED
-    // one (same 8-step GD on the drifted corpus — 3/4 clean, 1/4
-    // drifted, the realistic posture). MEASURED per ingest window:
-    // the drifted window's accuracy collapses frozen (0.43 at
-    // sf0.001 / 0.59 at sf0.01 — below or near a coin flip) and
-    // retraining recovers it (0.82 / 0.78) while clean windows hold
-    // within ±0.02 — the quantified answer to "the alarm fired, now
-    // what". At 100 TB retraining costs what qt46 costs: K slim
-    // fixed-point gradient aggregates over the persisted projection +
-    // dim-row driver updates; the alarm → retrain loop is closed the
-    // same way qs34 → qs35 closed the index side. Oracle = TWO qt46
-    // unrolled-GD chains (f_ fit on the pre-drift corpus, r_ on the
-    // drifted one — the SAME generator parametrized by the source
-    // text expression) + one grouped eval select. ----
-    QueryDef("qt49_retrain_on_drift",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        val dressed = docs.select(col("doc_id"),
-          when(col("doc_id") % 4 === 3,
-            concat(col("text"), repeat(lit(" zq"),
-              (size(TextOps.tokens(col("text"))) / lit(2)).cast("int"))))
-            .otherwise(col("text")).as("text"))
-        val prepOld = graft.text.Classifier.prepareQuality(
-            graft.ops.Partitioning.spread(docs), "text", "doc_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val prepNew = graft.text.Classifier.prepareQuality(
-            graft.ops.Partitioning.spread(dressed), "text", "doc_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val w0 = graft.text.Classifier.trainQuality(prepOld)
-        val w1 = graft.text.Classifier.trainQuality(prepNew)
-        // prepOld's last consumer was the w0 fit (eager) — release it
-        // now; prepNew stays cached for the returned eval plan, whose
-        // single execution the harness's end-of-row clearCache reaps
-        prepOld.unpersist()
-        prepNew.select((col("doc_id") % 4).as("win"), col("y"),
-            (graft.text.Classifier.margin(col("bs"), col("n"), w0)
-              > lit(0.0)).as("pf"),
-            (graft.text.Classifier.margin(col("bs"), col("n"), w1)
-              > lit(0.0)).as("pr"))
-          .groupBy(col("win"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("pf") === (col("y") === 1), 1L).otherwise(0L))
-              .as("okf"),
-            sum(when(col("pr") === (col("y") === 1), 1L).otherwise(0L))
-              .as("okr"))
-          .select(col("win").cast("int").as("win"),
-            col("n").cast("int").as("n_docs"),
-            col("okf").cast("int").as("n_frozen_ok"),
-            col("okr").cast("int").as("n_retrain_ok"),
-            (col("okf").cast("double") / col("n").cast("double"))
-              .as("acc_frozen"),
-            (col("okr").cast("double") / col("n").cast("double"))
-              .as("acc_retrain"))
-          .orderBy(col("win"))
-      },
-      Some {
-        s"""WITH ${qt46CtesSql("f_")},
-        ${qt46CtesSql("r_", qt49DressedSql)},
-        ev AS (SELECT d.doc_id % 4 AS win, d.y,
-            (list_reduce(list_transform(d.bs, b -> f_a8.wa[b + 1]), (x, z) -> x + z) / d.n > 0.0) AS pf,
-            (list_reduce(list_transform(d.bs, b -> r_a8.wa[b + 1]), (x, z) -> x + z) / d.n > 0.0) AS pr
-          FROM r_dl d, f_a8, r_a8)
-        SELECT CAST(win AS INT) AS win, CAST(COUNT(*) AS INT) AS n_docs,
-          CAST(SUM(CASE WHEN pf = (y = 1) THEN 1 ELSE 0 END) AS INT) AS n_frozen_ok,
-          CAST(SUM(CASE WHEN pr = (y = 1) THEN 1 ELSE 0 END) AS INT) AS n_retrain_ok,
-          CAST(SUM(CASE WHEN pf = (y = 1) THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS acc_frozen,
-          CAST(SUM(CASE WHEN pr = (y = 1) THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS acc_retrain
-        FROM ev GROUP BY win ORDER BY win"""
-      }),
-
     // ---- DSIR importance resampling (qt47): the published sampling
     // layer between quality filtering and mixture targeting (Xie et
     // al. 2023, arXiv:2302.03169) — qt22/qt34 decide how much of
@@ -4509,85 +4257,12 @@ object DataOpsQueries {
       },
       Some(qt47OracleSql)),
 
-    // ---- Streamed LM quality scoring (qst17): qt43 at the crawl
-    // edge — documents ARRIVE as a stream and are scored against a
-    // FROZEN Stupid Backoff model (trained in batch on the target
-    // slice, collected once — the Ivf/Pq model-fit collect class —
-    // and broadcast as the KB-sized LUT the ADC rows established).
-    // Scoring is completely STATELESS: a typed map riding the
-    // stream, no shuffle, no state store, no watermark — the serving
-    // shape for ingest-time quality gating. NgramLm.scoreLocal
-    // carries the mirror contract (same norm order, same backoff
-    // ladder, same left-associated 0.4 products, same fixed-point
-    // accumulate), and the oracle IS qt43's chain VERBATIM, so
-    // stream ≡ batch is pinned on the score itself. ----
-    QueryDef("qst17_stream_lm_score",
-      (s, dir) => {
-        import s.implicits._
-        val bc = s.sparkContext.broadcast(graft.text.NgramLm.trainLocal(
-          lmDocs(s, dir, col("doc_id") % 5 === 0)
-            .select(col("lang"), graft.text.TextOps.norm(col("text2")))
-            .as[(String, String)].rdd))
-        val streamed = replayTable(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), zqText2.as("text2"))
-          .as[(Long, String, String)]
-          .flatMap { case (id, lang, text2) =>
-            graft.text.NgramLm.scoreLocal(text2, lang, bc.value)
-              .map { case (nTok, sc) => (id, lang, nTok, sc) }
-          }
-          .toDF("doc_id", "lang", "n_tok", "lm_score")
-        runAvailableNow(s, streamed).orderBy(col("doc_id"))
-      },
-      Some(s"WITH $ngramLmCteSql\n" +
-        "SELECT doc_id, lang, n_tok, lm_score FROM scs ORDER BY doc_id")),
-
-    // ---- Streamed DSIR resampling (qst18): qt47 at the crawl edge —
-    // documents ARRIVE as a stream and are verdicted against a FROZEN
-    // importance model (ratio LUT + min/max normalizers, fit in batch
-    // on the stored corpus — the model-fit collect class — and
-    // broadcast). Completely STATELESS, the qst17 shape: a typed map
-    // riding the stream, no shuffle, no state store, no watermark —
-    // ingest-time "does this crawl page look like the target?"
-    // gating. Dsir.scoreLocal carries the mirror contract (shared
-    // normLocal, scalar twin of the hash kernel, same fixed-point
-    // accumulate and draw), so the oracle is qt47's SQL verbatim —
-    // the strongest streaming≡batch pin available. ----
-    QueryDef("qst18_stream_dsir",
-      (s, dir) => {
-        import s.implicits._
-        val prep = graft.ops.Partitioning.spread(t(s, dir, "documents"))
-          .select(col("doc_id"),
-            TextOps.bindOnce(TextOps.tokens(col("text")))(toks =>
-              graft.text.Classifier.stopwordLabel(toks)).as("is_target"),
-            graft.text.Dsir.bigramBuckets(col("text")).as("bs"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val lut = graft.text.Dsir.fitRatioLut(prep, "is_target")
-        val mm = prep.select(
-            graft.text.Dsir.importanceWeight(col("bs"), lut).as("w"))
-          .agg(max(col("w")), min(col("w"))).head()
-        val (mx, mn) = (mm.getDouble(0), mm.getDouble(1))
-        val bcLut = s.sparkContext.broadcast(lut)
-        val streamed = replayTable(s, dir, "documents")
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            val (isT, nG, w, keep) =
-              graft.text.Dsir.scoreLocal(id, text, bcLut.value, mn, mx)
-            (id, isT, nG, w, keep)
-          }
-          .toDF("doc_id", "is_target", "n_grams", "weight", "keep")
-        // the memory sink already localized the result — the fit cache
-        // has no consumer left, so release it here (the DocLake
-        // unpersist discipline) instead of leaning on the harness's
-        // end-of-row clearCache
-        val local = runAvailableNow(s, streamed)
-        prep.unpersist()
-        local.orderBy(col("doc_id"))
-      },
-      Some(qt47OracleSql)),
-
-    // ---- Streamed DSIR with a SAMPLE-frozen model (qst21): the form
-    // a true crawl edge runs. qst18 still needed FULL-corpus
+    // ---- Streamed DSIR with a SAMPLE-frozen model (qst21): qt47 at
+    // the crawl edge, in the form a true crawl edge runs — documents
+    // ARRIVE as a stream and are verdicted by a STATELESS typed map
+    // (Dsir.scoreLocal, the scalar mirror of the column scorer that
+    // MirrorPropertySpec pins; no shuffle, no state store, no
+    // watermark). A full-corpus fit would need corpus-wide
     // aggregates at fit time (LUT counts and the min/max normalizer
     // over every stored document); this arm freezes the ENTIRE model
     // — ratio LUT and (mn, mx) — from a deterministic id-sample
@@ -4606,8 +4281,8 @@ object DataOpsQueries {
     // at sf0.01) — weaker separation than qt47's full fit (0.60 vs
     // 0.33-0.36), the honest price of fitting on a 1/5 sample. Oracle =
     // qt47's generator with the fit CTEs predicate-restricted to the
-    // sample — the same SQL text at fitPred=TRUE is qt47/qst18's
-    // oracle, so the two arms are pinned to one spec. ----
+    // sample — the same SQL text at fitPred=TRUE is qt47's oracle,
+    // so the two arms are pinned to one spec. ----
     QueryDef("qst21_stream_dsir_frozen",
       (s, dir) => {
         import s.implicits._
@@ -4642,27 +4317,33 @@ object DataOpsQueries {
       Some(s"""WITH ${qt47CtesSql("", "doc_id % 5 = 0")}
       ${qt47SelectSql("")}""")),
 
-    // ---- The retrained-model SWAP at the edge (qst24): the cutover
-    // qst19 + qt49 leave implied — the alarm fires mid-stream (qst19,
-    // on ingest window 3's source change) and retraining recovers
-    // accuracy (qt49) — but nothing demonstrated the SERVING handoff:
-    // a scoring stream that serves the frozen pre-drift classifier w0
-    // until the drift-alarm window and the retrained w1 from it on
-    // (the qs35 refit-cutover pattern applied to qt49's weights, the
-    // two-phase replay a real edge performs after an alarm → retrain
-    // → redeploy cycle). Everything on the stream is STATELESS but
-    // the one windowed per-ingest-window accuracy aggregate (the
-    // qst19 histogram class — state = windows × 2 longs): arrivals
-    // carry the qt49 drift dressing, features/labels ride
+    // ---- Retrain after the drift alarm, and the model SWAP at the
+    // edge (qst24): qst19's monitor fires mid-stream on ingest window
+    // 3's source change — doc_id % 4 = 3 arrives from a changed
+    // source that floods one feature (every second token a
+    // boilerplate 'zq', n/2 noise tokens appended), which shifts the
+    // feature distribution AND genuinely flips labels (the stopword
+    // ratio dilutes). The edge retrains the qt46 classifier (same
+    // 8-step GD on the drifted corpus — 3/4 clean, 1/4 drifted) and
+    // serves the frozen pre-drift weights w0 until the alarm window
+    // and the retrained w1 from it on (the qs35 refit-cutover pattern
+    // applied to classifier weights, the two-phase replay a real
+    // edge performs after an alarm → retrain → redeploy cycle).
+    // Everything on the stream is STATELESS but the one windowed
+    // per-ingest-window accuracy aggregate (the qst19 histogram
+    // class — state = windows × 2 longs): features/labels ride
     // prepareQuality's byte-identical expressions, both margins are
     // plan-literal folds, and the swap itself is one per-row window
-    // predicate — at 100 TB the cutover costs nothing beyond the
-    // qt49 retrain already priced. MEASURED (the qt49 numbers, now
-    // served): windows 0-2 hold the frozen model's clean accuracy,
-    // window 3 serves w1 at the retrained 0.82/0.78 instead of
-    // collapsing to 0.43/0.59. Oracle = qt49's TWO existing
+    // predicate — at 100 TB retraining costs what qt46 costs (K slim
+    // fixed-point gradient aggregates over the persisted projection)
+    // and the cutover nothing more. MEASURED: windows 0-2 hold the
+    // frozen model's clean accuracy, window 3 serves w1 at the
+    // retrained 0.82/0.78 (sf0.001/sf0.01). The frozen model's own
+    // window-3 accuracy (0.43/0.59 when last measured) is not an
+    // output column, so no oracle checks it. Oracle = TWO qt46
     // unrolled-GD chains (f_ pre-drift, r_ drifted — the SAME
-    // generators) with the eval CASE selecting per window. ----
+    // generator parametrized by the source text expression) with the
+    // eval CASE selecting per window. ----
     QueryDef("qst24_stream_model_swap",
       (s, dir) => {
         val docs = t(s, dir, "documents")
@@ -4672,7 +4353,7 @@ object DataOpsQueries {
               (size(TextOps.tokens(col("text"))) / lit(2)).cast("int"))))
             .otherwise(col("text")).as("text"))
         // the two frozen artifacts of the alarm → retrain cycle
-        // (qt49's fits verbatim; caches released after the eager GD)
+        // (caches released after the eager GD)
         val w0 = inFitGroup("qst24-w0")(trainQualityOn(docs))
         val w1 = inFitGroup("qst24-w1")(trainQualityOn(dressed))
         import s.implicits._
@@ -4683,7 +4364,7 @@ object DataOpsQueries {
           "doc_id LONG, text STRING, ts TIMESTAMP") { sentArm =>
           // 2024-01-01 00:00:00 UTC; ingest hour = doc_id % 4 (the
           // qst19 window device), window-3 arrivals from the changed
-          // source (the qt49 dressing)
+          // source (the drift dressing above)
           val base = 1704067200000000L
           val arr = replayTable(s, dir, "documents")
             .select(col("doc_id"),
@@ -4723,7 +4404,7 @@ object DataOpsQueries {
       },
       Some {
         s"""WITH ${qt46CtesSql("f_")},
-        ${qt46CtesSql("r_", qt49DressedSql)},
+        ${qt46CtesSql("r_", driftDressedSql)},
         ev AS (SELECT d.doc_id % 4 AS win, d.y,
             CASE WHEN d.doc_id % 4 < 3
               THEN (list_reduce(list_transform(d.bs, b -> f_a8.wa[b + 1]), (x, z) -> x + z) / d.n > 0.0)
@@ -4847,11 +4528,12 @@ object DataOpsQueries {
     // — the eval benchmark's distinct 8-gram hashes collected once
     // (benchmark-sized, the qt15 Bloom-bits budget class) and probed
     // locally by the SAME WordNgramHashes.compute kernel the batch
-    // rows codegen; (3) CCNet LM quality — qst17's frozen model + the
+    // rows codegen; (3) CCNet LM quality — the frozen qt43 model
+    // (NgramLm.trainLocal on the %5 slice, scored by scoreLocal) + the
     // NEW frozen artifact a real edge also ships, the per-lang tertile
     // thresholds (tertileThresholds' order statistics), keep =
     // score > t1 with unscorable/unsampled defaulting to false (the
-    // tertileGate contract); (4) trained-classifier margin — qt49's
+    // tertileGate contract); (4) trained-classifier margin — qt46's
     // frozen w through Classifier.marginLocal, the scalar twin of
     // prepareQuality + margin; (5) DSIR — qst21's SAMPLE-frozen ratio
     // LUT + (mn, mx) normalizer through Dsir.scoreLocal, qst21's own
@@ -5024,102 +4706,6 @@ object DataOpsQueries {
         JOIN tmx ON tmx.doc_id = c.doc_id
         ORDER BY c.doc_id""")),
 
-    // ---- DOCUMENT-lake incremental maintenance (ql7): qt31 produces
-    // per-batch verdicts; this row FOLDS them into the stored corpus —
-    // the ql3/ql6 dynamic-overwrite discipline applied to the document
-    // lake. A canonical-URL-keyed lake (hive-partitioned by lang) is
-    // built from the corpus slice's canonical reps; the batch slice
-    // arrives; recrawled keys REFRESH their lake row in place
-    // (last_fetch_id updates, identity + partition residence stay),
-    // new keys APPEND. Only partitions holding refreshed keys are
-    // rewritten (affected discovery = pruned (key, lang) scan x
-    // broadcast batch keys); the row require()s both arms genuinely
-    // trip AND that the incrementally-maintained lake is row-identical
-    // to a from-scratch rebuild under the same policy — maintenance
-    // changes file layout and fetch metadata, never corpus content.
-    // Oracle: the rebuild policy closed-form. ----
-    QueryDef("ql7_doc_lake_maintenance",
-      (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("ql7_doclake")
-        val lake = s"$tmp/docs"
-        try {
-          val lang = t(s, dir, "documents").select(col("doc_id"), col("lang"))
-          // SF-proportional collision classes: a FIXED modulus cannot
-          // trip both arms at every scale (at 10x the docs every batch
-          // class gains a corpus member and appends vanish) — n*18/25
-          // keeps the qt31-calibrated ~1.4 docs/class ratio (exactly
-          // 360 at the 500-doc SFs, 3600 at sf0.1; every
-          // canonicalization-relevant arm divides both)
-          val pathMod = (lang.count() * 18 / 25).toInt
-          val canon = urlsFromDocs(s, dir, pathMod = pathMod)
-            .withColumn("part",
-              TextOps.hashSplit(col("doc_id"), Seq(90), Seq("corpus", "batch")))
-            .join(lang, "doc_id")
-            .select(col("doc_id"), col("part"), col("lang"),
-              graft.text.Urls.canonicalizeUrl(col("url")).as("canonical_url"))
-            // multiple consumers (rep aggregates per slice; qst16 adds
-            // the per-day arrival writes) — persist or the URL-fixture
-            // + canonicalize chain re-derives per consumer (the
-            // qd7/qx4 class)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          // one partial-aggregable pass per slice: min_by recovers the
-          // rep's lang without a join-back (doc_id is unique, so the
-          // min_by tiebreak is moot)
-          def reps(df: DataFrame): DataFrame =
-            df.groupBy(col("canonical_url"))
-              .agg(min(col("doc_id")).as("doc_id"),
-                min_by(col("lang"), col("doc_id")).as("lang"))
-              .select(col("canonical_url"), col("doc_id"), col("lang"),
-                col("doc_id").as("last_fetch_id"))
-          val corpusReps = reps(canon.filter(col("part") === "corpus"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val batchReps = reps(canon.filter(col("part") === "batch"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          corpusReps.repartition(col("lang"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("lang").parquet(lake)
-          val (nRef, nNew) = graft.lake.DocLake.refreshAndAppend(
-            s, lake, batchReps, "canonical_url", "lang",
-            updateCols = Seq("last_fetch_id"))
-          require(nRef > 0 && nNew > 0,
-            s"fixture must trip both arms, got refresh=$nRef append=$nNew")
-          def finalShape(df: DataFrame): DataFrame = df
-            .select(col("canonical_url"), col("doc_id"), col("lang"),
-              col("last_fetch_id"),
-              (col("last_fetch_id") =!= col("doc_id")).as("refreshed"))
-            .orderBy(col("canonical_url"))
-          val stored = finalShape(s.read.parquet(lake)).collect()
-          // rebuilt-from-scratch under the same policy must be
-          // row-identical to the incrementally maintained lake
-          val rebuilt = finalShape(corpusReps
-            .join(batchReps.select(col("canonical_url"),
-              col("doc_id").as("__b_id")), Seq("canonical_url"), "left")
-            .select(col("canonical_url"), col("doc_id"), col("lang"),
-              coalesce(col("__b_id"), col("doc_id")).as("last_fetch_id"))
-            .unionByName(batchReps.join(
-              corpusReps.select(col("canonical_url")),
-              Seq("canonical_url"), "left_anti"))).collect()
-          require(stored.toSeq == rebuilt.toSeq,
-            "incremental maintenance must equal the from-scratch rebuild")
-          corpusReps.unpersist()
-          batchReps.unpersist()
-          import scala.jdk.CollectionConverters._
-          import org.apache.spark.sql.types._
-          val schema = StructType(Seq(
-            StructField("canonical_url", StringType),
-            StructField("doc_id", LongType),
-            StructField("lang", StringType),
-            StructField("last_fetch_id", LongType),
-            StructField("refreshed", BooleanType)))
-          s.createDataFrame(stored.toSeq.asJava, schema)
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-      },
-      Some(docLakeMaintOracleSql)),
-
     // ---- Split-leakage audit (qt36): the measurement that justifies
     // DOMAIN-keyed eval splits. A doc-hash split strands pages of one
     // site on both sides of the train/eval fence (an eval page's
@@ -5259,9 +4845,9 @@ object DataOpsQueries {
               s"shard ${r.getAs[Int]("shard")} rid range not contiguous")
           }
           // the lake dir dies with this body — materialize the
-          // result off it before cleanup (corpus-row-sized, the ql7
-          // sink-hygiene convention; a real deployment keeps the lake
-          // and never runs this collect)
+          // result off it before cleanup (corpus-row-sized, the
+          // temp-lake sink-hygiene convention; a real deployment keeps
+          // the lake and never runs this collect)
           val rows = back.join(broadcast(bounds.select(col("shard"),
               col("rid0"), col("shard_n_docs_l"), col("shard_n_chars"))),
               "shard")
@@ -5401,139 +4987,24 @@ object DataOpsQueries {
           string_agg(CAST(id AS VARCHAR), ' ' ORDER BY pos) AS seq_str
         FROM tid GROUP BY shard, bin ORDER BY shard, bin""")),
 
-    // ---- Packed-lake APPEND maintenance (ql10): how the ql9 artifact
-    // grows in production. Training files are immutable once a run
-    // reads them — continuing a shard's tail bin would REWRITE
-    // yesterday's files — so a day's batch lands as a NEW SEGMENT:
-    // each (shard, segment) is its own independently-packed stream
-    // (loader concatenation restarts per segment, standard
-    // sharded-dataset practice; the price is one ragged tail bin per
-    // segment per shard, bounded by S x segments x L tokens). The
-    // append is PROVEN append-only: segment-0's files are snapshotted
-    // (path, size, mtime) before the batch lands and required
-    // byte-untouched after — the ql7 untouched-partition discipline
-    // on the trainer lake. Conservation and chop-exactness per stream
-    // are ql9's operator-level pins; the oracle here pins the full id
-    // sequence of every bin in BOTH segments. ----
-    QueryDef("ql10_packed_lake_append",
-      (s, dir) => {
-        val L = 256
-        val nShards = 8
-        val tmp = java.nio.file.Files.createTempDirectory("ql10_packlake")
-        val lake = s"$tmp/packed"
-        import scala.jdk.CollectionConverters._
-        def parquetFiles(): Map[String, (Long, Long)] = {
-          val root = java.nio.file.Paths.get(lake)
-          if (!java.nio.file.Files.exists(root)) Map.empty
-          else java.nio.file.Files.walk(root).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(p => p.toString -> ((java.nio.file.Files.size(p),
-              java.nio.file.Files.getLastModifiedTime(p).toMillis)))
-            .toMap
-        }
-        try {
-          val all = graft.ops.Partitioning.spread(t(s, dir, "documents"))
-            .withColumn("part", TextOps.hashSplit(col("doc_id"), Seq(90),
-              Seq("corpus", "batch")))
-          def pack(part: String, seg: Int) =
-            graft.text.Pack.packSequences(all.filter(col("part") === part),
-                "doc_id",
-                graft.functions.BpeEncode.bpe_token_ids(col("text")),
-                binTokens = L, shards = nShards)
-              .withColumn("segment", lit(seg))
-              .repartition(nShards, col("shard"))
-              .sortWithinPartitions(col("shard"), col("bin"))
-          // day 0: the corpus segment
-          pack("corpus", 0).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("shard", "segment").parquet(lake)
-          val before = parquetFiles()
-          // day 1: the batch appends as a NEW segment — no existing
-          // dir is opened for write
-          pack("batch", 1).write
-            .mode(org.apache.spark.sql.SaveMode.Append)
-            .partitionBy("shard", "segment").parquet(lake)
-          val after = parquetFiles()
-          require(before.forall { case (p, sm) => after.get(p).contains(sm) },
-            "append touched a prior segment's files")
-          // one file per (shard, segment) leaf — each write call holds
-          // one segment, repartitioned to one task per shard
-          val leafCounts = after.keys.toSeq
-            .groupBy(p => p.substring(lake.length, p.lastIndexOf('/')))
-            .map { case (leaf, fs) => leaf -> fs.size }
-          require(leafCounts.nonEmpty && leafCounts.values.forall(_ == 1),
-            s"want one file per (shard, segment) dir, got $leafCounts")
-          val back = s.read.parquet(lake)
-          // every non-tail bin of each (shard, segment) stream is full
-          val segMax = back.groupBy(col("shard"), col("segment"))
-            .agg(max(col("bin")).as("max_bin"))
-          val ragged = back.join(segMax, Seq("shard", "segment"))
-            .filter(col("bin") =!= col("max_bin") && col("n_tok") =!= L)
-            .count()
-          require(ragged == 0L,
-            s"$ragged interior bins not exactly $L tokens")
-          val rows = back
-            .select(col("shard"), col("segment"), col("bin"), col("n_docs"),
-              col("n_tok"),
-              array_join(transform(col("ids"), i => i.cast("string")), " ")
-                .as("seq_str"))
-            .orderBy(col("shard"), col("segment"), col("bin"))
-            .collect()
-          import org.apache.spark.sql.types._
-          s.createDataFrame(rows.toSeq.asJava, StructType(Seq(
-            StructField("shard", IntegerType),
-            StructField("segment", IntegerType),
-            StructField("bin", LongType),
-            StructField("n_docs", IntegerType),
-            StructField("n_tok", IntegerType),
-            StructField("seq_str", StringType))))
-        } finally {
-          java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-      },
-      Some(s"""WITH RECURSIVE $bpeCteSql,
-        $bpeVocabCteSql,
-        tl AS (SELECT doc_id, string_split(trim(bpe_s, '|'), '||') AS toks,
-            ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-            CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 90
-              THEN 0 ELSE 1 END AS seg
-          FROM bpe WHERE bpe_s <> ''),
-        shp AS (SELECT doc_id, toks, h, seg, CAST(h % 8 AS INT) AS shard,
-            CAST(len(toks) AS BIGINT) AS n_tok FROM tl),
-        cum AS (SELECT *, SUM(n_tok) OVER (PARTITION BY shard, seg
-            ORDER BY h, doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok AS strt
-          FROM shp),
-        tok AS (SELECT shard, seg, doc_id, strt + i - 1 AS pos, toks[i] AS tk
-          FROM (SELECT shard, seg, doc_id, strt, toks,
-              unnest(generate_series(1, CAST(len(toks) AS BIGINT))) AS i
-            FROM cum) q),
-        tid AS (SELECT shard, seg, doc_id, pos,
-            COALESCE(bpev.id, unicode(tk)) AS id,
-            CAST(pos // 256 AS BIGINT) AS bin
-          FROM tok LEFT JOIN bpev ON bpev.tok = tok.tk)
-        SELECT shard, CAST(seg AS INT) AS segment, bin,
-          CAST(COUNT(DISTINCT doc_id) AS INT) AS n_docs,
-          CAST(COUNT(*) AS INT) AS n_tok,
-          string_agg(CAST(id AS VARCHAR), ' ' ORDER BY pos) AS seq_str
-        FROM tid GROUP BY shard, seg, bin
-        ORDER BY shard, segment, bin""")),
-
-    // ---- STREAMED packed-lake maintenance (qst15): ql10 as the
-    // continuous process it is in production — document arrivals
-    // land on a file stream, and EACH MICRO-BATCH packs as one
-    // immutable segment appended to the trainer lake from inside
-    // foreachBatch (segment = batch id; the stream itself is
-    // stateless — all packing runs on the batch DataFrame, so the
-    // per-shard cumulative window is per-batch-bounded, never
-    // unbounded streaming state). Arrival files are written
-    // deterministically (day 0 = the corpus slice, day 1 = the batch
+    // ---- STREAMED packed-lake APPEND maintenance (qst15): how the
+    // ql9 artifact grows in production. Training files are immutable
+    // once a run reads them (continuing a shard's tail bin would
+    // REWRITE yesterday's files), so each arrival lands as a NEW
+    // SEGMENT: each (shard, segment) is its own independently-packed
+    // stream (loader concatenation restarts per segment; the price is
+    // one ragged tail bin per segment per shard). EACH MICRO-BATCH of
+    // the arrival file stream packs as one segment appended from
+    // foreachBatch (segment = batch id; all packing runs on the batch
+    // DataFrame, so the stream holds no state). Arrival files are
+    // deterministic (day 0 = the corpus slice, day 1 = the batch
     // slice; maxFilesPerTrigger=1 makes file = micro-batch = segment),
-    // so the resulting lake is BIT-IDENTICAL to ql10's batch-built
-    // lake — the oracle IS ql10's SQL, pinning stream ≡ batch on the
-    // stored trainer artifact itself (the qst-family convention
-    // extended to the last pipeline stage). ----
+    // so the lake is BIT-IDENTICAL to the batch-built two-segment lake
+    // and the oracle, the batch packing SQL over both segments, pins
+    // every bin's full id sequence. An oracle cannot see a rewrite
+    // that keeps content, so in-engine each append must leave the
+    // lake's prior files' (path, size, mtime) untouched, and the
+    // finished lake must hold one file per (shard, segment) leaf. ----
     QueryDef("qst15_stream_packed_lake",
       (s, dir) => {
         val L = 256
@@ -5546,6 +5017,12 @@ object DataOpsQueries {
         def cleanup(p: java.nio.file.Path): Unit =
           java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
             .foreach(f => java.nio.file.Files.deleteIfExists(f))
+        def parquetFiles(): Map[String, (Long, Long)] =
+          if (!new java.io.File(lake).exists) Map.empty
+          else java.nio.file.Files.walk(java.nio.file.Paths.get(lake))
+            .iterator().asScala.map(_.toFile)
+            .filter(_.getName.endsWith(".parquet"))
+            .map(f => f.getPath -> ((f.length, f.lastModified))).toMap
         try {
           val all = t(s, dir, "documents")
             .withColumn("part", TextOps.hashSplit(col("doc_id"), Seq(90),
@@ -5570,6 +5047,7 @@ object DataOpsQueries {
               .parquet(arrivals.toString)
               .writeStream
               .foreachBatch { (batch: DataFrame, bid: Long) =>
+                val before = parquetFiles()
                 graft.text.Pack.packSequences(
                     graft.ops.Partitioning.spread(batch), "doc_id",
                     graft.functions.BpeEncode.bpe_token_ids(col("text")),
@@ -5579,6 +5057,10 @@ object DataOpsQueries {
                   .sortWithinPartitions(col("shard"), col("bin"))
                   .write.mode(org.apache.spark.sql.SaveMode.Append)
                   .partitionBy("shard", "segment").parquet(lake)
+                val after = parquetFiles()
+                require(
+                  before.forall { case (p, sm) => after.get(p).contains(sm) },
+                  s"segment $bid's append touched a prior segment's files")
                 ()
               }
               .option("checkpointLocation", ckpt.toString)
@@ -5586,6 +5068,13 @@ object DataOpsQueries {
               .start()
           } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
           q.awaitTermination()
+          // one file per (shard, segment) leaf — each micro-batch holds
+          // one segment, repartitioned to one task per shard
+          val leafCounts = parquetFiles().keys.toSeq
+            .groupBy(p => p.substring(lake.length, p.lastIndexOf('/')))
+            .map { case (leaf, fs) => leaf -> fs.size }
+          require(leafCounts.nonEmpty && leafCounts.values.forall(_ == 1),
+            s"want one file per (shard, segment) dir, got $leafCounts")
           val back = s.read.parquet(lake)
           // the stored artifact honors the loader contract per stream
           val segMax = back.groupBy(col("shard"), col("segment"))
@@ -5614,9 +5103,8 @@ object DataOpsQueries {
           cleanup(tmp); cleanup(arrivals); cleanup(ckpt)
         }
       },
-      // stream ≡ batch: ql10's oracle verbatim — the lake a
-      // micro-batched stream builds must be the lake the batch
-      // composite builds
+      // stream ≡ batch: the lake a micro-batched stream builds must
+      // be the lake the batch packing builds, segment by segment
       Some(s"""WITH RECURSIVE $bpeCteSql,
         $bpeVocabCteSql,
         tl AS (SELECT doc_id, string_split(trim(bpe_s, '|'), '||') AS toks,
@@ -5645,9 +5133,16 @@ object DataOpsQueries {
         FROM tid GROUP BY shard, seg, bin
         ORDER BY shard, segment, bin""")),
 
-    // ---- STREAMED document-lake maintenance (qst16): ql7's
-    // refreshAndAppend driven from a crawl stream — a crawl IS a
-    // stream, and the maintenance fold is its natural sink. Arrival
+    // ---- STREAMED document-lake maintenance (qst16): qt31's
+    // per-batch verdicts FOLDED into the stored corpus — the ql3/ql6
+    // dynamic-overwrite discipline applied to the document lake. A
+    // canonical-URL-keyed lake (hive-partitioned by lang) holds the
+    // corpus slice's canonical reps; recrawled keys REFRESH their lake
+    // row in place (last_fetch_id updates, identity + partition
+    // residence stay), new keys APPEND, and only partitions holding
+    // refreshed keys are rewritten (DocLake.refreshAndAppend). It runs
+    // driven from a crawl stream — a crawl IS a stream, and the
+    // maintenance fold is its natural sink. Arrival
     // files are KEYED per day (canonical_url hash parity), the shape a
     // real crawler produces (a day's fetch list, each url fetched once
     // that day) and the condition under which streamed maintenance is
@@ -5655,8 +5150,9 @@ object DataOpsQueries {
     // micro-batch, so per-day reps = whole-batch reps restricted to
     // that day and the final lake state is policy-determined.
     // foreachBatch → DocLake.refreshAndAppend per micro-batch; both
-    // arms required to trip across the stream; oracle = ql7's SQL
-    // VERBATIM (the ql10 → qst15 stored-artifact pattern). ----
+    // arms required to trip across the stream; oracle = the rebuild
+    // policy closed-form over the whole batch slice (the qst15
+    // stored-artifact pattern). ----
     QueryDef("qst16_stream_doc_lake",
       (s, dir) => {
         val tmp = java.nio.file.Files.createTempDirectory("qst16_doclake")
@@ -5676,10 +5172,10 @@ object DataOpsQueries {
             .join(lang, "doc_id")
             .select(col("doc_id"), col("part"), col("lang"),
               graft.text.Urls.canonicalizeUrl(col("url")).as("canonical_url"))
-            // multiple consumers (rep aggregates per slice; qst16 adds
-            // the per-day arrival writes) — persist or the URL-fixture
-            // + canonicalize chain re-derives per consumer (the
-            // qd7/qx4 class)
+            // multiple consumers (the per-slice rep aggregates and the
+            // per-day arrival writes) — persist or the URL-fixture +
+            // canonicalize chain re-derives per consumer (the qd7/qx4
+            // class)
             .persist(StorageLevel.MEMORY_AND_DISK)
           def reps(df: DataFrame): DataFrame =
             df.groupBy(col("canonical_url"))
@@ -5866,89 +5362,12 @@ object DataOpsQueries {
         JOIN sc ON sc.doc_id = b.doc_id
         ORDER BY b.doc_id""")),
 
-    // ---- FULL release verdict (qx11): the content half (qx4 —
-    // boilerplate-clean -> exact dedup -> n-gram decontamination) AND
-    // the provenance half (qx10 — canonical URL -> URL dedup ->
-    // blocklist -> per-domain cap -> quality floor) conjoined per doc
-    // in ONE lazy plan: keep = content_keep AND provenance_keep. A
-    // release pipeline runs BOTH families — a page can be clean text
-    // from a capped-out domain, or a blocklist survivor that is a
-    // near-verbatim eval leak — and the verdicts are independent
-    // subtrees joined doc-keyed, so neither side's aggregates see the
-    // other's corpus-sized intermediates. Every arm trips at sf0.01:
-    // 451 content keeps ∧ 57 provenance keeps → 44 releases (the
-    // conjunction genuinely rejects 13 provenance survivors). ----
-    QueryDef("qx11_full_release",
-      (s, dir) => {
-        val (content, prov) = releaseHalves(s, dir)
-        content.join(prov, "doc_id")
-          .select(col("doc_id"), col("content_keep"), col("provenance_keep"),
-            (col("content_keep") && col("provenance_keep")).as("keep"))
-          .orderBy(col("doc_id"))
-      },
-      Some(s"""WITH $releaseVerdictCtes
-        SELECT content.doc_id, content_keep, provenance_keep,
-          (content_keep AND provenance_keep) AS keep
-        FROM content JOIN prov ON prov.doc_id = content.doc_id
-        ORDER BY content.doc_id""")),
-
-    // ---- Release verdict WITH the quality gate (qx13): qx11's
-    // content ∧ provenance conjunction composed with qt44's CCNet
-    // head/middle/tail LM gate — keep = content_keep ∧
-    // provenance_keep ∧ quality_keep, where quality_keep is
-    // tertileGate's "not tail" bit over the Stupid Backoff LM score
-    // (trained on the doc_id % 5 target slice, qt43). A page can be
-    // clean, canonical, in-cap text that the LM still reads as
-    // gibberish — CCNet's gate belongs in the shipping verdict the
-    // same way qt20/qt21 sit in qx5. Docs the scorer drops (empty
-    // after normalization / unmodeled language) default to
-    // quality_keep = false — unscorable is unpublishable. All three
-    // arms genuinely trip at both SFs (sf0.01: 13 docs rejected
-    // ONLY by quality among content∧provenance keeps, 10 only by
-    // content, 280 only by provenance; 31 releases — sf0.001:
-    // 9/6/284, 33 releases). The three verdict subtrees stay
-    // independent until the final doc-keyed joins: the LM's
-    // broadcast-gram scoring never sees the URL table, the PSL walk
-    // never sees gram hashes — at 100 TB each half scales on its own
-    // already-audited plan (qx11, qt43/qt44) and the composition
-    // adds two slim hash joins.
-    QueryDef("qx13_release_with_quality",
-      (s, dir) => {
-        val (content, prov) = releaseHalves(s, dir)
-        val docs = lmDocs(s, dir)
-        val model = graft.text.NgramLm.train(
-          docs.filter(col("doc_id") % 5 === 0), "text2", "lang")
-        // scores feed tertileGate twice (threshold sample + final
-        // join) — persist, the qx10/qd7 rule
-        val scores = graft.text.NgramLm.score(
-            docs, "doc_id", "text2", "lang", model)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val quality = graft.text.NgramLm.tertileGate(scores)
-          .select(col("doc_id"), col("keep").as("quality_keep"))
-        content.join(prov, "doc_id")
-          .join(quality, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("content_keep"), col("provenance_keep"),
-            coalesce(col("quality_keep"), lit(false)).as("quality_keep"),
-            (col("content_keep") && col("provenance_keep") &&
-              coalesce(col("quality_keep"), lit(false))).as("keep"))
-          .orderBy(col("doc_id"))
-      },
-      Some(s"""WITH $releaseVerdictCtes,
-        $lmQualityCtes
-        SELECT content.doc_id, content_keep, provenance_keep,
-          COALESCE(qual.quality_keep, FALSE) AS quality_keep,
-          (content_keep AND provenance_keep
-            AND COALESCE(qual.quality_keep, FALSE)) AS keep
-        FROM content JOIN prov ON prov.doc_id = content.doc_id
-        LEFT JOIN qual ON qual.doc_id = content.doc_id
-        ORDER BY content.doc_id""")),
-
     // ---- The FULL curation release (qx14): the published pipeline
     // (body and oracle CTEs shared with qx15, which MATERIALIZES this
     // verdict as the shard-lake artifact — see curationRelease /
     // curationCtesSql)
     // ordering — quality ∧ resample ∧ mixture ∧ decontaminate — in ONE
-    // oracled verdict. qx13's three arms (content, provenance, CCNet
+    // oracled verdict. Three release arms (content, provenance, CCNet
     // LM gate) conjoined with the round-17 curation stack: the TRAINED
     // quality classifier (qt46's 8-step GD weights, keep = margin > 0),
     // DSIR importance resampling (qt47's salted draw against the
@@ -5966,7 +5385,7 @@ object DataOpsQueries {
     // five hash joins on (doc_id, boolean) projections, so at 100 TB
     // the composite scales exactly as its pieces do. Oracle = the
     // proven CTE families chained verbatim: the release prefix and LM
-    // segment shared with qx11/qx13, and the qt46/qt47/qt48 chains
+    // segment shared with qx15/qx17, and the qt46/qt47/qt48 chains
     // embedded under qc_/ds_/tm_ prefixes (their standalone oracles
     // are the SAME generator at prefix ""). ----
     QueryDef("qx14_curation_release",
@@ -6075,53 +5494,28 @@ object DataOpsQueries {
           lang, text_md5
         FROM prm ORDER BY doc_id""")),
 
-    // ---- Release lineage/diff (qx16): the operational "why did
-    // doc X fall out of the release". Release N-1 = the six-gate
-    // curation verdict (qx14's chain VERBATIM — shared generator)
-    // over the corpus BEFORE the new crawl (doc_id % 3 == 1 is the
-    // crawl's new slice — the residue chosen because, uniquely among
-    // the probed classes, it makes EVERY gate flip at both gate SFs,
-    // content included: a new doc steals an exact-dup canonical); release N = the verdict over the full
-    // corpus, every model REFIT on it as a real re-release does.
-    // The diff emits per-doc status (new_admitted / new_rejected /
-    // kept / dropped / regained / rejected) plus per-gate flip
-    // attribution for docs present in both releases — gates flip
-    // because refits move thresholds/weights (lm/clf/dsir), the new
-    // crawl steals exact-dup canonicals (MIN doc_id) and domain-cap
-    // slots (content/provenance), and mixture targets rescale with
-    // per-lang counts (mix). Oracle = the proven curation CTE chain
-    // run TWICE — the old arm scopes it to the pre-crawl corpus by
-    // shadowing `documents` with a filtered CTE (main.documents
-    // disambiguates the base table) — then diffed; the verdict
-    // SELECT is the shared curationVerdictSelectSql, so the arms
-    // cannot desynchronize from qx14. At 100 TB: two verdict chains
-    // (each linear, its fits in sequence) + ONE doc_id equi-join — the
-    // diff itself adds no new shuffle class; in production the N-1
-    // verdict is the stored qx15 artifact, making this N's cost
-    // plus one join. ----
-    QueryDef("qx16_release_lineage",
-      (s, dir) => {
-        val vOld = curationRelease(s, dir, col("doc_id") % 3 =!= 1,
-          fitTag = "qx16-old", sorted = false)
-        val vNew = curationRelease(s, dir, fitTag = "qx16-new",
-          sorted = false)
-        lineageDiff(vNew, vOld)
-      },
-      Some(lineageOracleSql)),
-
-    // ---- Lineage from the STORED manifest (qx17): qx16 diffs two
-    // in-memory verdict arms; production diffs against the ARTIFACT —
-    // release N-1's verdict manifest (doc_id -> six gate flags +
-    // keep, the release's provenance record) persisted at ship time.
-    // This row closes that claim->demo gap the qx15 way: the N-1 arm
+    // ---- Release lineage from the STORED manifest (qx17): the
+    // operational "why did doc X fall out of the release". Release
+    // N-1 = the six-gate curation verdict (qx14's chain VERBATIM —
+    // shared generator) over the corpus BEFORE the new crawl
+    // (doc_id % 3 == 1 is the crawl's new slice — the residue that
+    // makes EVERY gate flip at both gate SFs, content included: a new
+    // doc steals an exact-dup canonical); release N = the verdict
+    // over the full corpus, every model REFIT on it as a real
+    // re-release does. The diff emits per-doc status (new_admitted /
+    // new_rejected / kept / dropped / regained / rejected) plus
+    // per-gate flip attribution for docs present in both releases.
+    // Production diffs against the ARTIFACT — release N-1's verdict
+    // manifest (doc_id -> six gate flags + keep, the release's
+    // provenance record) persisted at ship time — so the N-1 arm
     // is WRITTEN as a parquet manifest lake, read BACK with an
     // explicit schema, row-count-require'd, and the diff consumes the
-    // READ-BACK rows — so the oracle (qx16's verbatim) only matches
-    // if every flag survived the round trip. At 100 TB the manifest
+    // READ-BACK rows — so the oracle (the curation chain run twice,
+    // then diffed) only matches if every flag survived the round
+    // trip. At 100 TB the manifest
     // is corpus-cardinality but ~10 bytes/doc wide, and diffing
     // release N against it costs N's verdict chain + ONE doc_id
-    // equi-join against a narrow parquet scan — the two-chain qx16
-    // shape is only the bootstrap case (no stored manifest yet). ----
+    // equi-join against a narrow parquet scan. ----
     QueryDef("qx17_lineage_from_artifact",
       (s, dir) => {
         val tmp = java.nio.file.Files.createTempDirectory("qx17_manifest")

@@ -204,7 +204,7 @@ object Ivf {
   }
 
   /** [[topKAdcOnIndex]] over a RETRACTION set — the deletion story the
-    * append-only incremental index (qs27) leaves open: when released
+    * append-only incremental index (qs35's frozen arm) leaves open: when released
     * docs are later retracted (the qx6→qx7 lifecycle makes this
     * reachable), serving must never return them, and a 100 TB index is
     * not re-built to forget 0.1% of its rows. The tombstone table

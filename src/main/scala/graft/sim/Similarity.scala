@@ -49,7 +49,7 @@ object Similarity {
     * kernel). The fold order (ascending index, 0.0 seed) matches the
     * [[cosine]] column form and the DuckDB list_reduce oracle
     * bit-for-bit. Broadcasting the corpus bounds this to small/medium
-    * corpora — the 100 TB path is [[lshTopK]]-style bucketing.
+    * corpora — the 100 TB path is [[lshNearDupPairs]]' bucketing.
     */
   def brutePairs(corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
@@ -238,25 +238,6 @@ object Similarity {
         coalesce(col("m.c") >= lit(threshold), lit(false)).as("contaminated"))
   }
 
-  /** ANN top-k via one LSH table: candidates share the bucket key, then
-    * exact cosine rank within candidates. Trades recall for avoiding the
-    * full cross join — the 100 TB path.
-    */
-  def lshTopK(
-      corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-      k: Int, planes: Int = 8): DataFrame = {
-    val cb = spread(corpus).withColumn("bucket", lshBucketPacked(vecCol, planes))
-    val qb = queries.withColumn("qbucket", lshBucketPacked(qVecCol, planes))
-    val scored = cb.join(broadcast(qb),
-        col("bucket") === col("qbucket") && col(idCol) =!= col(qIdCol))
-      .select(col(qIdCol), col(idCol).as("neighbor_id"),
-        cosine(col(vecCol), col(qVecCol)).as("cosine"))
-    val w = Window.partitionBy(col(qIdCol))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** Packed sign-bit bucket: bit p set iff the projection onto plane p is
     * positive. The hyperplanes are deterministic ±1 weights derived from
     * md5 parity of "p:i" — no RNG state, any engine derives the same
@@ -330,7 +311,8 @@ object Similarity {
     * roughly as 1-(1-p^planes)^tables while each table's bucket join
     * stays an equi-join. Candidates are deduped per (query, neighbor)
     * before exact scoring, so a pair colliding in several tables is
-    * scored once.
+    * scored once. `tables = 1` is the single-table form: the bucket key
+    * is the packed bucket itself and the dedup never drops a row.
     *
     * Cache lifecycle: caller-owned, exactly as [[lshNearDupPairs]]
     * documents — clear or unpersist after consuming the result.
@@ -368,7 +350,7 @@ object Similarity {
 
   /** Recall@k of an ANN result against the exact ranking — the one
     * number a user tuning planes/tables/nprobe needs. Both inputs are
-    * rank tables shaped like [[bruteTopK]]/[[lshTopK]] output
+    * rank tables shaped like [[bruteTopK]]/[[lshTopKMulti]] output
     * (query_id, neighbor_id, rank); only rows with rank <= k count.
     * Returns one row per query in `exact`: (query_id, n_hit, n_exact,
     * recall) with recall = n_hit / n_exact, 0 for queries the ANN arm

@@ -162,7 +162,7 @@ object Dsir {
   /** Stateless STREAM-EDGE twin of the column scorer: verdict one
     * arriving document against a FROZEN model — the ratio LUT plus
     * the min/max normalizers, all fit in batch on the stored corpus
-    * and broadcast (the qst17/ADC frozen-LUT class). Returns
+    * and broadcast (the qst21/ADC frozen-LUT class). Returns
     * (is_target, n_grams, weight, keep).
     *
     * MIRROR CONTRACT (the qst streaming≡batch pin): every step

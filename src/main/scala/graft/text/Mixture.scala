@@ -89,7 +89,7 @@ object Mixture {
     * target_n), one row per stratum — [[temperatureMixtureKeep]]'s
     * model-fit half, exposed so the crawl-edge stream twin can fit it
     * once in batch and verdict arrivals against the FROZEN table (the
-    * qst17/qst18 frozen-model class). Every op mirrors the oracle:
+    * qst21/qst23 frozen-model class). Every op mirrors the oracle:
     * Math.sqrt is correctly rounded, the numerator sum an exact long,
     * min over doubles order-independent, and the LEAST clamp the same
     * floor/min pair.

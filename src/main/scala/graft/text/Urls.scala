@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * array HOFs) — no UDF; the only joins are KB-sized public-suffix
   * broadcast lookups — and every rule (plus the bundled PSL resource
   * itself) is mirrored exactly by the DuckDB oracles (qt26-qt31,
-  * qx10/qx11, ql7), so the canonical key is engine-portable the way
+  * qx10, qx14, qst16), so the canonical key is engine-portable the way
   * every other fingerprint in this repo is. Domain extraction comes
   * in three forms, weakest to strongest: [[registrableDomain]] (pure
   * label arithmetic, list-free), [[registrableDomains]] (the 2-label
@@ -326,7 +326,7 @@ object Urls {
     * join-back each re-execute the upstream plan. The two-pass shape
     * is the honest price of an exact cap without a hot-domain sort;
     * when `docs` is anything more expensive than a pruned scan
-    * (qx10/qx11 feed it an already-reduced canonical-rep projection),
+    * (qx10 and qx14 feed it an already-reduced canonical-rep projection),
     * persist it first or pay the upstream twice. See SCALING.md
     * "two-pass operators".
     */

@@ -58,8 +58,8 @@ class PlanGuardSpec extends SparkTestBase {
         docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0), "text", "doc_id",
         maxBucket = 8),
-      "lshTopK" -> Similarity.lshTopK(emb, queries, "vec_id", "embedding",
-        "query_id", "qe", k = 3, planes = 4),
+      "lshTopKOneTable" -> Similarity.lshTopKMulti(emb, queries, "vec_id",
+        "embedding", "query_id", "qe", k = 3, planes = 4, tables = 1),
       "lshTopKMulti" -> Similarity.lshTopKMulti(emb, queries, "vec_id",
         "embedding", "query_id", "qe", k = 3, planes = 4, tables = 2),
       "lshNearDupPairs" -> Similarity.lshNearDupPairs(emb, "vec_id",

@@ -64,25 +64,9 @@ class SparkEntrySpec extends AnyFunSuite {
       s"no oracle: ${SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}")
   }
 
-  test("bench retirement only names real queries and shrinks the bench " +
-      "set exactly — a typo'd name would silently retire nothing") {
-    assert(SparkEntry.benchRetired.subsetOf(SparkEntry.queries.keySet),
-      s"unknown: ${SparkEntry.benchRetired -- SparkEntry.queries.keySet}")
-    assert(SparkEntry.benchQueries.size ==
-      SparkEntry.queries.size - SparkEntry.benchRetired.size)
-    // every retired row keeps its correctness gate: it must still be
-    // oracled (or at minimum registered) in the Verify surface
-    assert(SparkEntry.benchRetired.subsetOf(SparkEntry.oracleSql.keySet))
-  }
-
-  test("every retired row's containing superior is registered and still " +
-      "BENCHED — a retired superior would orphan the containment claim") {
-    SparkEntry.benchRetiredInto.foreach { case (retired, superior) =>
-      assert(SparkEntry.queries.contains(superior),
-        s"$retired names unknown superior $superior")
-      assert(!SparkEntry.benchRetired(superior),
-        s"$retired's superior $superior is itself retired - the bench " +
-          "no longer measures the chain that justified the retirement")
-    }
+  test("every Explain default names a registered query — a deleted " +
+      "row left in the list would throw at its lookup") {
+    val unknown = Explain.defaultQueries.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"unknown: ${unknown.mkString(", ")}")
   }
 }

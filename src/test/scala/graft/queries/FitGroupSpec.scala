@@ -35,17 +35,18 @@ class FitGroupSpec extends SparkTestBase {
     assert(sc.getLocalProperty("spark.jobGroup.id") == null)
   }
 
-  test("a composite's fits are attributed per arm: qx16's old and new " +
+  test("a composite's fits are attributed per arm: qx17's old and new " +
       "arms each own their clf, dsir and mix fit groups") {
     val sc = spark.sparkContext
     assert(sc.getLocalProperty("spark.jobGroup.id") == null)
-    SparkEntry.queries("qx16_release_lineage")(spark, "/root/testdata/sf0.001")
+    SparkEntry.queries("qx17_lineage_from_artifact")(spark,
+      "/root/testdata/sf0.001")
     try {
       // the caller's thread carries no group after the eager fits
       assert(sc.getLocalProperty("spark.jobGroup.id") == null)
       // job-start events reach the status tracker asynchronously
       val groups = for (arm <- Seq("old", "new");
-          fit <- Seq("clf", "dsir", "mix")) yield s"graft-fit-qx16-$arm-$fit"
+          fit <- Seq("clf", "dsir", "mix")) yield s"graft-fit-qx17-$arm-$fit"
       eventually(timeout(30.seconds), interval(200.millis)) {
         val empty = groups.filter(g => sc.statusTracker.getJobIdsForGroup(g).isEmpty)
         assert(empty.isEmpty, s"fit groups that own no job: $empty")

@@ -18,8 +18,9 @@ class SimilaritySpec extends SparkTestBase {
   test("multi-table LSH recall dominates single-table") {
     val brute = pairs(Similarity.bruteTopK(
       e, q, "vec_id", "embedding", "query_id", "qe", k = 5))
-    val single = pairs(Similarity.lshTopK(
-      e, q, "vec_id", "embedding", "query_id", "qe", k = 5, planes = 6))
+    val single = pairs(Similarity.lshTopKMulti(
+      e, q, "vec_id", "embedding", "query_id", "qe", k = 5, planes = 6,
+      tables = 1))
     // these embeddings are weakly correlated (top cosines ~0.3), so the
     // per-plane agreement p is near 0.5 — recall needs shorter codes and
     // more tables: ~1-(1-p^4)^8
